@@ -137,13 +137,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(4)
+    val spark = GraftSession.local(cpus)
     installProbe(spark)
     // JVM/session warmup so the first measured query doesn't absorb startup:
     // exercise the operators every query touches (parquet scan, shuffle agg,
@@ -175,7 +170,7 @@ object Bench {
     // BOTH samples: a transient host spike re-runs clean (environment); a
     // plan regression re-runs slow (real). The record then adjudicates the
     // round-9 class of anomaly (51× wall, identical shuffle) by itself.
-    val rerunSet = outliers(swept, cpus.toInt).map(_.name).toSet
+    val rerunSet = outliers(swept, cpus).map(_.name).toSet
     val results = swept.map { r =>
       if (rerunSet.contains(r.name))
         r.copy(rerunSec = Some(runOne(spark, sfDir, r.name, selected(r.name)).sec))
@@ -191,6 +186,8 @@ object Bench {
     try spark.range(2000000000L).selectExpr("sum(id)").collect()
     catch { case _: Throwable => () }
     val calibSec = (System.nanoTime() - ct0) / 1e9
+    // the task-end events behind the cpu counter arrive asynchronously
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     val calibCpuSec = (snapshot()(2) - cs0(2)) / 1000.0
     // keep the line SHORT: the driver records a bounded tail of this
     // process's output, and an over-long line truncates into an unparseable

@@ -70,15 +70,8 @@ object BenchScale {
     * never the degenerate all-alike corpus whose pair output is itself
     * quadratic. Pure column arithmetic, no joins/UDFs. */
   def syntheticDocs(spark: SparkSession, nDocs: Long): DataFrame = {
-    // SPARK_GRAFT_SCALE_VOCAB (default 500 — every historical decade):
-    // scales the drawn vocabulary so type tables KEEP growing with the
-    // corpus. The standing kn decade law partly rides the 500-word
-    // trigram space saturating (§2.9.16: type growth 1.17–1.29× per
-    // half-decade at the top decades); a vocab-scaled point separates
-    // saturation from amortized fixed cost — the distinction a 100 TB
-    // corpus (which does NOT saturate) depends on. Non-default values
-    // are for one-off probes; ladder records note the vocab when ≠ 500.
-    val vocab = sys.env.getOrElse("SPARK_GRAFT_SCALE_VOCAB", "500").toLong
+    // 500 words — every historical decade ran at this vocabulary
+    val vocab = 500L
     // constant ~62.5K docs per generated partition (the regime every
     // measured decade ran in: 2M docs over the default 32 range splits).
     // At 2×10⁷ the default 32 splits put 31M exploded shingle rows
@@ -99,10 +92,8 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus, extraConf = Seq(
       // past the 200-partition bypass threshold the map side switches to
       // the serialized sort writer — at ≤125K rows/task that in-memory
       // sort is a few MB, while the bypass (hash) writer would open
@@ -112,23 +103,14 @@ object BenchScale {
       // inputs are persisted DISK_ONLY (below), so the storage pool is
       // idle — keep its protected share minimal and hand the unified
       // pool to the sorts/aggs that actually need it
-      .config("spark.memory.storageFraction", "0.2")
+      "spark.memory.storageFraction" -> "0.2",
       // sizePartitions (below) is the experiment's independent variable:
       // AQE's coalescer re-merges the sized shuffles back to its 64 MB
       // advisory chunks (64 MB COMPRESSED ≈ 400 MB in a window sort —
       // ~20 effective partitions at the 10⁶ point, which is where the
       // run-to-run spill/OOM came from), silently overriding the knob.
       // Skew handling stays on; only the coalescer is pinned off.
-      // SPARK_GRAFT_COALESCE=true re-enables it for one-off experiments
-      // (e.g. §2.9.16 #1's "would default AQE have caught the segment
-      // bloat?" probe) — the builder's explicit config would otherwise
-      // override any -D system property.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
     // §2.9.12 segment-law detectors, SESSION-level (ADVICE r15 #1: the old
     // per-op StageInfo.parentIds sum resolved against submit-event metadata
     // missed reused-shuffle reads — a recorded parent can be a re-created
@@ -477,16 +459,10 @@ object BenchScale {
     // catch. 8K partitions is nothing to the scheduler (~2×10⁵ task
     // launches over the tier) and the serialized sort writer emits one
     // data+index file per MAP task regardless of reduce width.
-    // SPARK_GRAFT_SCALE_WIDTH overrides the sized width for one-off
-    // experiments (e.g. the §2.9.12 bytes-proportional-width probe: the
-    // rows-proportional rule makes map-side per-segment codec overhead
-    // QUADRATIC in n — nTasks × nPartitions tiny zstd frames).
-    val widthOverride = sys.env.get("SPARK_GRAFT_SCALE_WIDTH").map(_.toLong)
     def sizePartitions(rows: Long, rowsPerTask: Long = 125000L): Unit =
       spark.conf.set(
         "spark.sql.shuffle.partitions",
-        widthOverride.getOrElse(
-          math.max(cpus.toLong, math.min(8192L, rows / rowsPerTask))).toString)
+        math.max(cpus.toLong, math.min(8192L, rows / rowsPerTask)).toString)
     // Per-op-CLASS reduce widths (§2.9.12): the two sizing constraints
     // pull different ops different ways. Wide-row aggregates (auto_xvar's
     // fused ~400 B feature rows) need ≤125k rows/task or the shared-pool
@@ -555,14 +531,12 @@ object BenchScale {
       // (§2.9.16 #1, the §2.9.12 segment law's third appearance). The
       // bytes width keeps every kn stage's segments ≥ a few hundred
       // records through the measured decades.
-      def knWidth(docs: Long): Long = widthOverride.getOrElse(
-        math.max(cpus.toLong,
-          math.min(8192L, docs * 50 * 80 / graft.core.Widths.TargetPartitionBytes)))
+      def knWidth(docs: Long): Long = math.max(cpus.toLong,
+        math.min(8192L, docs * 50 * 80 / graft.core.Widths.TargetPartitionBytes))
       val docs = materialize(syntheticDocs(spark, n))
       val line = jsonLine(s""""n_docs":$n""", measure(corpusKept, docs, "n_docs", n,
         k => if (widthsSized(k))
-          spark.conf.set("spark.sql.shuffle.partitions",
-            widthOverride.getOrElse(cpus.toLong).toString)
+          spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
         else if (k == "kn_perplexity")
           spark.conf.set("spark.sql.shuffle.partitions", knWidth(n).toString)
         // nb_classifier / bpe_vocab: every exchange is bounded (model ≤
@@ -574,8 +548,8 @@ object BenchScale {
         // until the score aggregate genuinely outgrows 64 MB/partition.
         else if (k == "nb_classifier" || k == "bpe_vocab")
           spark.conf.set("spark.sql.shuffle.partitions",
-            widthOverride.getOrElse(math.max(cpus.toLong,
-              n * 25 / graft.core.Widths.TargetPartitionBytes)).toString)
+            math.max(cpus.toLong,
+              n * 25 / graft.core.Widths.TargetPartitionBytes).toString)
         else sizePartitions(n * 50)))
       docs.unpersist(blocking = true)
       line

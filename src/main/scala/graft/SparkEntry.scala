@@ -631,30 +631,14 @@ object SparkEntry {
   private val seriesMemo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
-  /** Bucketed-lake memo mode — ON BY DEFAULT since the round-8 A/B showed
-    * identical results with strictly better plans (`bench_bucketed.json`:
-    * every query ≤, ts_diff 4→0 exchanges): derived series tables
-    * materialize as BUCKETED, bucket-sorted catalog tables
-    * ([[graft.sources.LakeLayout.writeBucketed]] keyed by series_id)
-    * instead of checkpointed blocks — the §8 lake layout actually
-    * CONSUMED by the query tier, so every downstream groupBy/window on
-    * series_id plans with no exchange on the memo side (LakeLayoutSpec
-    * pins the plan; graft.BenchBucketed measures the saving, both modes).
-    * Escape hatch: `SPARK_GRAFT_BUCKETED=0` or sysprop
-    * `graft.bucketedMemo=0` restores checkpoint memos (for a session that
-    * must not touch the catalog/warehouse, or the in-process A/B). */
-  def bucketedMemo: Boolean =
-    !sys.props.get("graft.bucketedMemo")
-      .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).contains("0")
-
   /** Catalog name of a bucketed memo table — distinct per DATASET DIR (the
     * memo map is keyed (session, dir, key), so a second dir in the same
     * session must not DROP+rewrite the first dir's table underneath its
     * still-cached lazy `s.table(...)` frame) AND per JVM: two graft
     * processes sharing one warehouse (verify + bench side by side) would
     * otherwise freshTable-delete the parquet files under each other's live
-    * frames mid-query — the default-on flip makes that a real deployment
-    * shape, and the warehouse is shared state no in-process lock covers.
+    * frames mid-query — a real deployment shape, and the warehouse is
+    * shared state no in-process lock covers.
     * The dir suffix is a 128-bit MD5 digest, not String.hashCode (the
     * suffix only prevents aliasing if it cannot collide); the pid suffix
     * makes the name unique among live processes; the SESSION token makes
@@ -676,7 +660,7 @@ object SparkEntry {
   }
 
   /** Per-key build locks: a racing double-build was harmless when memos
-    * were checkpoints, but the (default) bucketed path DROPs + rewrites a
+    * were checkpoints, but the bucketed path DROPs + rewrites a
     * catalog table — two threads doing that to the same table could fail
     * each other. Distinct keys still build fully concurrently (what
     * [[prewarmMemos]] fans out). TrieMap.getOrElseUpdate may evaluate the
@@ -698,18 +682,21 @@ object SparkEntry {
   private val gcDone =
     scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
 
+  /** Memo layout: a derived frame that carries `series_id` materializes
+    * as a BUCKETED, bucket-sorted catalog table
+    * ([[graft.sources.LakeLayout.writeBucketed]] keyed by series_id), so
+    * every downstream groupBy/window on series_id plans with no exchange
+    * on the memo side (LakeLayoutSpec pins the plan); any other frame
+    * (corpus-tier doc vectors, pair frames) is a `localCheckpoint`. */
   private def memo(s: SparkSession, d: String, key: String)(build: => DataFrame): DataFrame = {
     val k = (s, d, key)
     seriesMemo.get(k).getOrElse {
       memoLocks.getOrElseUpdate(k, new Object).synchronized {
-        if (bucketedMemo) gcDone.getOrElseUpdate(s,
+        gcDone.getOrElseUpdate(s,
           { graft.sources.LakeLayout.gcDeadSessionMemoDirs(s); () })
         seriesMemo.getOrElseUpdate(k, {
           val built = build
-          // bucketing keys on series_id — corpus-tier memos (doc vectors,
-          // pair frames) keep the checkpoint path; their lake layout is the
-          // documents table's own bucketing, not the memo's
-          if (bucketedMemo && built.columns.contains(SeriesFrame.SeriesId)) {
+          if (built.columns.contains(SeriesFrame.SeriesId)) {
             val table = memoTableName(s, d, key)
             memoTables.put(k, table)
             graft.sources.LakeLayout.freshTable(s, table)
@@ -730,7 +717,7 @@ object SparkEntry {
 
   /** Release the session memos for a long-lived driver. Checkpointed
     * frames release via the map drop (ContextCleaner reclaims unreferenced
-    * blocks at the next GC), but the (default) bucketed memos need the
+    * blocks at the next GC), but the bucketed memos need the
     * explicit path: Spark's CacheManager pins cached relations regardless
     * of JVM references, and the catalog table + warehouse dir are durable
     * state — so each recorded memo table is unpersisted and then DROPped

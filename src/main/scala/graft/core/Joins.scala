@@ -9,34 +9,28 @@ import org.apache.spark.sql.functions.broadcast
   * These frames hold one (or m) rows per series. At fixture scale they are
   * tiny and a broadcast-hash join is the right plan; at the charter's 10⁶+
   * series scale a FORCED broadcast hint becomes the bottleneck (AQE never
-  * overrides a user hint), so the hint must be size-gated rather than
-  * hardcoded.
-  *
-  * Modes (session conf `spark.graft.paramJoin`):
-  *  - `auto` (default): hint broadcast only when the Catalyst plan-estimated
-  *    size of the frame is within a slack factor of the session
-  *    `autoBroadcastJoinThreshold`; above the gate NO hint is emitted and
-  *    AQE decides from runtime-actual shuffle sizes — the true size gate.
-  *  - `broadcast`: always hint (the pre-gate behavior; useful in tests).
-  *  - `shuffle`: never hint — exercises the sort-merge path end to end.
+  * overrides a user hint), so the hint is size-gated rather than
+  * hardcoded: hint broadcast only when the Catalyst plan-estimated size of
+  * the frame is within a slack factor of the session
+  * `autoBroadcastJoinThreshold`; above the gate (or with the threshold at
+  * -1) NO hint is emitted and AQE decides from runtime-actual shuffle
+  * sizes.
   */
 object Joins {
-  val ModeKey = "spark.graft.paramJoin"
 
   /** Slack on the plan-size estimate: aggregate estimates derive from the
     * child scan and overshoot the actual one-row-per-series output, so the
     * gate compares against threshold × slack before giving up on the hint. */
   private val EstimateSlack = 64L
 
+  private def underGate(df: DataFrame): Boolean = {
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    thr > 0 && est <= BigInt(thr) * EstimateSlack
+  }
+
   def maybeBroadcast(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ModeKey, "auto") match {
-      case "broadcast" => broadcast(df)
-      case "shuffle"   => df
-      case _ =>
-        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        if (thr > 0 && est <= BigInt(thr) * EstimateSlack) broadcast(df) else df
-    }
+    if (underGate(df)) broadcast(df) else df
 
   /** [[maybeBroadcast]] for build sides whose past-the-gate fallback must
     * be a shuffled HASH join, not sort-merge: the probe side at these call
@@ -48,13 +42,5 @@ object Joins {
     * gate broadcasts, the broadcast hint wins and no shuffle exists at
     * all. */
   def maybeBroadcastElseHash(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ModeKey, "auto") match {
-      case "broadcast" => broadcast(df)
-      case "shuffle"   => df.hint("shuffle_hash")
-      case _ =>
-        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        if (thr > 0 && est <= BigInt(thr) * EstimateSlack) broadcast(df)
-        else df.hint("shuffle_hash")
-    }
+    if (underGate(df)) broadcast(df) else df.hint("shuffle_hash")
 }

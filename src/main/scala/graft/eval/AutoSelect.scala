@@ -569,6 +569,8 @@ object AutoSelect {
     )
     val candidates =
       if (candidateNames.isEmpty) all else all.filter(c => candidateNames.contains(c._1))
+    if (candidates.isEmpty)
+      return OptimalTransform(TransformStack(Nil), frame, score(frame), Nil)
 
     // One candidate's full evaluation against a given chain state: the
     // transform fit, the filtered transformed frame, its AR(4) holdout
@@ -599,15 +601,21 @@ object AutoSelect {
     //  - an ACCEPTED state is eagerly checkpointed (one shared base per
     //    chain step), so later candidates and the returned frame re-plan a
     //    one-node block scan instead of the stacked param-join lineage.
+    // Every submitted future is awaited before the call returns, so a
+    // discarded lookahead never leaves a Spark job running behind it.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContextExecutorService =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    def submit[A](body: => A): scala.concurrent.Future[A] =
-      scala.concurrent.Future {
+    val submitted = scala.collection.mutable.ArrayBuffer.empty[scala.concurrent.Future[_]]
+    def submit[A](body: => A): scala.concurrent.Future[A] = {
+      val f = scala.concurrent.Future {
         org.apache.spark.sql.SparkSession.active.sparkContext
           .setLocalProperty("spark.scheduler.pool", "graft-eval")
         body
       }
+      submitted += f
+      f
+    }
     def await[A](f: scala.concurrent.Future[A]): A =
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
     try {
@@ -647,6 +655,10 @@ object AutoSelect {
       }
       val acc = accepted.reverse
       OptimalTransform(TransformStack(acc.map(_._2)), cur, curScore, acc.map(_._1))
-    } finally pool.shutdown()
+    } finally {
+      submitted.foreach(f => scala.util.Try(
+        scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)))
+      pool.shutdown()
+    }
   }
 }

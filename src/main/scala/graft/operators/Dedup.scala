@@ -153,10 +153,6 @@ object Dedup {
       .filter(col("jaccard") >= minJ)
   }
 
-  /** Session conf: pin the winnow window for [[fingerprintPairs]]' auto
-    * geometry (0 = derive from the corpus count via [[autoW]]). */
-  val WinnowWKey = "spark.graft.winnow.w"
-
   /** Winnow window for an n-doc corpus: `w + 1 = 5·√(n / 2×10⁶)`, floored
     * at the MOSS-default w = 4 (so ≤ 2.8×10⁶-doc corpora keep their exact
     * historical fingerprints). Background pair-enumeration work is the
@@ -191,11 +187,11 @@ object Dedup {
     * and `minShared` — stated by the caller AT the default density
     * 2/(4+1) — is rescaled by the density ratio `5/(w+1)` so the
     * threshold keeps meaning "the same amount of shared text". An
-    * explicit `w` (or the [[WinnowWKey]] session conf) pins the geometry
-    * verbatim, minShared unrescaled — fixed-size experiments, replaying
-    * a historical run. Plan shape: ONE exchange keyed by fingerprint
-    * hash that the doc-frequency cap, the [[localCheckpointAdvertised]]
-    * index materialization, and both self-join sides all ride
+    * explicit `w` pins the geometry verbatim, minShared unrescaled —
+    * fixed-size experiments, replaying a historical run. Plan shape: ONE
+    * exchange keyed by fingerprint hash that the doc-frequency cap, the
+    * [[localCheckpointAdvertised]] index materialization, and both
+    * self-join sides all ride
     * (§2.9.11's stage decomposition: the index exchange is ~80% of the
     * op's bytes, so it gets to exist exactly once).
     *
@@ -212,10 +208,8 @@ object Dedup {
   def fingerprintPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 8, w: Int = -1, minShared: Int = 10,
                        maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    val wConf = df.sparkSession.conf.get(WinnowWKey, "0").toInt
     val (wEff, msEff) =
       if (w > 0) (w, minShared)
-      else if (wConf > 0) (wConf, minShared)
       else {
         val wAuto = autoW(df.count())
         // floor at min(2, minShared), not a flat 2: a caller's minShared = 1
@@ -280,7 +274,6 @@ object Dedup {
     // per 5·(w+1)/2 chars — ~10× the document bytes at the default
     // densities the estimate reports (Generate passes child stats through)
     val nPart = graft.core.Widths.forExchange(docH, expansion = 10.0)
-    val salted = docH.sparkSession.conf.get(PairSaltKey, "1").toInt > 1
     val byH0 = docH.repartition(nPart, col("h"))
     val byH = if (distinctNeeded) byH0.dropDuplicates("doc", "h") else byH0
     val capped = byH
@@ -288,81 +281,15 @@ object Dedup {
       .filter(col("_df") >= 2 &&
         (if (maxDocFreq == Int.MaxValue) lit(true) else col("_df") <= maxDocFreq))
       .drop("_df")
-    val pairs =
-      if (salted) indexSelfPairs(capped, "h") // salted-for-skew legacy plan
-      else {
-        val ix = org.apache.spark.sql.GraftCheckpoint.localCheckpointAdvertised(
-          capped, Seq("h"),
-          org.apache.spark.storage.StorageLevel.DISK_ONLY, nPart)
-        ix.as("a").hint("shuffle_hash").join(ix.as("b"),
-            col("a.h") === col("b.h") && col("a.doc") < col("b.doc"))
-          .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      }
-    pairs.groupBy("doc_a", "doc_b")
+    val ix = org.apache.spark.sql.GraftCheckpoint.localCheckpointAdvertised(
+      capped, Seq("h"),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY, nPart)
+    ix.as("a").hint("shuffle_hash").join(ix.as("b"),
+        col("a.h") === col("b.h") && col("a.doc") < col("b.doc"))
+      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
+      .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
-
-  /** Session conf: replication factor for salted candidate-pair joins
-    * (default 1 = unsalted). */
-  val PairSaltKey = "spark.graft.pairSalt"
-
-  /** All candidate `(doc_a, doc_b)` rows (doc_a < doc_b, one row per
-    * shared key occurrence) from an inverted-index self-join on `keyCol` —
-    * the pair-generation core of [[fingerprintPairsFrom]] (and the shape
-    * jaccardPairs inlines).
-    *
-    * Unsalted (default): one full-width repartition on the key that BOTH
-    * shuffle-hash-join sides read as byte-identical subplans, so
-    * ReusedExchange materializes the index once (a broadcast build side
-    * would re-run the whole lineage per side — measured ~13× on the
-    * fingerprint tree at sf0.1).
-    *
-    * With `spark.graft.pairSalt = R > 1`: the probe side is salted by a
-    * deterministic doc-hash bucket and the build side replicated R× with
-    * every salt, joining on (key, salt) — the charter's salting-for-skew
-    * tool. Output pairs are IDENTICAL (each pair materializes exactly once,
-    * in the probe doc's salt bucket), but a hot key's df² fan-out spreads
-    * over R tasks instead of one. The df-cap bounds total candidate
-    * volume; salting balances where it lands. Costs the exchange reuse
-    * (sides are no longer byte-identical) — worth it only in the skewed
-    * regime, hence conf-gated off by default. */
-  private[graft] def indexSelfPairs(index: DataFrame, keyCol: String): DataFrame = {
-    val r = index.sparkSession.conf.get(PairSaltKey, "1").toInt
-    // bytes-sized index-exchange width ([[graft.core.Widths]]) with the
-    // same 10× Generate-pass-through expansion model as [[pairsOverIndex]]
-    // (callers hand this an exploded (doc, key) index whose Catalyst
-    // estimate reports the pre-explode document bytes); degenerate
-    // estimates (stat-less checkpoint inputs) fall back to the session
-    // width inside forExchange
-    val nPart = graft.core.Widths.forExchange(index, expansion = 10.0)
-    if (r <= 1) {
-      // materialized once for both self-join sides, with the hash(key)
-      // distribution advertised (see [[jaccardPairs]]): the join then
-      // reads the blocks with no exchange at all — the plain checkpoint
-      // paid one materialized (ReusedExchange-collapsed) index exchange
-      val ix = org.apache.spark.sql.GraftCheckpoint.localCheckpointHashed(
-        index, Seq(keyCol),
-        org.apache.spark.storage.StorageLevel.DISK_ONLY, nPart)
-      ix.as("a").hint("shuffle_hash").join(ix.as("b"),
-          col(s"a.$keyCol") === col(s"b.$keyCol") && col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-    } else {
-      // probe and build derive DIFFERENT frames, so they can't share one
-      // exchange — checkpoint the incoming index once instead
-      val ixSrc = index
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val probe = ixSrc.withColumn("_salt",
-          pmod(TextOps.hash32(col("doc").cast("string")), lit(r.toLong)))
-        .repartition(nPart, col(keyCol), col("_salt"))
-      val build = ixSrc.withColumn("_salt",
-          explode(sequence(lit(0L), lit(r.toLong - 1))))
-        .repartition(nPart, col(keyCol), col("_salt"))
-      probe.as("a").hint("shuffle_hash").join(build.as("b"),
-          col(s"a.$keyCol") === col(s"b.$keyCol") &&
-            col("a._salt") === col("b._salt") && col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-    }
   }
 
   /** Pin threshold for the row-exploding band self-joins, in banded rows per
@@ -406,11 +333,6 @@ object Dedup {
       .select(col("doc"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Session conf: override the auto-sized MinHash rows-per-band /
-    * band-count geometry (0 = derive from the corpus count). */
-  val MinhashRowsKey = "spark.graft.minhash.r"
-  val MinhashBandsKey = "spark.graft.minhash.bands"
-
   /** MinHash-LSH design point the auto geometry holds: near-duplicates at
     * jaccard ≥ [[DesignSim]] are recalled with probability ≥
     * [[DesignRecall]] whatever rows-per-band the corpus size demands.
@@ -452,30 +374,34 @@ object Dedup {
     * via [[autoRows]] and the band count via [[autoBands]] — the round-10
     * decade table showed the former fixed r=4 default silently going
     * 19.3×/decade at 2×10⁷ docs while r=8 held 9.3× at ~0.99 recall for
-    * 0.95-jaccard near-dups. Explicit k/bands arguments or the
-    * [[MinhashRowsKey]]/[[MinhashBandsKey]] session confs pin a geometry
-    * (fixed-size experiments, replaying a historical run). */
+    * 0.95-jaccard near-dups. Explicit k/bands arguments pin a geometry
+    * (fixed-size experiments, replaying a historical run): the measured
+    * r=8 4th-decade geometry is `k = 40, bands = 5`. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, k: Int = -1, bands: Int = -1): DataFrame = {
-    val conf = df.sparkSession.conf
-    val bConf = if (bands > 0) bands else conf.get(MinhashBandsKey, "0").toInt
     val (kEff, bandsEff) =
-      if (k > 0) (k, if (bConf > 0) bConf else 4)
+      if (k > 0) (k, if (bands > 0) bands else 4)
       else {
-        val rConf = conf.get(MinhashRowsKey, "0").toInt
         // the count is the sizing input (metadata-cheap on a parquet
         // lake); everything downstream is a pure function of (r, b)
-        val r = if (rConf > 0) rConf else autoRows(df.count())
-        val b = if (bConf > 0) bConf else autoBands(r)
+        val r = autoRows(df.count())
+        val b = if (bands > 0) bands else autoBands(r)
         (r * b, b)
       }
     minhashCandidatesExplicit(df, idCol, textCol, n, kEff, bandsEff)
   }
 
-  /** [[minhashCandidates]] at a pinned (k, bands) geometry. */
-  private def minhashCandidatesExplicit(df: DataFrame, idCol: String,
-                                        textCol: String, n: Int, k: Int,
-                                        bands: Int): DataFrame = {
+  /** Signature count AT OR ABOVE which [[minhashCandidates]] prunes the
+    * join-back signature frame to candidate docs (Bloom prefilter); below
+    * it the direct two-join plan runs. */
+  val PruneSignatures = 1000000L
+
+  /** [[minhashCandidates]] at a pinned (k, bands) geometry. `pruneAt`
+    * exists so specs can reach the pruned plan on a fixture-size corpus. */
+  private[graft] def minhashCandidatesExplicit(df: DataFrame, idCol: String,
+                                               textCol: String, n: Int, k: Int,
+                                               bands: Int,
+                                               pruneAt: Long = PruneSignatures): DataFrame = {
     val r = k / bands
     // materialized (not cache()): both join sides read the same RDD blocks,
     // and the ContextCleaner releases them when the frame goes out of scope
@@ -512,9 +438,7 @@ object Dedup {
     // is at most a few hundred MB and the prune's extra driver-sequenced
     // jobs cost more than they save — small corpora keep the direct plan
     // (and their pinned stage counts).
-    val pruneThreshold = df.sparkSession.conf
-      .get(MinhashPruneKey, "1000000").toLong
-    val (cand, sigJb) = if (nSig < pruneThreshold) (cand0, sig) else {
+    val (cand, sigJb) = if (nSig < pruneAt) (cand0, sig) else {
       val candC = cand0.localCheckpoint(false)
       // materialize at full width BEFORE the coalesced bloom build below:
       // a lazy checkpoint first touched through a coalesce(32) would run
@@ -577,11 +501,6 @@ object Dedup {
           .cast("double") / k)
       .select("doc_a", "doc_b", "est_jaccard")
   }
-
-  /** Session conf: signature count AT OR ABOVE which [[minhashCandidates]]
-    * prunes the join-back signature frame to candidate docs (Bloom
-    * prefilter); below it the direct two-join plan runs. Default 10⁶. */
-  val MinhashPruneKey = "spark.graft.minhash.pruneThreshold"
 
   /** Every length-`minTokens` token window start per document:
     * `(doc, pos, h)` with 1-based `pos` and `h` = 60-bit md5-prefix

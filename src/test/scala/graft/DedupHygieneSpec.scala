@@ -65,20 +65,16 @@ class DedupHygieneSpec extends SparkSpec {
     val pinned = Dedup.minhashCandidates(d, "doc_id", "text", k = 16, bands = 4)
       .orderBy("doc_a", "doc_b").collect().toSeq
     assert(auto == pinned)
-    // conf override wins over the count-derived geometry
-    spark.conf.set(Dedup.MinhashRowsKey, "8")
-    try {
-      val sig = Dedup.minhashCandidates(d, "doc_id", "text")
-      // r=8 → autoBands(8)=5 bands → k=40 signature positions feed the
-      // est_jaccard denominator; check via a planted exact duplicate
-      import spark.implicits._
-      val dup = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"))
-        .toDF("doc_id", "text")
-      val est = Dedup.minhashCandidates(dup, "doc_id", "text")
-        .select("est_jaccard").collect().map(_.getDouble(0))
-      assert(est.forall(_ == 1.0))
-      sig.count() // exercises the override path end to end
-    } finally spark.conf.unset(Dedup.MinhashRowsKey)
+    // the measured r=8 geometry pinned through the arguments: r=8 →
+    // autoBands(8)=5 bands → k=40 signature positions feed the
+    // est_jaccard denominator; check via a planted exact duplicate
+    import spark.implicits._
+    val dup = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"))
+      .toDF("doc_id", "text")
+    val est = Dedup.minhashCandidates(dup, "doc_id", "text", k = 40, bands = 5)
+      .select("est_jaccard").collect().map(_.getDouble(0))
+    assert(est.nonEmpty && est.forall(_ == 1.0))
+    Dedup.minhashCandidates(d, "doc_id", "text", k = 40, bands = 5).count()
   }
 
   test("candidate-pruned join-backs are value-identical to the direct plan") {
@@ -93,12 +89,11 @@ class DedupHygieneSpec extends SparkSpec {
     val direct = Dedup.minhashCandidates(d, "doc_id", "text")
       .orderBy("doc_a", "doc_b").collect().toSeq
     assert(direct.nonEmpty, "fixture must yield candidate pairs")
-    spark.conf.set(Dedup.MinhashPruneKey, "1")
-    try {
-      val pruned = Dedup.minhashCandidates(d, "doc_id", "text")
-        .orderBy("doc_a", "doc_b").collect().toSeq
-      assert(pruned == direct)
-    } finally spark.conf.unset(Dedup.MinhashPruneKey)
+    // the fixture's auto geometry is (k=16, 4 bands); prune from 1 signature
+    val pruned = Dedup.minhashCandidatesExplicit(d, "doc_id", "text", n = 3,
+        k = 16, bands = 4, pruneAt = 1)
+      .orderBy("doc_a", "doc_b").collect().toSeq
+    assert(pruned == direct)
   }
 
   test("winnow geometry auto-sizes from the corpus count") {
@@ -119,13 +114,6 @@ class DedupHygieneSpec extends SparkSpec {
       .orderBy("doc_a", "doc_b").collect().toSeq
     assert(auto.nonEmpty, "fixture must yield fingerprint pairs")
     assert(auto == pinned)
-    // conf pin wins over the count-derived window (and skips the count)
-    spark.conf.set(Dedup.WinnowWKey, "4")
-    try {
-      val conf = Dedup.fingerprintPairs(d, "doc_id", "text", minShared = 2)
-        .orderBy("doc_a", "doc_b").collect().toSeq
-      assert(conf == pinned)
-    } finally spark.conf.unset(Dedup.WinnowWKey)
     // minShared = 1 must SURVIVE the w = 4 identity case too: the rescale
     // floor is min(2, minShared), not a flat 2 (a flat floor silently
     // tightened a share-anything threshold in auto mode only)

@@ -46,17 +46,18 @@ class LakeLayoutSpec extends SparkSpec {
 
   test("bucketed memo mode: query-tier memos become bucketed scans, same results") {
     val sfDir = "/root/testdata/sf0.001"
-    // checkpoint-mode reference (the escape hatch — bucketed is the default)
-    System.setProperty("graft.bucketedMemo", "0")
-    SparkEntry.clearMemos()
-    val ref = SparkEntry.queries("ts_diff")(spark, sfDir)
+    // reference: the same differences straight off the un-memoized series
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("series_id").orderBy("ds")
+    val ref = graft.core.SeriesFrame.ordersMonthly(spark, sfDir)
+      .select(col("series_id"), col("ds"), col("y"),
+        round(col("y") - lag("y", 1).over(w), 2).as("d1"),
+        round(col("y") - lag("y", 12).over(w), 2).as("d12"))
       .collect().map(_.toString).sorted
-    // bucketed mode: the memo table materializes via LakeLayout and the
-    // per-series window consumes the bucketed scan
-    System.setProperty("graft.bucketedMemo", "1")
+    // the memo table materializes via LakeLayout and the per-series window
+    // consumes the bucketed scan
     try {
       SparkEntry.clearMemos()
-      assert(SparkEntry.bucketedMemo)
       val df = SparkEntry.queries("ts_diff")(spark, sfDir)
       val out = df.collect().map(_.toString).sorted
       assert(out.toSeq === ref.toSeq, "results must be layout-invariant")
@@ -64,7 +65,7 @@ class LakeLayoutSpec extends SparkSpec {
       assert(plan.contains("Bucketed: true"),
         s"memo scan must report a bucketed read:\n$plan")
       // the frame built directly on the memo pays no exchange for a
-      // series-keyed window (the exchange the checkpoint path pays)
+      // series-keyed window
       val memoFrame = LakeLayout.readBucketed(spark,
         SparkEntry.memoTableName(spark, sfDir, "orders"))
       val win = memoFrame.withColumn("d",
@@ -73,10 +74,7 @@ class LakeLayoutSpec extends SparkSpec {
             .partitionBy("series_id").orderBy("ds")))
       assert(exchanges(win) === 0,
         "series-keyed window over the bucketed memo must plan no exchange")
-    } finally {
-      System.clearProperty("graft.bucketedMemo")
-      SparkEntry.clearMemos()
-    }
+    } finally SparkEntry.clearMemos()
   }
 
   test("self-join on the bucket key plans no exchange on either side") {

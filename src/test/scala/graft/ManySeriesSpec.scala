@@ -383,11 +383,16 @@ class ManySeriesSpec extends SparkSpec {
         .select(col("series_id"), col("ds").cast("string"), round(col("yhat"), 9))
         .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     }
-    val key = graft.core.Joins.ModeKey
-    spark.conf.set(key, "shuffle")
-    val viaShuffle = try run() finally spark.conf.set(key, "broadcast")
-    val viaBroadcast = try run() finally spark.conf.unset(key)
-    assert(viaShuffle == viaBroadcast && viaShuffle.size == nSeries * 3)
+    val gated = run()
+    // threshold -1 turns the gate off: no broadcast hint anywhere
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val viaShuffle = try run() finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(viaShuffle == gated && gated.size == nSeries * 3)
   }
 
   test("backtestMetrics and prophet_like stay complete per series over the shared frame") {

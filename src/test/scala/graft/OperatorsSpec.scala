@@ -322,21 +322,6 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)), s"only the passage-sharing pair, got $pairs")
   }
 
-  test("salted pair generation yields identical pairs to the unsalted join") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    // a deliberately hot key: 'common' shared by many docs, plus rare keys
-    val idx = ((1L to 12L).map(d => (d, "common")) ++
-      Seq((1L, "rare1"), (2L, "rare1"), (5L, "rare2"))).toDF("doc", "h")
-    def pairs() = Dedup.indexSelfPairs(idx, "h").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val plain = pairs()
-    assert(plain.size == 12 * 11 / 2 + 1, "66 hot-key pairs + the rare1 pair (rare2 is solo)")
-    spark.conf.set(Dedup.PairSaltKey, "4")
-    try assert(pairs() == plain, "salting must not change the pair multiset")
-    finally spark.conf.unset(Dedup.PairSaltKey)
-  }
-
   test("gopher repetition gates: spammy doc fails, normal doc passes") {
     import spark.implicits._
     val df = Seq(

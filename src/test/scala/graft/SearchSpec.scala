@@ -147,6 +147,39 @@ class SearchSpec extends SparkSpec {
     assert(r.accepted.size === r.stack.stack.size)
   }
 
+  /** `body`'s result plus the Spark jobs it left running: active after it
+    * returned (bus drained) and not already active before it began. */
+  private def withJobsLeftRunning[A](body: => A): (A, Set[Int]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftBus.drain(sc)
+    val before = sc.statusTracker.getActiveJobIds.toSet
+    val out = body
+    org.apache.spark.GraftBus.drain(sc)
+    (out, sc.statusTracker.getActiveJobIds.toSet -- before)
+  }
+
+  test("findOptimalTransformation with no candidates returns the baseline score") {
+    val df = obsSeries(ys)
+    val (r, leaked) = withJobsLeftRunning(AutoSelect.findOptimalTransformation(
+      df, m = 12, h = 6, candidateNames = Seq("no_such_transform")))
+    val baseline = AutoSelect.scoreFeatures(
+      graft.functions.FeatureOps.addArTerms(df.filter(!col("is_future")), 4),
+      (1 to 4).map(i => s"ar_$i"), 6)
+    assert(!r.score.isNaN && !r.score.isInfinite)
+    assert(r.score === baseline)
+    assert(r.stack.stack.isEmpty && r.accepted.isEmpty)
+    assert(leaked.isEmpty, s"jobs still running after return: $leaked")
+  }
+
+  test("findOptimalTransformation leaves no speculative job running") {
+    // detrend is accepted on this trending series, which discards the
+    // lookahead evaluation of the next candidate against the old state
+    val (r, leaked) = withJobsLeftRunning(AutoSelect.findOptimalTransformation(
+      obsSeries(ys), m = 12, h = 6, candidateNames = Seq("detrend", "boxcox", "diff1")))
+    assert(r.accepted.headOption.contains("detrend") && !r.score.isNaN)
+    assert(leaked.isEmpty, s"jobs still running after return: $leaked")
+  }
+
   test("theta forecast blends trend extrapolation and SES") {
     val df = SeriesFrame.withMonthlyHorizon(obsSeries(ys), 6)
     val out = Theta.thetaForecast(df)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.{RunDelta, RunRecorder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,34 +112,9 @@ object BenchScale {
       // run-to-run spill/OOM came from), silently overriding the knob.
       // Skew handling stays on; only the coalescer is pinned off.
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
-    // §2.9.12 segment-law detectors, SESSION-level (ADVICE r15 #1: the old
-    // per-op StageInfo.parentIds sum resolved against submit-event metadata
-    // missed reused-shuffle reads — a recorded parent can be a re-created
-    // skipped stage that never fires onStageSubmitted, so mapTasks summed
-    // to 0 and the flag short-circuited on exactly the checkpoint-reusing
-    // ops. The shared [[graft.core.SegmentProbe]] resolves map counts
-    // through the rdd lineage like graft.Bench, and the plan-scan twin
-    // reads TRUE pre-coalesce exchange widths). Ops attribute flags by
-    // counter delta after a bus drain.
-    val segProbe = new graft.core.SegmentProbe
-    spark.listenerManager.register(new graft.core.SegmentPlanScan.Listener(d => {
-      segProbe.flags.incrementAndGet()
-      System.err.println(s"[segment_flag] [plan] $d")
-    }))
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        segProbe.onSubmit(e.stageInfo)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        segProbe.onComplete(e.stageInfo)
-          .foreach(d => System.err.println(s"[segment_flag] $d"))
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) segProbe.onTask(e.stageId, m.shuffleReadMetrics.recordsRead)
-      }
-    })
+    // executor metrics, per-stage rows and the §2.9.12 segment-law
+    // detectors (stage view + plan view), attributed per op by a bus drain
+    val rec = RunRecorder.install(spark)
     spark.range(1000).selectExpr("sum(id)").collect() // JVM warmup
     val nObs = 96
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
@@ -148,9 +124,6 @@ object BenchScale {
       val rt = Runtime.getRuntime
       (rt.totalMemory() - rt.freeMemory()) >> 20
     }
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val onlyOps: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_SCALE_OPS").map(_.split(",").map(_.trim).toSet)
     def keep(ops: Seq[(String, DataFrame => Unit)]) =
@@ -158,106 +131,35 @@ object BenchScale {
     def envSizes(name: String, dflt: Seq[Long], active: Boolean): Seq[Long] =
       if (!active) Seq.empty
       else sys.env.get(name).map(_.split(",").map(_.trim.toLong).toSeq).getOrElse(dflt)
-    /** Per-op executor-side attribution: a task-end listener accumulates
-      * task time, shuffle read/write, and MEMORY/DISK SPILL while the op
-      * runs — super-linear wall growth then names its bottleneck from the
-      * record (task_sec ≫ wall·cores ⇒ core saturation; spill_disk ≫ 0 ⇒
-      * the shuffle outgrew executor memory; neither ⇒ scheduler/plan).
-      * Listener delivery is async, so waitUntilEmpty before reading. */
-    final class OpMetrics(segFlagsBase: Long)
-        extends org.apache.spark.scheduler.SparkListener {
-      val taskMs = new java.util.concurrent.atomic.AtomicLong
-      // runtime − cpu − gc ≈ blocked time (shuffle/spill I/O, lock waits):
-      // the split that separates "the pool made tasks WAIT" from "the
-      // tasks genuinely computed more" (the §2.9.16 open attribution)
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong
-      val gcMs = new java.util.concurrent.atomic.AtomicLong
-      val shufWrite = new java.util.concurrent.atomic.AtomicLong
-      val shufRead = new java.util.concurrent.atomic.AtomicLong
-      val spillMem = new java.util.concurrent.atomic.AtomicLong
-      val spillDisk = new java.util.concurrent.atomic.AtomicLong
-      // SPARK_GRAFT_STAGE_METRICS=1: per-STAGE attribution on stderr — when
-      // an op's aggregate record says "spill", this names the exact plan
-      // node family (the stage's callsite) that spilled
-      private val perStage = sys.env.get("SPARK_GRAFT_STAGE_METRICS").contains("1")
-      private val stages =
-        new java.util.concurrent.ConcurrentHashMap[Int, (String, Array[Long])]()
-      // §2.9.12 segment-law flags are detected by the SESSION-level probe +
-      // plan scan (see main); the op attributes by counter delta
-      def segFlags: Long = segProbe.flags.get() - segFlagsBase
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (perStage) stages.putIfAbsent(ss.stageInfo.stageId,
-          (ss.stageInfo.name, new Array[Long](9)))
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          if (perStage) {
-            val e = stages.get(te.stageId)
-            if (e != null) e._2.synchronized {
-              e._2(0) += m.executorRunTime
-              e._2(1) += m.shuffleWriteMetrics.bytesWritten
-              e._2(2) += m.shuffleReadMetrics.totalBytesRead
-              e._2(3) += m.memoryBytesSpilled
-              e._2(4) += m.diskBytesSpilled
-              e._2(5) += m.executorCpuTime
-              e._2(6) += m.jvmGCTime
-              e._2(7) += m.shuffleWriteMetrics.recordsWritten
-              e._2(8) += m.shuffleReadMetrics.recordsRead
-            }
-          }
-        }
-      }
-      def dumpStages(op: String): Unit = if (perStage) {
-        import scala.jdk.CollectionConverters._
-        stages.asScala.toSeq.sortBy(_._1).foreach { case (sid, (name, a)) =>
-          System.err.println(f"[stage] op=$op stage=$sid task_sec=${a(0) / 1000}%d " +
-            f"sw_mb=${a(1) >> 20}%d sr_mb=${a(2) >> 20}%d spill_mem_mb=${a(3) >> 20}%d " +
-            f"spill_disk_mb=${a(4) >> 20}%d cpu_sec=${a(5) / 1000000000L}%d " +
-            f"gc_sec=${a(6) / 1000}%d swr=${a(7)}%d srr=${a(8)}%d  $name")
-        }
-      }
-      def json(sec: Double): String = {
-        def mb(l: Long): Long = l >> 20
-        s"""{"sec":$sec,"task_sec":${taskMs.get / 1000},""" +
-          s""""cpu_sec":${cpuNs.get / 1000000000L},"gc_sec":${gcMs.get / 1000},""" +
-          s""""shuffle_write_mb":${mb(shufWrite.get)},"shuffle_read_mb":${mb(shufRead.get)},""" +
-          s""""spill_mem_mb":${mb(spillMem.get)},"spill_disk_mb":${mb(spillDisk.get)},""" +
-          s""""segment_flags":$segFlags}"""
-      }
-    }
-    /** Time each kept op; incremental stderr record per op (a later op
-      * dying — e.g. disk-full at the 10⁶ tier — must not lose completed
+    /** Time each kept op through the recorder: per-op executor-side
+      * attribution (task/cpu/gc time, shuffle read/write, MEMORY/DISK
+      * SPILL) names a super-linear wall's bottleneck from the record
+      * (task_sec ≫ wall·cores ⇒ core saturation; spill_disk ≫ 0 ⇒ the
+      * shuffle outgrew executor memory; neither ⇒ scheduler/plan), and the
+      * per-STAGE rows name the exact plan node family (the stage's
+      * callsite) that spilled. Incremental stderr record per op (a later
+      * op dying — e.g. disk-full at the 10⁶ tier — must not lose completed
       * timings), plus a GC nudge so the ContextCleaner frees the finished
       * op's dereferenced shuffle files before the next op's spill peak. */
     def measure(ops: Seq[(String, DataFrame => Unit)], frame: DataFrame,
                 tag: String, n: Long,
-                setWidth: String => Unit = _ => ()): Seq[(String, Double, String)] =
+                setWidth: String => Unit = _ => ()): Seq[(String, RunDelta)] =
       ops.map { case (k, f) =>
         setWidth(k)
-        // drain before the baseline snapshot and after the op: listener
-        // delivery is async, and the bus drain (GraftBus shim) makes the
-        // attribution exact instead of the old fixed 1 s settle
-        org.apache.spark.GraftBus.drain(spark.sparkContext)
-        val lst = new OpMetrics(segProbe.flags.get())
-        spark.sparkContext.addSparkListener(lst)
-        val s = time(f(frame))
-        org.apache.spark.GraftBus.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(lst)
-        lst.dumpStages(k)
-        val mj = lst.json(s)
-        System.err.println(s"[bench_scale] op $k $tag=$n ${s}s $mj")
+        val (_, d) = rec.measure(f(frame))
+        d.stageRows.sortBy(_.stageId).foreach { r =>
+          val w = r.work
+          System.err.println(s"[stage] op=$k stage=${r.stageId} task_sec=${w.taskMs / 1000} " +
+            s"sw_mb=${w.shuffleWrite >> 20} sr_mb=${w.shuffleRead >> 20} " +
+            s"spill_mem_mb=${w.spillMem >> 20} spill_disk_mb=${w.spillDisk >> 20} " +
+            s"cpu_sec=${w.cpuMs / 1000} gc_sec=${w.gcMs / 1000} " +
+            s"swr=${w.writeRecords} srr=${w.readRecords}  ${r.name}")
+        }
+        System.err.println(s"[bench_scale] op $k $tag=$n ${RunRecorder.f3(d.sec)}s ${d.json()}")
         System.gc()
-        (k, s, mj)
+        k -> d
       }
-    def jsonLine(head: String, ops: Seq[(String, Double, String)]): String = {
+    def jsonLine(head: String, ops: Seq[(String, RunDelta)]): String = {
       // local[n] hosts the executor block store in the same JVM, so heap
       // after the ops is dominated by the (deliberately) checkpointed input
       // and operator checkpoints — executor-side storage on a real cluster.
@@ -265,12 +167,10 @@ object BenchScale {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       val mem = usedMb
-      val opsJson = ops.map { case (k, v, _) => s""""$k":$v""" }.mkString(",")
       // per-op attribution rides in a parallel object so the plain "ops"
       // second-per-op shape every prior BENCH_SCALE point uses stays stable
-      val detJson = ops.map { case (k, _, mj) => s""""$k":$mj""" }.mkString(",")
-      val line =
-        s"""{$head,"ops":{$opsJson},"ops_metrics":{$detJson},"driver_used_mb":$mem}"""
+      val line = s"""{$head,"ops":${RunRecorder.obj(ops.map { case (k, d) => k -> d.sec })},""" +
+        s""""ops_metrics":${RunRecorder.obj(ops.map { case (k, d) => k -> d.json() })},"driver_used_mb":$mem}"""
       System.err.println(s"[bench_scale] $line")
       line
     }

@@ -734,7 +734,17 @@ object SparkEntry {
     memoTables.clear()
     seriesMemo.clear(); xvarSelMemo.clear(); blockedFitMemo.clear()
     tbatsCurveMemo.clear(); docCountMemo.clear()
+    // the per-session bookkeeping too, or every session that ever built a
+    // memo stays reachable for the life of the JVM
+    sessionTokens.clear(); memoLocks.clear(); gcDone.clear()
   }
+
+  /** Every session some memo map still holds (the leak check). */
+  private[graft] def memoSessions: Set[SparkSession] =
+    (Seq(seriesMemo.keys, memoLocks.keys, memoTables.keys).flatten.map(_._1) ++
+      Seq(xvarSelMemo.keys, blockedFitMemo.keys, tbatsCurveMemo.keys,
+        docCountMemo.keys).flatten.map(_._1) ++
+      sessionTokens.keys ++ gcDone.keys).toSet
 
   /** ts_tbats_like and ts_tbats_arma fit the IDENTICAL Box-Cox + trend +
     * Fourier curve on the identical frame — fit it once per (session, dir)

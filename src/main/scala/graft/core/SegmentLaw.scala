@@ -9,7 +9,7 @@ package graft.core
   * the CPU ("bytes linear, CPU super-linear, records flat" — measured ~2
   * records/frame and 5–7.5× reduce CPU at the 2×10⁷ kn decade).
   *
-  * The detector runs in the bench/battery listeners: for every completed
+  * The detector runs in [[graft.obs.RunRecorder]]: for every completed
   * stage that read a shuffle, records/(map_tasks × width) below
   * [[MinRecordsPerSegment]] flags the stage — but only past
   * [[MinRecordsToFlag]] records, because at gate scale every exchange is
@@ -51,7 +51,7 @@ object SegmentLaw {
 }
 
 /** Listener-side state for [[SegmentLaw]]: one instance per listener,
-  * fed from stage-submitted / task-end / stage-completed events.
+  * fed from stage-submitted and stage-completed events.
   *
   * map_tasks cannot come from `StageInfo.parentIds`: a reduce stage's
   * recorded parent is the RE-CREATED (skipped) map stage of its own job,
@@ -63,35 +63,26 @@ object SegmentLaw {
 final class SegmentProbe {
   private val rddTasks =
     new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-  private val readRecs =
-    new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-  val flags = new java.util.concurrent.atomic.AtomicLong
 
   def onSubmit(si: org.apache.spark.scheduler.StageInfo): Unit =
     si.rddInfos.foreach(r => rddTasks.put(r.id, si.numTasks))
 
-  def onTask(stageId: Int, recordsRead: Long): Unit =
-    readRecs.computeIfAbsent(stageId,
-      _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(recordsRead)
-
-  /** Evaluate the law for a completed stage; Some(detail) if flagged.
-    * The stage's read-record entry is pruned here (a completed stage never
-    * reports again) — `rddTasks` is kept: later stages resolve their map
-    * counts through rdd ids owned by long-finished stages, and the map is
-    * one boxed int per rdd, bounded by the session's plan count. */
-  def onComplete(si: org.apache.spark.scheduler.StageInfo): Option[String] = {
-    val recs = Option(readRecs.remove(si.stageId)).map(_.get()).getOrElse(0L)
+  /** Evaluate the law for a completed stage that read `recs` shuffle
+    * records; Some(detail) if flagged. `rddTasks` is never pruned: later
+    * stages resolve their map counts through rdd ids owned by
+    * long-finished stages, and the map is one boxed int per rdd, bounded
+    * by the session's plan count. */
+  def onComplete(si: org.apache.spark.scheduler.StageInfo, recs: Long): Option[String] = {
     if (recs < SegmentLaw.MinRecordsToFlag) return None // cheap early out
     val own = si.rddInfos.map(_.id).toSet
     val mapTasks = si.rddInfos.flatMap(_.parentIds)
       .filterNot(own.contains).distinct
       .flatMap(pid => Option(rddTasks.get(pid)).map(_.longValue)).sum
-    if (SegmentLaw.flag(recs, mapTasks, si.numTasks)) {
-      flags.incrementAndGet()
+    if (SegmentLaw.flag(recs, mapTasks, si.numTasks))
       Some(s"stage=${si.stageId} records=$recs map_tasks=$mapTasks " +
         s"width=${si.numTasks} " +
         f"records_per_segment=${recs.toDouble / (mapTasks * si.numTasks)}%.2f")
-    } else None
+    else None
   }
 }
 
@@ -109,9 +100,9 @@ final class SegmentProbe {
   * `shuffleRecordsWritten` SQLMetric is the exact record volume.
   * ReusedExchanges are skipped (counted once, at the origin); unexecuted
   * exchanges report zero written records and fall under the records
-  * floor. Runs OUTSIDE any timed region — the bench/battery register the
-  * [[SegmentPlanScan.Listener]] once per session and attribute flags by
-  * counter delta, exactly like the stage probe. A true pathology that is
+  * floor. Runs OUTSIDE any timed region — [[graft.obs.RunRecorder]]
+  * registers the [[SegmentPlanScan.Listener]] once per session and counts
+  * its flags apart from the stage probe's. A true pathology that is
   * read un-coalesced can flag in BOTH detectors (one stage view, one plan
   * view); the healthy-battery contract (zero flags) is unaffected. */
 object SegmentPlanScan {
@@ -141,19 +132,21 @@ object SegmentPlanScan {
       }
       p.subqueries.foreach(walk)
     }
-    scala.util.Try(walk(plan))
+    walk(plan)
     out.toList
   }
 
   /** QueryExecutionListener delivering each flagged exchange's detail line
-    * to `sink` (the bench/battery flag counters). Failure path is skipped:
-    * a failed execution may have no executed plan to read. */
-  final class Listener(sink: String => Unit)
+    * to `sink` and a scan that throws to `onError` — a detector that fails
+    * says so instead of reading as zero flags. The failure path is
+    * skipped: a failed execution may have no executed plan to read. */
+  final class Listener(sink: String => Unit, onError: Throwable => Unit)
       extends org.apache.spark.sql.util.QueryExecutionListener {
     override def onSuccess(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution,
         durationNs: Long): Unit =
-      scala.util.Try(scan(qe.executedPlan).foreach(sink))
+      try scan(qe.executedPlan).foreach(sink)
+      catch { case scala.util.control.NonFatal(t) => onError(t) }
     override def onFailure(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution,
         exception: Exception): Unit = ()

@@ -1,9 +1,9 @@
 package org.apache.spark
 
 /** Driver-side drain of the shared listener bus — `listenerBus` is
-  * `private[spark]`, so the bench/battery/test callers that need an exact
-  * post-action listener read (per-query metric attribution, segment-law
-  * flag deltas) reach it through this shim instead of a fixed
+  * `private[spark]`, so callers that need an exact post-action listener
+  * read ([[graft.obs.RunRecorder.measure]], the perfbench tracer, specs)
+  * reach it through this shim instead of a fixed
   * `Thread.sleep`, which under a loaded host delivers events late and
   * made the segment-law end-to-end pin flaky (ADVICE r15). SQL execution
   * listeners (`ExecutionListenerBus`) ride the same bus, so one drain

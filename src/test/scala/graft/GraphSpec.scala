@@ -78,23 +78,16 @@ class GraphSpec extends SparkSpec {
     val est = edges.select(col("a"), col("b")).queryExecution
       .optimizedPlan.stats.sizeInBytes
     assert(est > Graph.LocalMaxBytes, s"fixture must overestimate, got $est")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val rec = graft.obs.RunRecorder.install(spark)
     try {
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
-      val labels = Graph.connectedComponents(edges, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      val (labels, d) = rec.measure(Graph.connectedComponents(edges, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       // one chain 0..12 → comp 0 everywhere
       assert(labels == (0L to 12L).map(_ -> 0L).toMap, s"got $labels")
       // materialize+count, driver collect, label parallelize-collect — the
       // loop tier's per-round jobs (≥2 rounds × join/count) would exceed this
-      assert(jobs.get() <= 4, s"expected the local tier's ≤4 jobs, ran ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(d.jobs <= 4, s"expected the local tier's ≤4 jobs, ran ${d.jobs}")
+    } finally rec.close()
   }
 
   test("BlockedVar recursion plan is UDF-free with distributed components") {

@@ -20,7 +20,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_SCALE_DOCS",
     "SPARK_GRAFT_SCALE_EVENTS",
     "SPARK_GRAFT_SCALE_ANN",
-    "SPARK_GRAFT_STAGE_METRICS",
     "dynamic@BenchScale.scala")
 
   /** `line` with its `//` comment removed (a `//` inside a string literal
@@ -73,6 +72,14 @@ class KnobInventorySpec extends AnyFunSuite {
       "new knobs: add them to the allowlist only if a bench or spec shows they earn their keep")
     assert(Allowlist -- found === Set.empty[String],
       "allowlisted knobs no longer read: drop them from the allowlist")
+  }
+
+  test("graft.obs.RunRecorder is the only src/main listener registration") {
+    val Register = """addSparkListener|listenerManager\s*\.\s*register""".r
+    val registering = mainSources.filter(p => Register.findFirstIn(code(p)).isDefined)
+      .map(p => Paths.get("src/main/scala").relativize(p).toString)
+    assert(registering === Seq("graft/obs/RunRecorder.scala"),
+      "metrics listeners belong in the one run recorder")
   }
 
   test("the scanner sees env, property and conf reads but not comments") {

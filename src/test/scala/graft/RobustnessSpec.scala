@@ -13,7 +13,8 @@ class RobustnessSpec extends SparkSpec {
     val qs: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "good" -> ((s, _) => { import s.implicits._; Seq(1, 2, 3).toDF("x") }),
       "broken" -> ((s, _) => s.read.parquet("/nonexistent/graft/no_such_dir")))
-    val out = Bench.runQueries(spark, "unused", qs)
+    val rec = graft.obs.RunRecorder.install(spark)
+    val out = try Bench.runQueries(rec, "unused", qs) finally rec.close()
     val byName = out.map(r => r.name -> r.err).toMap
     assert(byName("good").isEmpty, "working query must carry no error")
     assert(byName("broken").isDefined, "broken query must surface its error class")
@@ -31,60 +32,68 @@ class RobustnessSpec extends SparkSpec {
       "gate-scale exchanges sit below the records floor and never flag")
     assert(!SegmentLaw.flag(999999L, 8000, 8000),
       "records below the 1M floor never flag regardless of shape")
-    // end to end through the bench listener: a deliberately micro-segmented
+    // end to end through the run recorder: a deliberately micro-segmented
     // exchange (64 maps x 4096 reduces for 1.1M rows ~ 4 records/segment)
     // raises exactly the warning; a healthy exchange of the same rows does
-    // not. The listener attributes by global counter delta, same as the
-    // bench's per-query snapshot.
-    Bench.installProbe(spark)
-    def flagsAfter(body: => Unit): Long = {
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
-      val before = Bench.segmentFlagTotal
-      body
-      // listener delivery is async — drain the bus (ADVICE r15: the fixed
-      // 1 s sleep was flaky under a loaded executor) before reading
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
-      Bench.segmentFlagTotal - before
-    }
-    val healthy = flagsAfter {
-      spark.range(0, 1100000, 1, 64).repartition(8)
-        .write.mode("overwrite").format("noop").save()
-    }
-    assert(healthy == 0L, s"healthy exchange flagged $healthy times")
-    val sick = flagsAfter {
-      spark.range(0, 1100000, 1, 64)
-        .repartition(4096, org.apache.spark.sql.functions.col("id"))
-        .write.mode("overwrite").format("noop").save()
-    }
-    assert(sick >= 1L, "micro-segmented exchange must raise the warning")
-    // the stage probe's coalesced-read blind spot, now covered by the plan
-    // scan (VERDICT r15 #3): a PLANNER exchange at a pathological width is
-    // read back through AQE's coalescer, so the reading stage's task count
-    // looks healthy — only the executed plan knows the exchange wrote
-    // map_tasks × 4096 micro-segments. distinct() over unique ids keeps
-    // every row through the partial aggregate, so 1.1M records cross.
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val coalescedSick = flagsAfter {
-      spark.conf.set("spark.sql.shuffle.partitions", "4096")
-      // mod keeps keys NON-unique (a distinct over provably-unique range
-      // ids optimizes the whole exchange away) while each map partition's
-      // key slice stays internally unique, so the partial aggregate passes
-      // ~all 1.1M records into the 64 × 4096-segment exchange
-      try spark.range(0, 1100000, 1, 64)
-        .select((org.apache.spark.sql.functions.col("id") % 550000L).as("k"))
-        .distinct()
-        .write.mode("overwrite").format("noop").save()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
-    }
-    assert(coalescedSick >= 1L,
-      "micro-segmented exchange behind a coalesced read must raise the warning")
+    // not. The recorder attributes by a bus drain around each body.
+    val rec = graft.obs.RunRecorder.install(spark)
+    try {
+      def flagsAfter(body: => Unit): graft.obs.RunDelta = rec.measure(body)._2
+      val healthy = flagsAfter {
+        spark.range(0, 1100000, 1, 64).repartition(8)
+          .write.mode("overwrite").format("noop").save()
+      }
+      assert(healthy.segmentFlags + healthy.segmentFlagsPlan == 0L,
+        s"healthy exchange flagged: $healthy")
+      val sick = flagsAfter {
+        spark.range(0, 1100000, 1, 64)
+          .repartition(4096, org.apache.spark.sql.functions.col("id"))
+          .write.mode("overwrite").format("noop").save()
+      }
+      assert(sick.segmentFlags >= 1L,
+        "micro-segmented exchange must raise the stage-view warning")
+      // the stage probe's coalesced-read blind spot, now covered by the plan
+      // scan (VERDICT r15 #3): a PLANNER exchange at a pathological width is
+      // read back through AQE's coalescer, so the reading stage's task count
+      // looks healthy — only the executed plan knows the exchange wrote
+      // map_tasks × 4096 micro-segments. distinct() over unique ids keeps
+      // every row through the partial aggregate, so 1.1M records cross.
+      val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+      val coalescedSick = flagsAfter {
+        spark.conf.set("spark.sql.shuffle.partitions", "4096")
+        // mod keeps keys NON-unique (a distinct over provably-unique range
+        // ids optimizes the whole exchange away) while each map partition's
+        // key slice stays internally unique, so the partial aggregate passes
+        // ~all 1.1M records into the 64 × 4096-segment exchange
+        try spark.range(0, 1100000, 1, 64)
+          .select((org.apache.spark.sql.functions.col("id") % 550000L).as("k"))
+          .distinct()
+          .write.mode("overwrite").format("noop").save()
+        finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+      }
+      assert(coalescedSick.segmentFlagsPlan >= 1L,
+        "micro-segmented exchange behind a coalesced read must raise the plan-view warning")
+    } finally rec.close()
+  }
+
+  test("a plan scan that throws is counted and reported, not swallowed") {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    // executedPlan on an unresolvable plan throws inside the listener
+    val qe = spark.sessionState.executePlan(UnresolvedRelation(Seq("graft_no_such_table")))
+    val rec = graft.obs.RunRecorder.install(spark)
+    try {
+      val (_, d) = rec.measure(rec.planListener.onSuccess("test", qe, 0L))
+      assert(d.planScanErrors == 1L, s"got $d")
+      assert(d.segmentFlagsPlan == 0L)
+    } finally rec.close()
   }
 
   test("Bench.outliers flags unexplained walls and only those") {
     import graft.Bench.QueryRun
+    import graft.obs.{RunDelta, StageRow, Work}
     def q(name: String, sec: Double, taskMs: Long, cpuMs: Long,
-          gcMs: Long = 0L) =
-      QueryRun(name, sec, None, 0L, taskMs, cpuMs, gcMs, 0L, 0L)
+          gcMs: Long = 0L) = QueryRun(name, None,
+      RunDelta(sec, stageRows = Vector(StageRow(0, name, Work(taskMs, cpuMs, gcMs)))))
     val healthy = q("healthy", 4.0, 100000L, 95000L)        // saturated compute
     val stalled = q("stalled", 10.0, 8000L, 7500L)          // wall ≫ task floor
     val blocked = q("blocked", 10.0, 200000L, 20000L)       // tasks I/O-blocked

@@ -1,6 +1,8 @@
 package graft
+import graft.core.SessionMemo
 import graft.obs.{RunDelta, RunRecorder, Work}
 import graft.obs.RunRecorder.{f3, obj}
+import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
@@ -48,13 +50,9 @@ object Bench {
   }
 
   /** Run queries in sorted name order (per-query times stay comparable
-    * round to round regardless of how the map hashes). */
-  def runQueries(rec: RunRecorder, sfDir: String,
-                 queries: Map[String, (SparkSession, String) => DataFrame])
-      : Seq[QueryRun] =
-    queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      runOne(rec, sfDir, name, fn)
-    }
+    * round to round regardless of registry order). */
+  def runQueries(rec: RunRecorder, sfDir: String, queries: Seq[QueryDef]): Seq[QueryRun] =
+    queries.sortBy(_.name).map(q => runOne(rec, sfDir, q.name, q.build))
 
   /** Queries whose wall cannot be explained by their own work — either the
     * wall exceeds 3× the perfectly-parallel task-time floor (scheduler /
@@ -72,6 +70,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // resolve the names before starting Spark: an unknown name throws and
+    // names itself instead of running nothing and reporting 0 failed
+    val selected = if (args.nonEmpty) args.toSeq.map(SparkEntry(_)) else SparkEntry.all
     val cpus = GraftSession.envCpus(4)
     val spark = GraftSession.local(cpus)
     val rec = RunRecorder.install(spark)
@@ -95,11 +96,8 @@ object Bench {
     // memo builds are a one-time session cost — measure them as their own
     // line item so per-query numbers stay order-stable round to round
     val (_, memo) = rec.measure {
-      try SparkEntry.prewarmMemos(spark, sfDir) catch { case _: Throwable => () }
+      try SparkEntry.prewarm(spark, sfDir) catch { case _: Throwable => () }
     }
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.contains).toMap
-      else SparkEntry.queries
     val swept = runQueries(rec, sfDir, selected)
     // re-run unexplained outliers once at the END of the battery and keep
     // BOTH samples: a transient host spike re-runs clean (environment); a
@@ -108,7 +106,7 @@ object Bench {
     val rerunSet = outliers(swept, cpus).map(_.name).toSet
     val results = swept.map { r =>
       if (rerunSet.contains(r.name))
-        r.copy(rerunSec = Some(runOne(rec, sfDir, r.name, selected(r.name)).sec))
+        r.copy(rerunSec = Some(runOne(rec, sfDir, r.name, SparkEntry(r.name).build).sec))
       else r
     }
     // fixed-work calibration probe (VERDICT r15 #8): identical committed
@@ -154,7 +152,7 @@ object Bench {
     val usedMb = heapMb
     val storageMb = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum >> 20
-    SparkEntry.clearMemos()
+    SessionMemo.clear()
     System.gc()
     val memoFreedMb = math.max(0L, usedMb - heapMb)
     val w = results.map(_.m.work).foldLeft(Work())(_ + _)

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result ([[SparkEntry.all]]) →
+  * parquet, plus oracle_sql.json, for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -17,9 +17,9 @@ object Verify {
     // RED row in the correctness artifact instead of a silent omission
     // (round 6 lost 8 queries that way).
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val declared = SparkEntry.queries.keys.filter(only).toSeq
+    val declared = SparkEntry.all.map(_.name).filter(only)
     declared.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try SparkEntry(name).build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = (e.getClass.getSimpleName + ": " +
@@ -49,8 +49,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.all
+      .map(d => s"${q(d.name)}: ${q(d.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))

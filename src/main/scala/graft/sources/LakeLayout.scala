@@ -54,8 +54,8 @@ object LakeLayout {
   }
 
   /** Delete warehouse directories left by DEAD graft sessions. Memo table
-    * names carry their creator's pid (`..._p<pid>`, [[graft.SparkEntry
-    * .memoTableName]]) precisely so concurrent sessions sharing one
+    * names carry their creator's pid (`..._p<pid>`, [[graft.core.SessionMemo
+    * .tableName]]) precisely so concurrent sessions sharing one
     * warehouse never touch each other's live tables — which means a dir
     * whose pid is no longer running is garbage by construction (its
     * session can never read it again; a recycled OS pid at worst defers

@@ -16,8 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Both operate on a frame with columns (event_id LONG, ts TIMESTAMP,
   * user_id LONG, event_type STRING, value DOUBLE) whether it comes from
-  * `readStream` or a static DataFrame (the batch queries in SparkEntry stay
-  * the oracle for correctness; these are the streaming twins).
+  * `readStream` or a static DataFrame (the batch `events_*` queries in
+  * [[graft.queries.EventsQueries]] stay the oracle for correctness; these
+  * are the streaming twins).
   */
 object EventStreams {
 

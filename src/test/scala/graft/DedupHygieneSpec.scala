@@ -28,7 +28,7 @@ class DedupHygieneSpec extends SparkSpec {
     // suites sharing this JVM may have prewarmed bucketed memos (legitimate
     // session-scoped caches); drop them so the isEmpty assert below tests
     // THESE operators, not suite ordering
-    SparkEntry.clearMemos()
+    graft.core.SessionMemo.clear()
     val d = docs(6)
     Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.1, 100).count()
     Dedup.minhashCandidates(d, "doc_id", "text").count()

@@ -82,6 +82,14 @@ class KnobInventorySpec extends AnyFunSuite {
       "metrics listeners belong in the one run recorder")
   }
 
+  test("graft.core.SessionMemo is the only src/main holder of SparkSession-keyed state") {
+    val Keyed = """\b(?:TrieMap|Map)\s*(?:\.empty)?\s*\[[^\]]*SparkSession""".r
+    val holders = mainSources.flatMap(p => Keyed.findAllMatchIn(code(p))
+      .map(_ => Paths.get("src/main/scala").relativize(p).toString))
+    assert(holders === Seq("graft/core/SessionMemo.scala"),
+      "session-scoped state belongs in the one session memo")
+  }
+
   test("the scanner sees env, property and conf reads but not comments") {
     val tmp = Files.createTempFile("knobs", ".scala")
     try {

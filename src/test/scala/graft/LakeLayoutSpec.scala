@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.SessionMemo
 import graft.sources.LakeLayout
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -57,8 +58,8 @@ class LakeLayoutSpec extends SparkSpec {
     // the memo table materializes via LakeLayout and the per-series window
     // consumes the bucketed scan
     try {
-      SparkEntry.clearMemos()
-      val df = SparkEntry.queries("ts_diff")(spark, sfDir)
+      SessionMemo.clear()
+      val df = SparkEntry("ts_diff").build(spark, sfDir)
       val out = df.collect().map(_.toString).sorted
       assert(out.toSeq === ref.toSeq, "results must be layout-invariant")
       val plan = df.queryExecution.executedPlan.toString
@@ -67,14 +68,14 @@ class LakeLayoutSpec extends SparkSpec {
       // the frame built directly on the memo pays no exchange for a
       // series-keyed window
       val memoFrame = LakeLayout.readBucketed(spark,
-        SparkEntry.memoTableName(spark, sfDir, "orders"))
+        SessionMemo.tableName(spark, sfDir, "orders"))
       val win = memoFrame.withColumn("d",
         col("y") - org.apache.spark.sql.functions.lag("y", 1).over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("series_id").orderBy("ds")))
       assert(exchanges(win) === 0,
         "series-keyed window over the bucketed memo must plan no exchange")
-    } finally SparkEntry.clearMemos()
+    } finally SessionMemo.clear()
   }
 
   test("self-join on the bucket key plans no exchange on either side") {

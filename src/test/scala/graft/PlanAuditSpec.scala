@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.QueryDef
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -40,9 +41,9 @@ class PlanAuditSpec extends SparkSpec {
   }.flatten
 
   test("no declared query plans an all-pairs join over raw relations") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = SparkEntry.all.sortBy(_.name).flatMap { case QueryDef(name, build, _) =>
       try {
-        val bad = offences(fn(spark, sfDir).queryExecution.sparkPlan)
+        val bad = offences(build(spark, sfDir).queryExecution.sparkPlan)
         if (bad.nonEmpty && !allowed.contains(name)) Some(s"$name: ${bad.mkString(", ")}")
         else None
       } catch {
@@ -108,7 +109,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("the series build prunes the fact scan to the referenced columns") {
-    val plan = SparkEntry.queries("ts_build_monthly")(spark, sfDir)
+    val plan = SparkEntry("ts_build_monthly").build(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("o_orderdate") && plan.contains("o_totalprice"))
     assert(!plan.contains("o_comment") && !plan.contains("o_clerk"),

@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.SessionMemo
+
 /** Executed-shuffle and job-count pins for the priciest committed queries:
   * wall-time regressions on a shared VM are noise (the r9/r10 contention
   * records), but the number of shuffle-map stages a query MATERIALIZES is
@@ -76,15 +78,15 @@ class PlanPinSpec extends SparkSpec {
     // deterministic memo state regardless of which suites ran first in
     // this JVM: build the shared series memos up front so their stages
     // never attribute to whichever pinned query runs first
-    SparkEntry.clearMemos()
-    SparkEntry.prewarmMemos(spark, sfDir)
+    SessionMemo.clear()
+    SparkEntry.prewarm(spark, sfDir)
     val rec = graft.obs.RunRecorder.install(spark)
     // shuffle stages are completed stages that actually WROTE shuffle
     // bytes — the marker for "an exchange materialized data" (a 0-byte map
     // stage costs nothing at scale, so the bytes-moved formulation is the
     // signal worth pinning anyway)
     val counts = try pins.map { case (name, (stageBound, jobBound)) =>
-      val (_, d) = rec.measure(SparkEntry.queries(name)(spark, sfDir)
+      val (_, d) = rec.measure(SparkEntry(name).build(spark, sfDir)
         .write.mode("overwrite").format("noop").save())
       (name, d.shuffleStages, stageBound, d.jobs, jobBound)
     } finally rec.close()
@@ -97,18 +99,18 @@ class PlanPinSpec extends SparkSpec {
     assert(over.isEmpty, over.mkString("; "))
   }
 
-  test("clearMemos releases every session a memo was built in") {
-    // a resident service opens a session per tenant; after clearMemos no
-    // memo map (the per-session token, lock and warehouse-sweep maps
-    // included) may keep that session reachable
+  test("SessionMemo.clear releases every session a memo was built in") {
+    // a resident service opens a session per tenant; after clear no memo
+    // entry (the per-session token and warehouse-sweep entry included)
+    // may keep that session reachable
     val tenant = spark.newSession()
     try {
-      SparkEntry.queries("ts_acf")(tenant, sfDir).collect()
-      assert(SparkEntry.memoSessions.contains(tenant), "fixture must build a memo")
-      SparkEntry.clearMemos()
-      assert(!SparkEntry.memoSessions.contains(tenant),
+      SparkEntry("ts_acf").build(tenant, sfDir).collect()
+      assert(SessionMemo.sessions.contains(tenant), "fixture must build a memo")
+      SessionMemo.clear()
+      assert(!SessionMemo.sessions.contains(tenant),
         "a cleared memo layer still holds the tenant session")
-    } finally SparkEntry.clearMemos()
+    } finally SessionMemo.clear()
   }
 
   test("localCheckpointAdvertised fails fast on a lineage hashing different keys") {

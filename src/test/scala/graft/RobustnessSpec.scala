@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Transforms, TransformStack}
+import graft.queries.QueryDef
 import graft.results.PipelineStore
 import org.apache.spark.sql.functions._
 
@@ -10,9 +11,9 @@ class RobustnessSpec extends SparkSpec {
 
   test("Bench.runQueries records a per-query error instead of a fast success") {
     import spark.implicits._
-    val qs: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "good" -> ((s, _) => { import s.implicits._; Seq(1, 2, 3).toDF("x") }),
-      "broken" -> ((s, _) => s.read.parquet("/nonexistent/graft/no_such_dir")))
+    val qs = Seq(
+      QueryDef("good", (s, _) => { import s.implicits._; Seq(1, 2, 3).toDF("x") }, "SELECT 1"),
+      QueryDef("broken", (s, _) => s.read.parquet("/nonexistent/graft/no_such_dir"), "SELECT 1"))
     val rec = graft.obs.RunRecorder.install(spark)
     val out = try Bench.runQueries(rec, "unused", qs) finally rec.close()
     val byName = out.map(r => r.name -> r.err).toMap

@@ -118,10 +118,10 @@ class SqlSurfaceSpec extends SparkSpec {
     // (ts_ar3_dynamic = AR(3) OLS + Recursive.dynamicForecast, future slice);
     // both round to 6dp — solver noise between the MLlib normal path and
     // graft_ols_fit's elimination is ~1e-12 on betas, far inside rounding
-    val viaSql = SparkEntry.queries("ts_sql_forecast")(spark, sfDir)
+    val viaSql = SparkEntry("ts_sql_forecast").build(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2)))
       .sortBy(t => (t._1, t._2))
-    val viaApi = SparkEntry.queries("ts_ar3_dynamic")(spark, sfDir)
+    val viaApi = SparkEntry("ts_ar3_dynamic").build(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2)))
       .sortBy(t => (t._1, t._2))
     assert(viaSql.length === 12)

@@ -4,8 +4,8 @@ import graft.operators.Transforms
 import org.apache.spark.sql.functions._
 
 /** ts_stl's second, independent pin (its first is the full closed-form
-  * DuckDB oracle — the stl* SQL generators in SparkEntry): a driver-side
-  * reference STL — re-derived from Cleveland et al. (1990) with an
+  * DuckDB oracle — the stl* SQL generators in [[graft.queries.TsQueries]]):
+  * a driver-side reference STL — re-derived from Cleveland et al. (1990) with an
   * independently-arranged LOWESS (centered weighted moments vs the
   * engine's raw-sum normal equations) — pinned against the distributed
   * `Transforms.stl` at 1e-6 relative over the bench fixture's monthly

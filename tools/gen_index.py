@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Generate INDEX.md — the one-page operator → query → spec → scale-point
 map (VERDICT r11 ask #8). The operator inventory lives HERE as data; every
-query name is validated against SparkEntry.queries / oracleSql, specs are
+query name is validated against the query registry (the `QueryDef("…"`
+declarations in src/main/scala/graft/queries/*.scala, which `SparkEntry.all`
+concatenates; a name declared twice fails the generator), specs are
 discovered by grepping the test sources for the operator's impl objects,
 and scale points are pulled from BENCH_SCALE.json — so the page cannot
 drift silently: a renamed query or deleted spec fails the generator.
@@ -17,7 +19,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # (family, operator, impl file(s), [query names], [battery op names])
-# Query names must exist in SparkEntry.queries. "sbt" in the query list
+# Query names must be declared as a QueryDef. "sbt" in the query list
 # marks operators whose correctness proof is a spec pin (the documented
 # iterative-optimizer boundary), not a SQL oracle.
 OPS = [
@@ -217,14 +219,22 @@ def scala(path):
     return open(os.path.join(ROOT, path)).read()
 
 
+def declared_queries():
+    """Names of every QueryDef in the registry's family files; a name
+    declared twice is an error (SparkEntry.all would refuse it too)."""
+    qdir = os.path.join(ROOT, "src/main/scala/graft/queries")
+    names = []
+    for f in sorted(os.listdir(qdir)):
+        if f.endswith(".scala"):
+            names += re.findall(r'QueryDef\("([a-z0-9_]+)"', scala(os.path.join(qdir, f)))
+    dups = sorted({n for n in names if names.count(n) > 1})
+    if dups:
+        sys.exit("duplicate query names: " + ", ".join(dups))
+    return set(names)
+
+
 def main():
-    entry = scala("src/main/scala/graft/SparkEntry.scala")
-    qblock = entry[entry.index("def queries"):entry.index("def oracleSql")]
-    # only top-level map entries ("name" -> ((s, d) => …)); inner string
-    # maps (model registries, strata labels) don't take a (s, d) lambda
-    queries = set(re.findall(r'"([a-z0-9_]+)"\s*->\s*\(\(', qblock))
-    oblock = entry[entry.index("def oracleSql"):]
-    oracles = set(re.findall(r'"([a-z0-9_]+)"\s*->', oblock))
+    queries = declared_queries()
     bench = json.load(open(os.path.join(ROOT, "BENCH_SCALE.json")))
     series_pts = bench.get("points", [])
     corpus_pts = bench.get("corpus_points", [])
@@ -263,14 +273,16 @@ def main():
         "# INDEX — operator → query → spec → scale point",
         "",
         "GENERATED by `tools/gen_index.py` — do not edit by hand. Every query",
-        "name is validated against `SparkEntry.queries` (the generator fails on",
-        "a stale row), `oracle` means the query has a DuckDB SQL oracle in",
-        "`SparkEntry.oracleSql` (the driver's dual-SF hash gate), `sbt` marks",
-        "the documented iterative-optimizer boundary where correctness is a",
-        "ScalaTest parity pin instead. Scale cells quote the LARGEST measured",
-        "battery point per op from `BENCH_SCALE.json`.",
+        "name is validated against the query registry, `SparkEntry.all`: one",
+        "`QueryDef(name, build, oracle)` per query in its family file under",
+        "`src/main/scala/graft/queries/` (the generator fails on a stale row",
+        "or a duplicate name). Every query carries its DuckDB SQL oracle (the",
+        "dual-SF hash gate); `sbt` marks the documented iterative-optimizer",
+        "boundary where correctness is a ScalaTest parity pin instead. Scale",
+        "cells quote the LARGEST measured battery point per op from",
+        "`BENCH_SCALE.json`.",
         "",
-        "| family | operator | impl | queries (oracle?) | specs | largest scale point |",
+        "| family | operator | impl | queries | specs | largest scale point |",
         "|---|---|---|---|---|---|",
     ]
     for fam, op, impl, qs, bops in OPS:
@@ -280,9 +292,9 @@ def main():
                 qcells.append("sbt-pinned")
                 continue
             if q not in queries:
-                errors.append(f"{op}: query '{q}' not in SparkEntry.queries")
+                errors.append(f"{op}: query '{q}' is not a declared QueryDef")
                 continue
-            qcells.append(q + ("" if q in oracles else " (rows-only)"))
+            qcells.append(q)
         hits = spec_hits(impl, qs)
         lines.append("| %s | %s | `%s` | %s | %s | %s |" % (
             fam, op, impl, ", ".join(qcells),

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   */
 final case class Forecaster(
     frame: DataFrame,
-    results: Option[DataFrame] = None,
+    bank: Option[ResultsStore.Banked] = None,
     estimator: String = "mlr",
     params: Map[String, Double] = Map.empty,
     normalizer: String = "none",
@@ -145,8 +145,7 @@ final case class Forecaster(
       if (testLength >= Conformal.minTestLength(cilevel))
         Conformal.withIntervals(scored, "yhat", cilevel)
       else scored
-    val banked = ResultsStore.bank(withCis, name)
-    copy(results = Some(results.fold(banked)(r => ResultsStore.union(r, banked))))
+    copy(bank = Some(bank.fold(ResultsStore.Banked.of(withCis, name))(_.add(withCis, name))))
   }
 
   private def scoreCurrent(): DataFrame = {
@@ -252,18 +251,34 @@ final case class Forecaster(
   }
 
   /** `tune`: grid-search the CURRENT estimator's hyperparameters by k-fold
-    * rolling-origin CV (each candidate re-runs the full scoring path on the
-    * fold's frame) and keep the winner's params. */
+    * rolling-origin CV and keep the winner's params. The closed-form
+    * linear family (see [[linearTune]]) scores the whole grid from fold
+    * moments in two data passes ([[graft.eval.Evaluation.gridSearchLinear]]);
+    * everything else re-runs the full scoring path on each fold's frame per
+    * candidate ([[graft.eval.Evaluation.gridSearchDetailed]]). */
   def tune(grid: Seq[Map[String, Double]], k: Int = 3, h: Int = 12,
            metric: String = "rmse", parallelism: Int = 1): Forecaster = {
     import graft.eval.Evaluation
-    val fitWith: Map[String, Double] => Evaluation.ModelFn = ps => { flagged =>
-      copy(frame = flagged, params = ps, testLength = h).scoreCurrent()
-    }
-    val best = Evaluation.gridSearch(frame.filter(!col(IsFuture)), grid, fitWith,
-      k, h, metric, parallelism).head._1
-    copy(params = best)
+    val observed = frame.filter(!col(IsFuture))
+    val cells =
+      if (linearTune(grid))
+        Evaluation.gridSearchLinear(observed, featureCols, estimator, grid, k, h, metric)
+      else {
+        val fitWith: Map[String, Double] => Evaluation.ModelFn = ps => { flagged =>
+          copy(frame = flagged, params = ps, testLength = h).scoreCurrent()
+        }
+        Evaluation.gridSearchDetailed(observed, grid, fitWith, k, h, metric, parallelism)
+      }
+    copy(params = Evaluation.rank(cells, metric).head._1)
   }
+
+  /** Whether [[tune]] takes the one-pass moments path: `mlr` or `ridge`
+    * with no normalizer, no AR features (their recursive scoring needs the
+    * generic path) and only `alpha` in the grid. Decided from the inputs
+    * alone. */
+  private[graft] def linearTune(grid: Seq[Map[String, Double]]): Boolean =
+    Set("mlr", "ridge")(estimator) && normalizer == "none" &&
+      FeatureOps.arCols(frame).isEmpty && grid.forall(_.keySet.subsetOf(Set("alpha")))
 
   /** `ingest_grid` with no argument (GridGenerator default): the registered
     * or shipped default grid for the CURRENT estimator, NUMERIC AXES ONLY,
@@ -352,12 +367,15 @@ final case class Forecaster(
   }
 
   // ---- exports --------------------------------------------------------
+  /** The banked results frame (model, series_id, ds, y, yhat, lower,
+    * upper, is_test, is_future), if any model is banked. */
+  def results: Option[DataFrame] = bank.map(_.frame)
+
   private def banked: DataFrame = results.getOrElse(
     throw new IllegalStateException("no model banked yet — call manualForecast first"))
 
-  def modelNames: Seq[String] =
-    results.map(_.select("model").distinct().collect().map(_.getString(0)).toSeq.sorted)
-      .getOrElse(Nil)
+  /** Banked model names, sorted — read from the bank, no Spark job. */
+  def modelNames: Seq[String] = bank.fold(Seq.empty[String])(_.models.sorted)
 
   /** `export('model_summaries')`. */
   def exportModelSummaries(metricNames: Seq[String] = Seq("rmse", "mae", "smape", "r2")): DataFrame =
@@ -380,5 +398,5 @@ final case class Forecaster(
 
   /** `pop(*models)`. */
   def pop(models: String*): Forecaster =
-    copy(results = results.map(ResultsStore.pop(_, models: _*)))
+    copy(bank = bank.map(_.pop(models: _*)))
 }

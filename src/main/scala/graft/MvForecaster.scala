@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
 final case class MvForecaster(
     frame: DataFrame,
     seriesIds: Seq[String],
-    results: Option[DataFrame] = None,
+    bank: Option[ResultsStore.Banked] = None,
     lags: Int = 1,
     horizon: Int = 0,
     testLength: Int = 0,
@@ -110,8 +110,7 @@ final case class MvForecaster(
       if (testLength >= graft.operators.Conformal.minTestLength(cilevel))
         graft.operators.Conformal.withIntervals(scored, "yhat", cilevel)
       else scored
-    val banked = ResultsStore.bank(withCis, callMe)
-    copy(results = Some(results.fold(banked)(r => ResultsStore.union(r, banked))))
+    copy(bank = Some(bank.fold(ResultsStore.Banked.of(withCis, callMe))(_.add(withCis, callMe))))
   }
 
   /** The estimation core shared by [[manualForecast]] and [[backtest]]:
@@ -180,7 +179,7 @@ final case class MvForecaster(
       "tune_test_forecast needs a holdout — call setTestLength(n) first")
     val lower = graft.functions.Metrics.lowerIsBetter.getOrElse(metricName, true)
     val scores = lagsGrid.map { l =>
-      val cand = copy(lags = l, results = None).manualForecast("__cand")
+      val cand = copy(lags = l, bank = None).manualForecast("__cand")
       l -> cand.optimizeOn("__cand", metricName, optimizeHow, optimizeWeights)
     }
     val valid = scores.filterNot(s => s._2.isNaN || s._2.isInfinite)
@@ -199,6 +198,9 @@ final case class MvForecaster(
     copy(bestModel = Some(ordered.select("model").first().getString(0)))
   }
 
+  /** The banked results frame, if any model is banked. */
+  def results: Option[DataFrame] = bank.map(_.frame)
+
   private def banked: DataFrame = results.getOrElse(
     throw new IllegalStateException("no model banked yet — call manualForecast first"))
 
@@ -209,9 +211,8 @@ final case class MvForecaster(
   /** `export('lvl_fcsts')`. */
   def exportForecasts(): DataFrame = ResultsStore.exportForecasts(banked, modelNames)
 
-  def modelNames: Seq[String] =
-    results.map(_.select("model").distinct().collect().map(_.getString(0)).toSeq.sorted)
-      .getOrElse(Nil)
+  /** Banked model names, sorted — read from the bank, no Spark job. */
+  def modelNames: Seq[String] = bank.fold(Seq.empty[String])(_.models.sorted)
 
   /** `optimize_on` collapse of a banked model's per-series metric rows —
     * defaults to the rule recorded by [[setOptimizeOn]]. */
@@ -243,7 +244,7 @@ final case class MvForecaster(
     seriesIds.map { sid =>
       sid -> Forecaster(
         frame.filter(col(SeriesId) === sid),
-        results = results.map(_.filter(col(SeriesId) === sid)),
+        bank = bank.map(_.filter(col(SeriesId) === sid)),
         testLength = testLength)
     }.toMap
 

@@ -279,9 +279,13 @@ object SeriesFrame {
     * Adds `is_test: BOOLEAN`. The temporal split that backs `test()`
     * (/root/reference/src/scalecast/_Forecaster_parent.py:1569-1649). */
   def withTestFlag(df: DataFrame, testLength: Int): DataFrame = {
-    // observed rows strictly after this one; horizon rows are never test rows
-    val after = count(when(!col(IsFuture), lit(1)))
-      .over(w.rowsBetween(1, Window.unboundedFollowing))
+    // observed rows strictly after this one (the series' observed count
+    // minus the running count — one Window operator, linear per series,
+    // where a (1, unboundedFollowing) frame re-counts the tail per row);
+    // horizon rows are never test rows
+    val observed = count(when(!col(IsFuture), lit(1)))
+    val after = observed.over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)) -
+      observed.over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     df.withColumn("is_test", !col(IsFuture) && after < testLength)
   }
 }

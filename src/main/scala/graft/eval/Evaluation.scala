@@ -2,8 +2,11 @@ package graft.eval
 
 import graft.core.SeriesFrame._
 import graft.functions.Metrics
+import graft.models.Ols
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 /** Validation schemes: temporal test split, rolling-origin cross-validation,
   * and backtesting (SURVEY §2.7). MLlib's CrossValidator splits randomly and
@@ -169,16 +172,94 @@ object Evaluation {
       }.getOrElse(GridCell(params, Nil, Double.NaN))
     }
 
+  /** [[gridSearchDetailed]] for the closed-form linear family — `algo`
+    * `mlr` or `ridge` (grid keys ⊆ {alpha}), no normalizer, no AR
+    * features — in two data passes whatever the grid size (two Spark jobs
+    * on a one-partition frame; under AQE every exchange in the frame's
+    * lineage adds one per pass), where the generic path runs k fits plus
+    * one collect per cell:
+    *  1. one aggregate over a `row_number`-from-the-back column `rb` per
+    *     series computes every fold's train moments at once (fold i trains
+    *     on rb > (i+1)·h and validates on rb in (i·h, (i+1)·h], the
+    *     [[rollingOriginCV]] slices);
+    *  2. every (fold, cell) is solved on the driver ([[Ols.Moments]]);
+    *  3. one more job scores every fold's validation slice for every cell,
+    *     with the registry's metric aggregate per (series, fold, cell).
+    * Same cells, same order, same NaN-ranks-last policy for a singular or
+    * empty fold as the generic path; TuneParitySpec pins the fold metrics
+    * to MLlib-fitted [[gridSearchDetailed]] at 1e-9. */
+  def gridSearchLinear(frame: DataFrame, feats: Seq[String], algo: String,
+                       grid: Seq[Map[String, Double]], k: Int, h: Int,
+                       metricName: String = "rmse"): Seq[GridCell] = {
+    require(algo == "mlr" || algo == "ridge", s"no closed-form tune for '$algo'")
+    val metric = Metrics.registry(metricName)
+    val rb = row_number().over(Window.partitionBy(SeriesId).orderBy(col(Ds).desc))
+    val ranked = frame.filter(!col(IsFuture)).withColumn("_rb", rb)
+    val complete = (col(Y) +: feats.map(col)).map(_.isNotNull).reduce(_ && _)
+    val width = Ols.momentWidth(feats.size)
+    val aggs = (0 until k).flatMap(i =>
+      Ols.momentCols(feats, Some(complete && col("_rb") > (i + 1) * h)))
+    val sums = ranked.agg(aggs.head, aggs.tail: _*).first()
+    // (fold, cell) → fit; a failed solve leaves the cell out of scoring
+    val fits = (0 until k).flatMap { i =>
+      val m = Try(Ols.readMoments(sums, i * width, feats.size))
+      lazy val ols = m.map(_.ols(feats))
+      grid.indices.flatMap { c =>
+        val fit = if (algo == "mlr") ols
+                  else m.map(_.ridge(feats, grid(c).getOrElse("alpha", 1.0)))
+        fit.toOption.map(f => (i, c, f.intercept, f.beta))
+      }
+    }
+    val solved = fits.groupBy(_._2).collect { case (c, fs) if fs.size == k => c }.toSet
+    val byCell: Map[Int, Seq[Double]] =
+      if (solved.isEmpty) Map.empty
+      else {
+        // every fold's solved cells as one literal (cell, intercept, beta)
+        // array, indexed by the row's fold: no join, so no broadcast job
+        val byFold = (0 until k).map(i =>
+          fits.collect { case (`i`, c, b0, beta) if solved(c) => (c, b0, beta.toSeq) })
+        val cell = explode(element_at(typedLit(byFold), col("_fold") + 1))
+        // the OlsModel.transform expression: a null feature poisons to NaN
+        val yhat = feats.zipWithIndex.foldLeft(col("_c._2")) { case (acc, (c, j)) =>
+          acc + coalesce(col(c).cast("double"), lit(Double.NaN)) * element_at(col("_c._3"), j + 1)
+        }
+        ranked.filter(col("_rb") <= k * h)
+          .withColumn("_fold", ((col("_rb") - 1) / h).cast("int"))
+          .withColumn("_c", cell)
+          .withColumn("yhat", yhat)
+          .filter(col("yhat").isNotNull && !isnan(col("yhat")))
+          .groupBy(col(SeriesId), col("_fold"), col("_c._1").as("_cell"))
+          .agg(metric(col(Y), col("yhat")).as("_m"))
+          .groupBy("_cell", "_fold").agg(avg(col("_m")).as("_m"))
+          .collect().toSeq
+          .groupBy(_.getInt(0))
+          .map { case (c, rs) =>
+            // a fold whose every series metric is null fails the cell, as
+            // the generic path's collect does
+            c -> (if (rs.exists(_.isNullAt(2))) Nil
+                  else rs.sortBy(_.getInt(1)).map(_.getDouble(2)))
+          }
+      }
+    grid.indices.map { c =>
+      byCell.get(c).filter(_.nonEmpty) match {
+        case Some(byFold) => GridCell(grid(c), byFold, byFold.sum / byFold.size)
+        case None         => GridCell(grid(c), Nil, Double.NaN)
+      }
+    }
+  }
+
+  /** Cells ranked by mean metric, best first; NaN cells last. */
+  def rank(cells: Seq[GridCell], metricName: String): Seq[(Map[String, Double], Double)] = {
+    val lower = Metrics.lowerIsBetter(metricName)
+    cells.map(c => (c.params, c.mean)).sortBy(s => if (lower) s._2 else -s._2)
+  }
+
   /** Grid search: rank by mean metric, best first. */
   def gridSearch(frame: DataFrame, grid: Seq[Map[String, Double]],
                  fitWith: Map[String, Double] => ModelFn,
                  k: Int, h: Int, metricName: String = "rmse",
-                 parallelism: Int = 1): Seq[(Map[String, Double], Double)] = {
-    val lower = Metrics.lowerIsBetter(metricName)
-    gridSearchDetailed(frame, grid, fitWith, k, h, metricName, parallelism)
-      .map(c => (c.params, c.mean))
-      .sortBy(s => if (lower) s._2 else -s._2)
-  }
+                 parallelism: Int = 1): Seq[(Map[String, Double], Double)] =
+    rank(gridSearchDetailed(frame, grid, fitWith, k, h, metricName, parallelism), metricName)
 
   /** `tune_test_forecast` (/root/reference/src/scalecast/_utils.py:89-142,
     * Forecaster.py:1458-1529): for each named model spec — grid-tune by

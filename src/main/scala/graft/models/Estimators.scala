@@ -5,7 +5,6 @@ import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage, Transformer}
 import org.apache.spark.ml.feature.{MinMaxScaler, RobustScaler, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression, RandomForestRegressor}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** MLlib-backed estimators with the reference's registry semantics
   * (/root/reference/src/scalecast/cfg.py:26-54: mlr/lasso/ridge/elasticnet →
@@ -113,16 +112,18 @@ final case class MllibTsEstimator(
 
   /** Train on observed, non-test, feature-complete rows.
     *
-    * The unregularized linear family with no scaler (`mlr`/`prophet_like`,
-    * `normalizer = "none"`) routes to the closed-form [[OlsModel]] — same
-    * normal-equation math as MLlib's "normal" solver (OlsSpec pins the
-    * coefficients to 1e-8), at ONE moments job instead of ~10 scheduler
-    * round-trips of WeightedLeastSquares instrumentation. Everything else
-    * (regularized, scaled, trees, custom registrations) fits the MLlib
+    * The closed-form linear family with no scaler (`mlr`/`prophet_like` and
+    * `ridge`, `normalizer = "none"`) routes to [[OlsModel]]: the same
+    * normal-equation math as MLlib's WeightedLeastSquares (OlsSpec pins the
+    * coefficients to 1e-8), at ONE moments job instead of MLlib's two jobs
+    * plus driver-side instrumentation. Everything else (lasso, elasticnet,
+    * sgd, scaled variants, trees, custom registrations) fits the MLlib
     * pipeline. */
   def fit(frame: DataFrame): Transformer = algo match {
     case "mlr" | "prophet_like" if normalizer == "none" =>
       OlsModel(Ols.fit(frame, features))
+    case "ridge" if normalizer == "none" =>
+      OlsModel(Ols.fitRidge(frame, features, p("alpha", 1.0)))
     // the reference's svr/mlp (sklearn SVR / MLPRegressor): native
     // driver-fit models with documented optimizer substitutions — see
     // [[Svr]] (ε-SVR dual coordinate descent) and [[MlpNet]] (tanh net,
@@ -141,13 +142,8 @@ final case class MllibTsEstimator(
 
   /** The MLlib pipeline fit, unconditionally — for callers that need the
     * pipeline object itself (stage introspection, parity tests). */
-  def fitMllib(frame: DataFrame): PipelineModel = {
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = features.foldLeft(train0)((f, c) => f.filter(col(c).isNotNull))
-    pipeline().fit(train)
-  }
+  def fitMllib(frame: DataFrame): PipelineModel =
+    pipeline().fit(Ols.trainSlice(frame, features))
 }
 
 object MllibTsEstimator {

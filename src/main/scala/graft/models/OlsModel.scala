@@ -7,16 +7,16 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
 
-/** A fitted closed-form OLS as a first-class `Transformer` — what the
-  * registry's linear family (`mlr`/`prophet_like`, `normalizer = "none"`)
-  * returns from `fit` instead of an MLlib pipeline.
+/** A fitted closed-form linear model as a first-class `Transformer` — what
+  * the registry's linear family (`mlr`/`prophet_like` and `ridge`,
+  * `normalizer = "none"`) returns from `fit` instead of an MLlib pipeline.
   *
-  * Why: `LinearRegression(solver = "normal").fit` pays ~10 scheduler
-  * round-trips of WeightedLeastSquares instrumentation — a FIXED ~3-4 s tax
-  * per fit that dominates small-series queries and never amortizes (it is
-  * the same at 90 rows or 90 billion). [[Ols.fit]] solves the SAME normal
-  * equations (Cholesky-equivalent driver solve on one distributed moments
-  * aggregation), so wrapping it in a Transformer keeps every consumer —
+  * Why: `LinearRegression(solver = "normal").fit` runs two Spark jobs
+  * through WeightedLeastSquares plus its driver-side instrumentation — a
+  * fixed per-fit cost that dominates small-series queries and never
+  * amortizes. [[Ols.fit]] / [[Ols.fitRidge]] solve the SAME normal
+  * equations (a driver solve on one distributed moments aggregation, one
+  * job), so wrapping the result in a Transformer keeps every consumer —
   * `transform`, [[Recursive]] via [[RowScorer.unwrap]], persistence — while
   * deleting the overhead.
   *

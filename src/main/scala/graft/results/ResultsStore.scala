@@ -30,6 +30,25 @@ object ResultsStore {
 
   def union(results: DataFrame*): DataFrame = results.reduce(_ unionByName _)
 
+  /** A banked results frame and the model names it holds, as one value: the
+    * facades add and pop both together, so an export's pivot list is known
+    * without running the banked chain. */
+  final case class Banked(frame: DataFrame, models: Seq[String]) {
+    /** Bank `scored` under `model` next to what is already here. */
+    def add(scored: DataFrame, model: String): Banked =
+      Banked(union(frame, bank(scored, model)), (models :+ model).distinct)
+
+    def pop(names: String*): Banked =
+      Banked(ResultsStore.pop(frame, names: _*), models.filterNot(names.contains))
+
+    /** Same models, fewer rows (one series' slice). */
+    def filter(cond: Column): Banked = copy(frame = frame.filter(cond))
+  }
+
+  object Banked {
+    def of(scored: DataFrame, model: String): Banked = Banked(bank(scored, model), Seq(model))
+  }
+
   /** `pop(*models)` (/root/reference/src/scalecast/_Forecaster_parent.py:768-784). */
   def pop(results: DataFrame, models: String*): DataFrame =
     results.filter(!col("model").isInCollection(models))

@@ -77,10 +77,29 @@ class OlsSpec extends SparkSpec {
     val headRow = routed.transform(flagged)
       .filter(col("ar_2").isNull).select("yhat").first()
     assert(!headRow.isNullAt(0) && headRow.getDouble(0).isNaN)
-    // scaled/regularized variants keep the MLlib pipeline path
+    // scaled variants keep the MLlib pipeline path
     assert(MllibTsEstimator("mlr", feats, normalizer = "scale").fit(flagged)
       .isInstanceOf[org.apache.spark.ml.PipelineModel])
-    assert(MllibTsEstimator("ridge", feats).fit(flagged)
-      .isInstanceOf[org.apache.spark.ml.PipelineModel])
+  }
+
+  test("registry fit routes ridge/none to OlsModel with MLlib's ridge coefficients") {
+    // a constant column: zero σ, so MLlib pins its coefficient to 0
+    val feats = Seq("t", "ar_1", "const")
+    val flagged = fixture.withColumn("const", lit(2.0))
+    for (alpha <- Seq(0.01, 0.5, 1.0, 10.0)) {
+      val est = MllibTsEstimator("ridge", feats, Map("alpha" -> alpha))
+      val routed = est.fit(flagged)
+      assert(routed.isInstanceOf[graft.models.OlsModel],
+        s"expected OlsModel, got ${routed.getClass.getSimpleName}")
+      val fit = routed.asInstanceOf[graft.models.OlsModel].fitted
+      val lr = est.fitMllib(flagged).stages.last
+        .asInstanceOf[org.apache.spark.ml.regression.LinearRegressionModel]
+      def close(a: Double, b: Double) = math.abs(a - b) <= 1e-8 * math.max(1.0, math.abs(b))
+      assert(close(fit.intercept, lr.intercept), s"alpha $alpha: intercept ${fit.intercept} vs ${lr.intercept}")
+      fit.beta.zip(lr.coefficients.toArray).foreach { case (a, b) =>
+        assert(close(a, b), s"alpha $alpha: beta $a vs $b")
+      }
+      assert(fit.beta(2) == 0.0)
+    }
   }
 }

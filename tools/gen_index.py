@@ -58,7 +58,7 @@ OPS = [
     ("2.4 transforms", "find stat/opt transformation", "operators/Transforms.scala",
      ["ts_stat_transform", "ts_opt_transform"], []),
     # --- §2.5 estimators ---
-    ("2.5 estimators", "sklearn linear/tree family + closed-form OLS routing",
+    ("2.5 estimators", "sklearn linear/tree family + closed-form OLS/ridge routing",
      "models/Estimators.scala models/OlsModel.scala models/Knn.scala",
      ["ts_ar1_mlr", "ts_trend_seasonal"], []),
     ("2.5 estimators", "svr / mlp (deterministic fits)", "models/Svr.scala models/MlpNet.scala",

@@ -4,8 +4,19 @@ import graft.obs.{RunDelta, RunRecorder, Work}
 import graft.obs.RunRecorder.{f3, obj}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 object Bench {
+
+  /** Runs a bench step whose failure must not end the run, and says so: a
+    * non-fatal throw prints `[bench] <step> failed: <Class>: <message>` on
+    * stderr (a silently failed prewarm or calibration would leave its figure
+    * on the record looking valid); a fatal error propagates. */
+  def attempt(step: String)(body: => Any): Unit =
+    try body
+    catch { case NonFatal(e) =>
+      Console.err.println(s"[bench] $step failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
 
   /** One benched query: its [[graft.obs.RunDelta]] (wall, jobs, stages and
     * the executor-side evidence that lets a reader attribute a wall swing
@@ -81,7 +92,7 @@ object Bench {
     // broadcast join, window) so codegen/classloading costs land here, not
     // in whichever query the map happens to order first
     spark.range(1000).selectExpr("sum(id)").collect()
-    try {
+    attempt("warmup") {
       val warm = spark.read.parquet(s"$sfDir/region.parquet")
       warm.join(org.apache.spark.sql.functions.broadcast(warm
           .select(org.apache.spark.sql.functions.col("r_regionkey").as("k"))),
@@ -92,11 +103,11 @@ object Bench {
           org.apache.spark.sql.expressions.Window.partitionBy("r_name")
             .orderBy("count")))
         .collect()
-    } catch { case _: Throwable => () }
+    }
     // memo builds are a one-time session cost — measure them as their own
     // line item so per-query numbers stay order-stable round to round
     val (_, memo) = rec.measure {
-      try SparkEntry.prewarm(spark, sfDir) catch { case _: Throwable => () }
+      attempt("memo prewarm")(SparkEntry.prewarm(spark, sfDir))
     }
     val swept = runQueries(rec, sfDir, selected)
     // re-run unexplained outliers once at the END of the battery and keep
@@ -115,8 +126,7 @@ object Bench {
     // wall+cpu on the record lets a later reader normalize: divide two
     // rounds' walls by their calib_sec ratio before comparing.
     val (_, calib) = rec.measure {
-      try spark.range(2000000000L).selectExpr("sum(id)").collect()
-      catch { case _: Throwable => () }
+      attempt("calibration")(spark.range(2000000000L).selectExpr("sum(id)").collect())
     }
     // keep the line SHORT: the driver records a bounded tail of this
     // process's output, and an over-long line truncates into an unparseable
@@ -180,9 +190,8 @@ object Bench {
     // and has twice lost the per-query map to it — the FULL record (line +
     // per-query executor evidence) lands in a file the tail can't clip
     val fileLine = line.dropRight(1) + s""","query_metrics":$qmAll}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
-      (fileLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    attempt("record write")(java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_last.json"), (fileLine + "\n").getBytes("UTF-8")))
     spark.stop()
   }
 }

@@ -519,9 +519,8 @@ object BenchScale {
     val out = s"""{"metric":"bench_scale","unit":"sec","n_obs":$nObs,"points":[${points.mkString(",")}],"corpus_points":[${corpusPoints.mkString(",")}],"event_points":[${eventPoints.mkString(",")}],"ann_points":[${annPoints.mkString(",")}]}"""
     println(out)
     // same truncation-proof file record as graft.Bench
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_scale_last.json"), (out + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    Bench.attempt("record write")(java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_scale_last.json"), (out + "\n").getBytes("UTF-8")))
     spark.stop()
   }
 

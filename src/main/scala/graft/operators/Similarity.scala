@@ -58,11 +58,33 @@ object Similarity {
     val pairs = q.as("a").join(p.as("b"), col("a.vid") =!= col("b.vid"))
       .select(col("a.vid").as("query_id"), col("b.vid").as("neighbor_id"),
         (dotFast(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
-    val ranked = pairs.withColumn("rank",
-      row_number().over(Window.partitionBy("query_id")
-        .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
-    ranked.filter(col("rank") <= k)
+    topK(pairs, k)
+  }
+
+  /** Each query's top `k` of scored `(query_id, neighbor_id, sim)` pairs,
+    * ranked by (6dp sim desc, neighbour id) so the ranking is reproducible
+    * across engines: `(query_id, rank, neighbor_id, sim)`. */
+  private def topK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("rank",
+        row_number().over(Window.partitionBy("query_id")
+          .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "sim")
+
+  /** The PQ tail shared by [[pqKnn]] and [[ivfPqKnn]]: cut each query's ADC
+    * candidates `(qvid, nid, adc)` to its `nCand` nearest (ties on nid),
+    * re-score them by exact cosine on the true vectors of `vecs(vid, v,
+    * nrm)`, and keep the top `k`. */
+  private def rerankAdc(cands: DataFrame, vecs: DataFrame, nCand: Int, k: Int): DataFrame = {
+    val globalCand = cands
+      .withColumn("_rk", row_number().over(Window.partitionBy("qvid")
+        .orderBy(col("adc"), col("nid"))))
+      .filter(col("_rk") <= nCand).select("qvid", "nid")
+    topK(globalCand
+      .join(vecs.select(col("vid").as("nid"), col("v").as("_nv"), col("nrm").as("_nn")), Seq("nid"))
+      .join(vecs.select(col("vid").as("qvid"), col("v").as("_qv"), col("nrm").as("_qn")), Seq("qvid"))
+      .select(col("qvid").as("query_id"), col("nid").as("neighbor_id"),
+        (dotFast(col("_qv"), col("_nv")) / (col("_qn") * col("_nn"))).as("sim")), k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
@@ -93,11 +115,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") && col("a.vid") =!= col("b.vid"))
       .select(col("a.vid").as("query_id"), col("b.vid").as("neighbor_id"),
         (dotFast(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
-    pairs.withColumn("rank",
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    topK(pairs, k)
   }
 
   /** [[planeCoef]] evaluated at plan time — numerically identical to the
@@ -211,11 +229,7 @@ object Similarity {
       .select(col("vid").as("query_id"), col("nid").as("neighbor_id"),
         (dotFast(col("_qv"), col("_nv")) / (col("_qn") * col("_nn"))).as("sim"))
       .dropDuplicates("query_id", "neighbor_id")
-    scored.withColumn("rank",
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    topK(scored, k)
   }
 
   /** Product-quantization index: each UNIT vector splits into `m`
@@ -396,21 +410,7 @@ object Similarity {
         h.iterator.map { case (adc, nid) => Row(qvid, nid, adc) } }
     })(Encoders.row(candSchema)).toDF()
     // global nCand cut across partitions, then EXACT re-rank on true vectors
-    val globalCand = cands
-      .withColumn("_rk", row_number().over(Window.partitionBy("qvid")
-        .orderBy(col("adc"), col("nid"))))
-      .filter(col("_rk") <= nCand).select("qvid", "nid")
-    val vecs = codes.select(col("vid"), col("v"), col("nrm"))
-    val scored = globalCand
-      .join(vecs.select(col("vid").as("nid"), col("v").as("_nv"), col("nrm").as("_nn")), Seq("nid"))
-      .join(vecs.select(col("vid").as("qvid"), col("v").as("_qv"), col("nrm").as("_qn")), Seq("qvid"))
-      .select(col("qvid").as("query_id"), col("nid").as("neighbor_id"),
-        (dotFast(col("_qv"), col("_nv")) / (col("_qn") * col("_nn"))).as("sim"))
-    scored.withColumn("rank",
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rerankAdc(cands, codes, nCand, k)
   }
 
   /** IVF-PQ ANN top-k: product quantization over RESIDUALS
@@ -557,21 +557,7 @@ object Similarity {
       heaps.iterator.flatMap { case (qvid, h) =>
         h.iterator.map { case (adc, nid) => Row(qvid, nid, adc) } }
     })(Encoders.row(candSchema)).toDF()
-    val globalCand = cands
-      .withColumn("_rk", row_number().over(Window.partitionBy("qvid")
-        .orderBy(col("adc"), col("nid"))))
-      .filter(col("_rk") <= nCand).select("qvid", "nid")
-    val vecs = coded.select(col("vid"), col("v"), col("nrm"))
-    val scored = globalCand
-      .join(vecs.select(col("vid").as("nid"), col("v").as("_nv"), col("nrm").as("_nn")), Seq("nid"))
-      .join(vecs.select(col("vid").as("qvid"), col("v").as("_qv"), col("nrm").as("_qn")), Seq("qvid"))
-      .select(col("qvid").as("query_id"), col("nid").as("neighbor_id"),
-        (dotFast(col("_qv"), col("_nv")) / (col("_qn") * col("_nn"))).as("sim"))
-    scored.withColumn("rank",
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(round(col("sim"), 6).desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rerankAdc(cands, coded, nCand, k)
   }
 
   /** Cross-corpus contamination matches: every (corpus, probe) pair with

@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import graft.OracleGen._
 import graft.core.{SessionMemo, Tables}
 import graft.functions.TextOps
 import graft.operators.{Decontaminate, Dedup, Multimodal, Quality, Sampling, Similarity}
@@ -788,7 +789,7 @@ object DocQueries {
     * → dHash words. Shared verbatim by the phash and phash-pairs oracles
     * (the pairs oracle nests it as a CTE). */
   private val imagePhashSql =
-    """WITH ids AS (SELECT doc_id,
+    s"""WITH ids AS (SELECT doc_id,
       |    CASE WHEN doc_id % 10 IN (5, 9) THEN doc_id - 1 ELSE doc_id END AS src,
       |    (doc_id % 10 = 9) AS br FROM documents),
       |px AS (
@@ -798,19 +799,9 @@ object DocQueries {
       |      ELSE CAST(concat('0x', substr(md5(i.src || '_' || x.x || '_' || y.y), 1, 15)) AS BIGINT) % 256
       |    END AS g
       |  FROM ids i, range(18) x(x), range(16) y(y)),
-      |grid AS (
-      |  SELECT doc_id, x // 2 AS gx, y // 2 AS gy,
-      |    CAST(SUM(g) // 4 AS BIGINT) AS v
-      |  FROM px GROUP BY 1, 2, 3),
-      |bits AS (
-      |  SELECT a.doc_id, a.gy * 8 + a.gx AS b,
-      |    CASE WHEN n.v > a.v THEN 1 ELSE 0 END AS bit
-      |  FROM grid a JOIN grid n
-      |    ON n.doc_id = a.doc_id AND n.gy = a.gy AND n.gx = a.gx + 1
-      |  WHERE a.gx < 8)
+      |$DhashBitsCtes
       |SELECT doc_id, CAST(18 AS BIGINT) AS img_w, CAST(16 AS BIGINT) AS img_h,
-      |  CAST(SUM(CASE WHEN b >= 32 THEN bit * (CAST(1 AS BIGINT) << (b - 32)) ELSE 0 END) AS BIGINT) AS dh_hi,
-      |  CAST(SUM(CASE WHEN b < 32 THEN bit * (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS dh_lo
+      |  ${bitWords("dh")}
       |FROM bits GROUP BY 1""".stripMargin
 
   /** SQL replay of [[qAudioFeatures]]: planted PCM samples → integer
@@ -819,7 +810,7 @@ object DocQueries {
     * Frame assignment (i·65)//260 == the Spark side's floor-bound rects
     * because 260 is an exact multiple of 65. */
   private val audioFeaturesSql =
-    """WITH ids AS (SELECT doc_id,
+    s"""WITH ids AS (SELECT doc_id,
       |    CASE WHEN doc_id % 10 IN (5, 9) THEN doc_id - 1 ELSE doc_id END AS src,
       |    CASE WHEN doc_id % 10 = 9 THEN 2 ELSE 1 END AS gain FROM documents),
       |smp AS (
@@ -840,11 +831,7 @@ object DocQueries {
       |  SELECT a.doc_id, a.f AS b, CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
       |  FROM fr a JOIN fr n ON n.doc_id = a.doc_id AND n.f = a.f + 1
       |  WHERE a.f < 64),
-      |fp AS (
-      |  SELECT doc_id,
-      |    CAST(SUM(CASE WHEN b >= 32 THEN bit * (CAST(1 AS BIGINT) << (b - 32)) ELSE 0 END) AS BIGINT) AS fp_hi,
-      |    CAST(SUM(CASE WHEN b < 32 THEN bit * (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS fp_lo
-      |  FROM bits GROUP BY 1)
+      |fp AS (SELECT doc_id, ${bitWords("fp")} FROM bits GROUP BY 1)
       |SELECT zc.doc_id, CAST(8000 AS BIGINT) AS sample_rate,
       |  CAST(260 AS BIGINT) AS n_samples, CAST(32 AS BIGINT) AS duration_ms,
       |  zc.sum_sq, zc.zero_cross, fp.fp_hi, fp.fp_lo
@@ -858,7 +845,7 @@ object DocQueries {
     * side's slice(encode(px)) == px and the replay is exact. Shared by
     * the keyframes and pairs oracles. */
   private val videoKeyframesSql =
-    """WITH ids AS (SELECT doc_id,
+    s"""WITH ids AS (SELECT doc_id,
       |    CASE WHEN doc_id % 10 IN (5, 9) THEN doc_id - 1 ELSE doc_id END AS src,
       |    (doc_id % 10 = 9) AS br FROM documents),
       |meta AS (SELECT doc_id, src, br, 3 + (src % 3) * 2 AS nf FROM ids),
@@ -869,21 +856,8 @@ object DocQueries {
       |      ELSE CAST(concat('0x', substr(md5(m.src || '_v_0_' || x.x || '_' || y.y), 1, 15)) AS BIGINT) % 256
       |    END AS g
       |  FROM meta m, range(18) x(x), range(16) y(y)),
-      |grid AS (
-      |  SELECT doc_id, x // 2 AS gx, y // 2 AS gy,
-      |    CAST(SUM(g) // 4 AS BIGINT) AS v
-      |  FROM px GROUP BY 1, 2, 3),
-      |bits AS (
-      |  SELECT a.doc_id, a.gy * 8 + a.gx AS b,
-      |    CASE WHEN n.v > a.v THEN 1 ELSE 0 END AS bit
-      |  FROM grid a JOIN grid n
-      |    ON n.doc_id = a.doc_id AND n.gy = a.gy AND n.gx = a.gx + 1
-      |  WHERE a.gx < 8),
-      |hw AS (
-      |  SELECT doc_id,
-      |    CAST(SUM(CASE WHEN b >= 32 THEN bit * (CAST(1 AS BIGINT) << (b - 32)) ELSE 0 END) AS BIGINT) AS kf_hi,
-      |    CAST(SUM(CASE WHEN b < 32 THEN bit * (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS kf_lo
-      |  FROM bits GROUP BY 1)
+      |$DhashBitsCtes,
+      |hw AS (SELECT doc_id, ${bitWords("kf")} FROM bits GROUP BY 1)
       |SELECT m.doc_id, CAST(18 AS BIGINT) AS vid_w, CAST(16 AS BIGINT) AS vid_h,
       |  CAST(m.nf * 40 AS BIGINT) AS duration_ms,
       |  CAST(m.nf AS BIGINT) AS n_frames,
@@ -996,39 +970,11 @@ object DocQueries {
        |  ROUND(exp(-avg(ln(p))), 6) AS ppl FROM q3 GROUP BY 1""".stripMargin
 
   private val CURATION_CTES =
-    """WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |bi AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t0),
-        |bg AS (SELECT doc_id, toks[i] AS a, toks[i + 1] AS b FROM bi),
-        |cab AS (SELECT a, b, count(*) AS c_ab FROM bg GROUP BY 1, 2),
-        |ca AS (SELECT a, count(*) AS c_a FROM bg GROUP BY 1),
-        |sc AS (SELECT doc_id, exp(-avg(ln(c_ab / c_a))) AS ppl
-        |       FROM bg JOIN cab USING (a, b) JOIN ca USING (a) GROUP BY 1),
+    s"""WITH $BigramPplCtes,
         |d1 AS (SELECT d.doc_id, d.text FROM documents d JOIN sc USING (doc_id)
         |       WHERE ROUND(ppl, 6) BETWEEN 28.0 AND 31.0),
         |dd AS (SELECT doc_id, text FROM d1 WHERE length(text) >= 11),
-        |g AS (SELECT doc_id, unnest(range(1, length(text) - 6)) AS p, text FROM dd),
-        |h AS (SELECT doc_id, CAST(p AS BIGINT) AS p,
-        |        (CAST(ascii(substr(text, p, 1)) AS BIGINT) * 27512614111
-        |       + CAST(ascii(substr(text, p + 1, 1)) AS BIGINT) * 887503681
-        |       + CAST(ascii(substr(text, p + 2, 1)) AS BIGINT) * 28629151
-        |       + CAST(ascii(substr(text, p + 3, 1)) AS BIGINT) * 923521
-        |       + CAST(ascii(substr(text, p + 4, 1)) AS BIGINT) * 29791
-        |       + CAST(ascii(substr(text, p + 5, 1)) AS BIGINT) * 961
-        |       + CAST(ascii(substr(text, p + 6, 1)) AS BIGINT) * 31
-        |       + CAST(ascii(substr(text, p + 7, 1)) AS BIGINT)) % 1048576 AS h
-        |      FROM g),
-        |k2 AS (SELECT doc_id, p, h, h * 4294967296 + (4294967295 - p) AS kk FROM h),
-        |w2 AS (SELECT doc_id,
-        |         min(kk) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wkey,
-        |         count(*) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS cnt
-        |       FROM k2),
-        |sel0 AS (SELECT DISTINCT doc_id, 4294967295 - (wkey % 4294967296) AS p
-        |         FROM w2 WHERE cnt = 4),
-        |sel AS (SELECT DISTINCT s.doc_id, CAST(concat('0x',
-        |          substr(md5(substr(d.text, CAST(s.p AS INT), 8)), 1, 15)) AS BIGINT) AS h
-        |        FROM sel0 s JOIN dd d USING (doc_id)),
+        |${winnowCtes(distinct = true)},
         |cap AS (SELECT doc_id, h FROM
         |          (SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS dfq FROM sel)
         |        WHERE dfq <= 100),
@@ -1038,17 +984,7 @@ object DocQueries {
         |dup AS (SELECT DISTINCT doc_b AS doc_id FROM pr WHERE n_shared >= 50),
         |d2 AS (SELECT doc_id, text FROM d1
         |       WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
-        |t2 AS (SELECT doc_id,
-        |  CASE WHEN len(string_split(text, ' ')) >= 60 THEN 'long' ELSE 'short' END AS stratum
-        |  FROM d2),
-        |c2 AS (SELECT stratum, CAST(count(*) AS DOUBLE) AS n FROM t2 GROUP BY 1),
-        |s2 AS (SELECT sum(pow(n, 0.5)) AS wsum FROM c2),
-        |f2 AS (SELECT stratum,
-        |  CAST(FLOOR(ROUND(least(1.0, 150.0 * pow(n, 0.5) / wsum / n), 9)
-        |       * 4294967296) AS BIGINT) AS thr FROM c2, s2),
-        |h2 AS (SELECT doc_id, stratum,
-        |  CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS b
-        |  FROM t2)""".stripMargin
+        |${temperatureMixCtes("d2", "150.0", "2")}""".stripMargin
 
   private val SHINGLES =
     """WITH toks AS (
@@ -1162,31 +1098,13 @@ object DocQueries {
     // decontamination: distinct-3-gram overlap of every doc against the
     // doc_id % 20 = 0 benchmark slice, inverted-index join only
     QueryDef("doc_decontaminate", qDecontaminate,
-      s"""$SHINGLES
-         |sz AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY 1),
-         |bs AS (SELECT doc_id AS bench_id, shingle FROM ds WHERE doc_id % 20 = 0),
-         |ov AS (SELECT a.doc_id, b.bench_id, count(*) AS common
-         |       FROM ds a JOIN bs b USING (shingle)
-         |       WHERE a.doc_id <> b.bench_id GROUP BY 1, 2)
-         |SELECT ov.doc_id, bench_id,
-         |  ROUND(common / CAST(sz AS DOUBLE), 6) AS overlap_frac
-         |FROM ov JOIN sz ON ov.doc_id = sz.doc_id
-         |WHERE common / CAST(sz AS DOUBLE) >= 0.5""".stripMargin),
+      s"$SHINGLES\n${shingleOverlapSql("doc_id % 20 = 0", "0.5")}"),
 
     // Bloom-prefiltered decontamination: the Bloom layer is result-invariant
     // (prefilter + exact join == exact join), so the oracle is the plain
     // inverted-index overlap at this query's own bench slice / threshold
     QueryDef("doc_decontaminate_bloom", qDecontaminateBloom,
-      s"""$SHINGLES
-         |sz AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY 1),
-         |bs AS (SELECT doc_id AS bench_id, shingle FROM ds WHERE doc_id % 17 = 3),
-         |ov AS (SELECT a.doc_id, b.bench_id, count(*) AS common
-         |       FROM ds a JOIN bs b USING (shingle)
-         |       WHERE a.doc_id <> b.bench_id GROUP BY 1, 2)
-         |SELECT ov.doc_id, bench_id,
-         |  ROUND(common / CAST(sz AS DOUBLE), 6) AS overlap_frac
-         |FROM ov JOIN sz ON ov.doc_id = sz.doc_id
-         |WHERE common / CAST(sz AS DOUBLE) >= CAST(0.4 AS DOUBLE)""".stripMargin),
+      s"$SHINGLES\n${shingleOverlapSql("doc_id % 17 = 3", "CAST(0.4 AS DOUBLE)")}"),
 
     // stratified hash sampling: the md5-bucket predicate replayed exactly
     // (fractions chosen so fraction * 2^32 is an exact integer — no
@@ -1204,17 +1122,7 @@ object DocQueries {
     // Temperature mixture: same strata, rates n^0.5-proportional, T=200,
     // 9dp-rounded fraction floored onto the 2^32 hash space
     QueryDef("doc_mixture_temp", qMixtureTemp,
-      """WITH t AS (SELECT doc_id,
-        |  CASE WHEN len(string_split(text, ' ')) >= 60 THEN 'long' ELSE 'short' END AS stratum
-        |  FROM documents),
-        |c AS (SELECT stratum, CAST(count(*) AS DOUBLE) AS n FROM t GROUP BY 1),
-        |s AS (SELECT sum(pow(n, 0.5)) AS wsum FROM c),
-        |f AS (SELECT stratum,
-        |  CAST(FLOOR(ROUND(least(1.0, 200.0 * pow(n, 0.5) / wsum / n), 9)
-        |       * 4294967296) AS BIGINT) AS thr FROM c, s),
-        |h AS (SELECT doc_id, stratum,
-        |  CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS b
-        |  FROM t)
+      s"""WITH ${temperatureMixCtes("documents", "200.0", "")}
         |SELECT h.doc_id, h.stratum FROM h JOIN f USING (stratum) WHERE b < thr""".stripMargin),
 
     // Token-budget mixture plan: per-source token volume → integer budget
@@ -1223,15 +1131,8 @@ object DocQueries {
     // 9dp rate. src0's budget exceeds availability at sf0.01 only, so the
     // dual-SF gate covers both sides of the least(1, ·) cap.
     QueryDef("doc_token_budget", qTokenBudgetPlan,
-      """WITH t AS (SELECT source, len(string_split(text, ' ')) AS nt FROM documents),
-        |c AS (SELECT source, CAST(SUM(nt) AS BIGINT) AS tokens_available
-        |      FROM t GROUP BY 1),
-        |p AS (SELECT source, tokens_available,
-        |  CAST(FLOOR(ROUND(CASE source
-        |    WHEN 'src0' THEN CAST(0.8 AS DOUBLE) WHEN 'src1' THEN CAST(0.1 AS DOUBLE)
-        |    WHEN 'src2' THEN CAST(0.06 AS DOUBLE) WHEN 'src3' THEN CAST(0.04 AS DOUBLE)
-        |    ELSE CAST(0 AS DOUBLE) END * 2000, 6)) AS BIGINT) AS token_budget
-        |  FROM c)
+      s"""WITH t AS (SELECT source, len(string_split(text, ' ')) AS nt FROM documents),
+        |$TokenBudgetCtes
         |SELECT source, tokens_available, token_budget,
         |  ROUND(LEAST(CAST(1 AS DOUBLE),
         |    token_budget / CAST(tokens_available AS DOUBLE)), 9) AS rate
@@ -1240,16 +1141,9 @@ object DocQueries {
     // membership replay at the plan's rates: same md5-prefix 32-bit bucket
     // as every sampler oracle, thresholds floor(rate * 2^32)
     QueryDef("doc_token_budget_sample", qTokenBudgetSample,
-      """WITH t AS (SELECT doc_id, source, len(string_split(text, ' ')) AS nt
+      s"""WITH t AS (SELECT doc_id, source, len(string_split(text, ' ')) AS nt
         |      FROM documents),
-        |c AS (SELECT source, CAST(SUM(nt) AS BIGINT) AS tokens_available
-        |      FROM t GROUP BY 1),
-        |p AS (SELECT source,
-        |  CAST(FLOOR(ROUND(CASE source
-        |    WHEN 'src0' THEN CAST(0.8 AS DOUBLE) WHEN 'src1' THEN CAST(0.1 AS DOUBLE)
-        |    WHEN 'src2' THEN CAST(0.06 AS DOUBLE) WHEN 'src3' THEN CAST(0.04 AS DOUBLE)
-        |    ELSE CAST(0 AS DOUBLE) END * 2000, 6)) AS BIGINT) AS token_budget,
-        |  tokens_available FROM c),
+        |$TokenBudgetCtes,
         |f AS (SELECT source,
         |  CAST(FLOOR(ROUND(LEAST(CAST(1 AS DOUBLE),
         |    token_budget / CAST(tokens_available AS DOUBLE)), 9)
@@ -1336,14 +1230,7 @@ object DocQueries {
 
     // Bigram perplexity: same MLE bigram LM, exp(-avg ln(c_ab/c_a))
     QueryDef("doc_perplexity", qPerplexity,
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |bi AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t),
-        |bg AS (SELECT doc_id, toks[i] AS a, toks[i + 1] AS b FROM bi),
-        |cab AS (SELECT a, b, count(*) AS c_ab FROM bg GROUP BY 1, 2),
-        |ca AS (SELECT a, count(*) AS c_a FROM bg GROUP BY 1),
-        |sc AS (SELECT doc_id, count(*) AS n_bigrams,
-        |         exp(-avg(ln(c_ab / c_a))) AS ppl
-        |       FROM bg JOIN cab USING (a, b) JOIN ca USING (a) GROUP BY 1)
+      s"""WITH $BigramPplCtes
         |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
         |  ROUND(ppl, 6) AS ppl FROM sc""".stripMargin),
 
@@ -1435,30 +1322,8 @@ object DocQueries {
     // Winnowing fingerprints: same base-31 mod 2^20 polynomial over char
     // 8-grams, same h*2^32+(2^32-1-p) order-embedding window min, w=4
     QueryDef("doc_fingerprints", qFingerprints,
-      """WITH dd AS (SELECT doc_id, text FROM documents WHERE length(text) >= 11),
-        |g AS (SELECT doc_id, unnest(range(1, length(text) - 6)) AS p, text FROM dd),
-        |h AS (SELECT doc_id, CAST(p AS BIGINT) AS p,
-        |        (CAST(ascii(substr(text, p, 1)) AS BIGINT) * 27512614111
-        |       + CAST(ascii(substr(text, p + 1, 1)) AS BIGINT) * 887503681
-        |       + CAST(ascii(substr(text, p + 2, 1)) AS BIGINT) * 28629151
-        |       + CAST(ascii(substr(text, p + 3, 1)) AS BIGINT) * 923521
-        |       + CAST(ascii(substr(text, p + 4, 1)) AS BIGINT) * 29791
-        |       + CAST(ascii(substr(text, p + 5, 1)) AS BIGINT) * 961
-        |       + CAST(ascii(substr(text, p + 6, 1)) AS BIGINT) * 31
-        |       + CAST(ascii(substr(text, p + 7, 1)) AS BIGINT)) % 1048576 AS h
-        |      FROM g),
-        |k2 AS (SELECT doc_id, p, h, h * 4294967296 + (4294967295 - p) AS kk FROM h),
-        |w2 AS (SELECT doc_id,
-        |         min(kk) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wkey,
-        |         count(*) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS cnt
-        |       FROM k2),
-        |sel0 AS (SELECT DISTINCT doc_id, 4294967295 - (wkey % 4294967296) AS p
-        |         FROM w2 WHERE cnt = 4),
-        |sel AS (SELECT s.doc_id, CAST(concat('0x',
-        |          substr(md5(substr(d.text, CAST(s.p AS INT), 8)), 1, 15)) AS BIGINT) AS h
-        |        FROM sel0 s JOIN dd d USING (doc_id)),
+      s"""WITH dd AS (SELECT doc_id, text FROM documents WHERE length(text) >= 11),
+        |${winnowCtes(distinct = false)},
         |agg AS (SELECT doc_id, count(*) AS n_fp,
         |          CAST(sum(h % 1000000007) AS BIGINT) AS fp_sum,
         |          min(h) AS fp_min, max(h) AS fp_max FROM sel GROUP BY 1)
@@ -1471,30 +1336,8 @@ object DocQueries {
 
     // MOSS pairs over the same winnowed set: df-cap 100, >= 50 shared hashes
     QueryDef("doc_fingerprint_pairs", qFingerprintPairs,
-      """WITH dd AS (SELECT doc_id, text FROM documents WHERE length(text) >= 11),
-        |g AS (SELECT doc_id, unnest(range(1, length(text) - 6)) AS p, text FROM dd),
-        |h AS (SELECT doc_id, CAST(p AS BIGINT) AS p,
-        |        (CAST(ascii(substr(text, p, 1)) AS BIGINT) * 27512614111
-        |       + CAST(ascii(substr(text, p + 1, 1)) AS BIGINT) * 887503681
-        |       + CAST(ascii(substr(text, p + 2, 1)) AS BIGINT) * 28629151
-        |       + CAST(ascii(substr(text, p + 3, 1)) AS BIGINT) * 923521
-        |       + CAST(ascii(substr(text, p + 4, 1)) AS BIGINT) * 29791
-        |       + CAST(ascii(substr(text, p + 5, 1)) AS BIGINT) * 961
-        |       + CAST(ascii(substr(text, p + 6, 1)) AS BIGINT) * 31
-        |       + CAST(ascii(substr(text, p + 7, 1)) AS BIGINT)) % 1048576 AS h
-        |      FROM g),
-        |k2 AS (SELECT doc_id, p, h, h * 4294967296 + (4294967295 - p) AS kk FROM h),
-        |w2 AS (SELECT doc_id,
-        |         min(kk) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wkey,
-        |         count(*) OVER (PARTITION BY doc_id ORDER BY p
-        |           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS cnt
-        |       FROM k2),
-        |sel0 AS (SELECT DISTINCT doc_id, 4294967295 - (wkey % 4294967296) AS p
-        |         FROM w2 WHERE cnt = 4),
-        |sel AS (SELECT DISTINCT s.doc_id, CAST(concat('0x',
-        |          substr(md5(substr(d.text, CAST(s.p AS INT), 8)), 1, 15)) AS BIGINT) AS h
-        |        FROM sel0 s JOIN dd d USING (doc_id)),
+      s"""WITH dd AS (SELECT doc_id, text FROM documents WHERE length(text) >= 11),
+        |${winnowCtes(distinct = true)},
         |cap AS (SELECT doc_id, h FROM
         |          (SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS dfq FROM sel)
         |        WHERE dfq <= greatest(100,
@@ -1552,14 +1395,7 @@ object DocQueries {
 
     QueryDef("doc_dup_spans", qDupSpans,
       s"""$SPAN_STARTS
-         |dup AS (SELECT doc_id, pos FROM
-         |  (SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS cnt FROM sh)
-         |  WHERE cnt >= 2),
-         |brk AS (SELECT doc_id, pos,
-         |  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-         |       >= $SpanMinTokens THEN 1 ELSE 0 END AS b FROM dup),
-         |isl AS (SELECT doc_id, pos,
-         |  SUM(b) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM brk)
+         |${spanIslandCtes(SpanMinTokens)}
          |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
          |  CAST(max(pos) - min(pos) + $SpanMinTokens AS BIGINT) AS span_len
          |FROM isl GROUP BY doc_id, grp""".stripMargin),
@@ -1586,14 +1422,7 @@ object DocQueries {
 
     QueryDef("doc_span_profile", qSpanProfile,
       s"""$SPAN_STARTS
-         |dup AS (SELECT doc_id, pos FROM
-         |  (SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS cnt FROM sh)
-         |  WHERE cnt >= 2),
-         |brk AS (SELECT doc_id, pos,
-         |  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-         |       >= $SpanMinTokens THEN 1 ELSE 0 END AS b FROM dup),
-         |isl AS (SELECT doc_id, pos,
-         |  SUM(b) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM brk),
+         |${spanIslandCtes(SpanMinTokens)},
          |sp AS (SELECT doc_id, max(pos) - min(pos) + $SpanMinTokens AS span_len
          |  FROM isl GROUP BY doc_id, grp),
          |agg AS (SELECT doc_id, SUM(span_len) AS dup_toks FROM sp GROUP BY doc_id),
@@ -1640,11 +1469,7 @@ object DocQueries {
 
     QueryDef("doc_jaccard_pairs", qJaccardPairs,
       s"""$SHINGLES
-         |dsc AS (SELECT * FROM ds
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= $JaccardDfCap),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM dsc GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-         |  FROM dsc a JOIN dsc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2)
+         |${jaccardInterCtes(JaccardDfCap)}
          |SELECT doc_a, doc_b, n_common,
          |  ROUND(n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE), 6) AS jaccard
          |FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
@@ -1656,11 +1481,7 @@ object DocQueries {
     // propagation + pointer jumping
     QueryDef("doc_dedup_clusters", qDedupClusters,
       s"""${SHINGLES.replaceFirst("WITH ", "WITH RECURSIVE ")}
-         |dsc AS (SELECT * FROM ds
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= $JaccardDfCap),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM dsc GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-         |  FROM dsc a JOIN dsc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
+         |${jaccardInterCtes(JaccardDfCap)},
          |pr AS (SELECT doc_a, doc_b FROM inter
          |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
          |  WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8),
@@ -1760,43 +1581,13 @@ object DocQueries {
 
     // same 4x16-bit banding replay as the image pairs, over (fp_hi, fp_lo)
     QueryDef("doc_audio_fp_pairs", qAudioFpPairs,
-      s"""WITH af AS ($audioFeaturesSql),
-        |banded AS (
-        |  SELECT doc_id, fp_hi, fp_lo, b.band,
-        |    CASE b.band WHEN 0 THEN fp_lo % 65536
-        |      WHEN 1 THEN fp_lo // 65536
-        |      WHEN 2 THEN fp_hi % 65536
-        |      ELSE fp_hi // 65536 END AS band_val
-        |  FROM af, range(4) b(band)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(bit_count(xor(a.fp_hi, b.fp_hi)) +
-        |         bit_count(xor(a.fp_lo, b.fp_lo)) AS BIGINT) AS hamming
-        |  FROM banded a JOIN banded b
-        |    ON a.band = b.band AND a.band_val = b.band_val
-        |      AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 3""".stripMargin),
+      hammingPairsSql(audioFeaturesSql, "fp_hi", "fp_lo")),
 
     // banding replay: 4 bands × 16 bits over (hi, lo) — band 0 = lo%2^16,
     // 1 = lo//2^16, 2 = hi%2^16, 3 = hi//2^16 (= hammingPairs64's global
     // bit ranges at maxDist 3) — then the exact bit_count re-check
     QueryDef("doc_image_phash_pairs", qImagePhashPairs,
-      s"""WITH ph AS ($imagePhashSql),
-        |banded AS (
-        |  SELECT doc_id, dh_hi, dh_lo, b.band,
-        |    CASE b.band WHEN 0 THEN dh_lo % 65536
-        |      WHEN 1 THEN dh_lo // 65536
-        |      WHEN 2 THEN dh_hi % 65536
-        |      ELSE dh_hi // 65536 END AS band_val
-        |  FROM ph, range(4) b(band)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(bit_count(xor(a.dh_hi, b.dh_hi)) +
-        |         bit_count(xor(a.dh_lo, b.dh_lo)) AS BIGINT) AS hamming
-        |  FROM banded a JOIN banded b
-        |    ON a.band = b.band AND a.band_val = b.band_val
-        |      AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 3""".stripMargin),
+      hammingPairsSql(imagePhashSql, "dh_hi", "dh_lo")),
 
     // sample-table + raw-keyframe replay: counts/duration arithmetically,
     // the first-keyframe dHash from the planted pixels (image-grid math)
@@ -1806,22 +1597,7 @@ object DocQueries {
     // same 4x16-bit banding replay as the image/audio pairs, over
     // (kf_hi, kf_lo)
     QueryDef("doc_video_kf_pairs", qVideoKfPairs,
-      s"""WITH vk AS ($videoKeyframesSql),
-        |banded AS (
-        |  SELECT doc_id, kf_hi, kf_lo, b.band,
-        |    CASE b.band WHEN 0 THEN kf_lo % 65536
-        |      WHEN 1 THEN kf_lo // 65536
-        |      WHEN 2 THEN kf_hi % 65536
-        |      ELSE kf_hi // 65536 END AS band_val
-        |  FROM vk, range(4) b(band)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(bit_count(xor(a.kf_hi, b.kf_hi)) +
-        |         bit_count(xor(a.kf_lo, b.kf_lo)) AS BIGINT) AS hamming
-        |  FROM banded a JOIN banded b
-        |    ON a.band = b.band AND a.band_val = b.band_val
-        |      AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 3""".stripMargin),
+      hammingPairsSql(videoKeyframesSql, "kf_hi", "kf_lo")),
 
     QueryDef("doc_token_counts", qDocTokenCounts,
       """SELECT doc_id,
@@ -1835,13 +1611,7 @@ object DocQueries {
     // Spark side goes through banded-LSH blocking; precision is exact and
     // recall on this fixture is proven equal by ExactPropertySpec + this hash)
     QueryDef("doc_neardup_cosine", qDocNearDupCosine,
-      """WITH tri AS (
-        |  SELECT doc_id,
-        |    (CAST(concat('0x', substr(md5(substr(text, i, 3)), 1, 4)) AS BIGINT) % 64) AS b
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(1, len(text)-2)) AS i)
-        |),
-        |vec AS (SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS c FROM tri GROUP BY 1, 2),
-        |nrm AS (SELECT doc_id, sqrt(sum(c*c)) AS n FROM vec GROUP BY 1),
+      s"""WITH $TrigramVecCtes,
         |dots AS (SELECT a.doc_id AS qa, b.doc_id AS qb, sum(a.c*b.c) AS d
         |  FROM vec a JOIN vec b ON a.b = b.b AND a.doc_id < b.doc_id GROUP BY 1, 2),
         |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
@@ -1852,13 +1622,7 @@ object DocQueries {
     // cross-corpus decontamination: the SAME trigram-vector construction as
     // doc_neardup_cosine, restricted to (train, benchmark) cross pairs
     QueryDef("doc_cross_decontaminate", qCrossDecontaminate,
-      """WITH tri AS (
-        |  SELECT doc_id,
-        |    (CAST(concat('0x', substr(md5(substr(text, i, 3)), 1, 4)) AS BIGINT) % 64) AS b
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(1, len(text)-2)) AS i)
-        |),
-        |vec AS (SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS c FROM tri GROUP BY 1, 2),
-        |nrm AS (SELECT doc_id, sqrt(sum(c*c)) AS n FROM vec GROUP BY 1),
+      s"""WITH $TrigramVecCtes,
         |dots AS (SELECT a.doc_id AS cid, b.doc_id AS pid, sum(a.c*b.c) AS d
         |  FROM vec a JOIN vec b ON a.b = b.b
         |  WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0 GROUP BY 1, 2),
@@ -1869,11 +1633,7 @@ object DocQueries {
 
     QueryDef("doc_pipeline", qDocPipeline,
       s"""$SHINGLES
-         |dsc AS (SELECT * FROM ds
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= $JaccardDfCap),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM dsc GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-         |  FROM dsc a JOIN dsc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
+         |${jaccardInterCtes(JaccardDfCap)},
          |dups AS (SELECT DISTINCT doc_b FROM inter
          |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
          |  WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8),

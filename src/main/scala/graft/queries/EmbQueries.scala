@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import graft.OracleGen._
 import graft.core.Tables
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -160,97 +161,30 @@ object EmbQueries {
         |FROM s LEFT JOIN k USING (label)""".stripMargin),
 
     QueryDef("emb_knn", qEmbKnn,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |ed AS (SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM e),
-        |nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS n FROM ed GROUP BY 1),
-        |dots AS (SELECT a.vec_id AS qa, b.vec_id AS qb, sum(a.v * b.v) AS d
-        |  FROM ed a JOIN ed b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 50 GROUP BY 1, 2),
-        |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
-        |  FROM dots JOIN nrm na ON na.vec_id = qa JOIN nrm nb ON nb.vec_id = qb),
-        |ranked AS (SELECT qa AS query_id, qb AS neighbor_id, ROUND(sim, 6) AS sim,
-        |    row_number() OVER (PARTITION BY qa ORDER BY ROUND(sim, 6) DESC, qb) AS rank
-        |  FROM sims)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
-        |FROM ranked WHERE rank <= 5""".stripMargin),
+      embCosineTopK(5)),
 
     // full-probe IVF == brute force (ExactPropertySpec), so the all-pairs
     // definition is the oracle; query side bounded like emb_knn
     // PQ at a fixture-covering candidate pool re-ranks exactly, so brute
     // force is its oracle too (same argument as emb_knn_ivf below)
     QueryDef("emb_knn_pq", qEmbKnnPq,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |ed AS (SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM e),
-        |nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS n FROM ed GROUP BY 1),
-        |dots AS (SELECT a.vec_id AS qa, b.vec_id AS qb, sum(a.v * b.v) AS d
-        |  FROM ed a JOIN ed b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 50 GROUP BY 1, 2),
-        |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
-        |  FROM dots JOIN nrm na ON na.vec_id = qa JOIN nrm nb ON nb.vec_id = qb),
-        |ranked AS (SELECT qa AS query_id, qb AS neighbor_id, ROUND(sim, 6) AS sim,
-        |    row_number() OVER (PARTITION BY qa ORDER BY ROUND(sim, 6) DESC, qb) AS rank
-        |  FROM sims)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
-        |FROM ranked WHERE rank <= 3""".stripMargin),
+      embCosineTopK(3)),
 
     // full probe + full pool ⇒ exact: identical brute-force oracle as pq/ivf
     QueryDef("emb_knn_ivfpq", qEmbKnnIvfPq,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |ed AS (SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM e),
-        |nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS n FROM ed GROUP BY 1),
-        |dots AS (SELECT a.vec_id AS qa, b.vec_id AS qb, sum(a.v * b.v) AS d
-        |  FROM ed a JOIN ed b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 50 GROUP BY 1, 2),
-        |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
-        |  FROM dots JOIN nrm na ON na.vec_id = qa JOIN nrm nb ON nb.vec_id = qb),
-        |ranked AS (SELECT qa AS query_id, qb AS neighbor_id, ROUND(sim, 6) AS sim,
-        |    row_number() OVER (PARTITION BY qa ORDER BY ROUND(sim, 6) DESC, qb) AS rank
-        |  FROM sims)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
-        |FROM ranked WHERE rank <= 3""".stripMargin),
+      embCosineTopK(3)),
 
     QueryDef("emb_knn_ivf", qEmbKnnIvf,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |ed AS (SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM e),
-        |nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS n FROM ed GROUP BY 1),
-        |dots AS (SELECT a.vec_id AS qa, b.vec_id AS qb, sum(a.v * b.v) AS d
-        |  FROM ed a JOIN ed b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 50 GROUP BY 1, 2),
-        |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
-        |  FROM dots JOIN nrm na ON na.vec_id = qa JOIN nrm nb ON nb.vec_id = qb),
-        |ranked AS (SELECT qa AS query_id, qb AS neighbor_id, ROUND(sim, 6) AS sim,
-        |    row_number() OVER (PARTITION BY qa ORDER BY ROUND(sim, 6) DESC, qb) AS rank
-        |  FROM sims)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
-        |FROM ranked WHERE rank <= 3""".stripMargin),
+      embCosineTopK(3)),
 
     QueryDef("emb_knn_lsh", qEmbKnnLsh,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |ed AS (SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM e),
-        |proj AS (SELECT vec_id, b,
-        |    sum(v * (((2654435761 * i * (2*b+1) + 40503*(b+1)) % 100003) / 100003.0 - 0.5)) AS p
-        |  FROM ed CROSS JOIN generate_series(0, 3) g(b) GROUP BY 1, 2),
-        |bk AS (SELECT vec_id, CAST(sum(CASE WHEN p > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY 1),
-        |nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS n FROM ed GROUP BY 1),
+      embCosineTopK(3, s"""${lshBucketCtes(4)},
         |cand AS (SELECT a.vec_id AS qa, b.vec_id AS qb
         |  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         |dots AS (SELECT c.qa, c.qb, sum(ea.v * eb.v) AS d
         |  FROM cand c JOIN ed ea ON ea.vec_id = c.qa
         |              JOIN ed eb ON eb.vec_id = c.qb AND eb.i = ea.i
-        |  GROUP BY 1, 2),
-        |sims AS (SELECT qa, qb, d / (na.n * nb.n) AS sim
-        |  FROM dots JOIN nrm na ON na.vec_id = qa JOIN nrm nb ON nb.vec_id = qb),
-        |ranked AS (SELECT qa AS query_id, qb AS neighbor_id, ROUND(sim, 6) AS sim,
-        |    row_number() OVER (PARTITION BY qa ORDER BY ROUND(sim, 6) DESC, qb) AS rank
-        |  FROM sims)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, sim
-        |FROM ranked WHERE rank <= 3""".stripMargin),
+        |  GROUP BY 1, 2)""".stripMargin)),
 
     QueryDef("emb_norms", qEmbNorms,
       """WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
@@ -260,13 +194,6 @@ object EmbQueries {
         |FROM e GROUP BY 1""".stripMargin),
 
     QueryDef("emb_lsh_buckets", qEmbLshBuckets,
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |proj AS (SELECT vec_id, b,
-        |    sum(CAST(v AS DOUBLE) *
-        |        (((2654435761 * i * (2*b+1) + 40503*(b+1)) % 100003) / 100003.0 - 0.5)) AS p
-        |  FROM e CROSS JOIN generate_series(0, 7) g(b) GROUP BY 1, 2)
-        |SELECT vec_id, CAST(sum(CASE WHEN p > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bucket
-        |FROM proj GROUP BY 1""".stripMargin)
+      s"WITH $EmbDims,\n${lshBucketCtes(8)}\nSELECT vec_id, bucket FROM bk")
   )
 }

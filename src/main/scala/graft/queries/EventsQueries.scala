@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import graft.OracleGen._
 import graft.core.Tables
 import graft.queries.Shared._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -319,17 +320,7 @@ object EventsQueries {
     // KMV distinct sketch: k-th smallest distinct 60-bit md5-prefix hash;
     // exact count below k=16 distinct, (k-1)/u_k estimate above
     QueryDef("events_kmv_users", qEventsKmvUsers,
-      """WITH e AS (SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms,
-        |  CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM events),
-        |d AS (SELECT DISTINCT hour_ms, h FROM e),
-        |r AS (SELECT hour_ms, h,
-        |        row_number() OVER (PARTITION BY hour_ms ORDER BY h) AS rn,
-        |        count(*) OVER (PARTITION BY hour_ms) AS cnt FROM d)
-        |SELECT hour_ms, CAST(cnt AS BIGINT) AS n_exact,
-        |  ROUND(CASE WHEN cnt < 16 THEN CAST(cnt AS DOUBLE)
-        |        ELSE 15.0 / (h / 1152921504606846976.0) END, 6) AS n_est
-        |FROM r WHERE rn = least(cnt, CAST(16 AS BIGINT))""".stripMargin),
+      kmvUsersSql(" CAST(cnt AS BIGINT) AS n_exact,")),
 
     // trailing-24h z-score anomaly flags on the reduced hourly frame
     QueryDef("events_anomaly", qEventsAnomaly,
@@ -380,13 +371,7 @@ object EventsQueries {
     // oracle states this query's own rule (>=) rather than reusing the
     // other's.
     QueryDef("events_session_window", qSessionWindow,
-      """WITH e AS (
-        |  SELECT user_id, value, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |flag AS (
-        |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms >= 1800000 THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
+      s"""WITH ${sessionFlagCtes("value", ">=")},
         |sess AS (
         |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ms
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sn
@@ -411,56 +396,19 @@ object EventsQueries {
     // streaming KMV == the batch sketch replay (estimate only: a stream
     // cannot COUNT(DISTINCT) at all)
     QueryDef("events_kmv_stream", qEventsKmvStream,
-      """WITH e AS (SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms,
-        |  CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM events),
-        |d AS (SELECT DISTINCT hour_ms, h FROM e),
-        |r AS (SELECT hour_ms, h,
-        |        row_number() OVER (PARTITION BY hour_ms ORDER BY h) AS rn,
-        |        count(*) OVER (PARTITION BY hour_ms) AS cnt FROM d)
-        |SELECT hour_ms,
-        |  ROUND(CASE WHEN cnt < 16 THEN CAST(cnt AS DOUBLE)
-        |        ELSE 15.0 / (h / 1152921504606846976.0) END, 6) AS n_est
-        |FROM r WHERE rn = least(cnt, CAST(16 AS BIGINT))""".stripMargin),
+      kmvUsersSql("")),
 
     // stream-stream interval join == the batch range predicate
     QueryDef("events_stream_join", qEventsStreamJoin,
-      """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-        |  (epoch_us(c.ts) - epoch_us(v.ts)) // 1000 AS gap_ms
-        |FROM events v JOIN events c ON c.user_id = v.user_id
-        |WHERE v.event_type = 'view' AND c.event_type = 'click'
-        |  AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 24 HOUR""".stripMargin),
+      ViewClickPairsSql),
 
     QueryDef("events_sessionize", qSessionize,
-      """WITH e AS (
-        |  SELECT user_id, event_id, value, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |flag AS (
-        |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
-        |sess AS (
-        |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_num
-        |  FROM flag)
-        |SELECT user_id, session_num, count(*) AS n_events, min(ms) AS start_ms,
-        |  max(ms) - min(ms) AS duration_ms, ROUND(sum(value), 4) AS sum_value
-        |FROM sess GROUP BY 1, 2""".stripMargin),
+      s"WITH ${sessionizeCtes("event_id, value")}\n$SessionsSql"),
 
     // top within-session 3-step paths: the sessionize CTEs plus two leads
     // over the session partition; ties on (count desc, path)
     QueryDef("events_top_paths", qTopPaths,
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |flag AS (
-        |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
-        |sess AS (
-        |  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_num
-        |  FROM flag),
+      s"""WITH ${sessionizeCtes("event_id, event_type")},
         |p AS (
         |  SELECT event_type || '>' || lead(event_type, 1) OVER sw
         |      || '>' || lead(event_type, 2) OVER sw AS path
@@ -509,30 +457,13 @@ object EventsQueries {
         |FROM r WHERE rank <= 3""".stripMargin),
 
     QueryDef("events_hourly", qEventsHourly,
-      """SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms, event_type,
-        |  count(*) AS n,
-        |  ROUND(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0, 4) AS sum_value,
-        |  ROUND(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 / count(*), 6) AS avg_value
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      HourlyEventsSql),
 
     // streaming sessionize emits exactly the CLOSED sessions: the batch
     // sessionization minus each user's final (open) session
     QueryDef("events_sessionize_stream", qSessionizeStream,
-      """WITH e AS (
-        |  SELECT user_id, event_id, value, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events),
-        |flag AS (
-        |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
-        |sess AS (
-        |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_num
-        |  FROM flag),
-        |agg AS (
-        |  SELECT user_id, session_num, count(*) AS n_events, min(ms) AS start_ms,
-        |    max(ms) - min(ms) AS duration_ms, ROUND(sum(value), 4) AS sum_value
-        |  FROM sess GROUP BY 1, 2)
+      s"""WITH ${sessionizeCtes("event_id, value")},
+        |agg AS ($SessionsSql)
         |SELECT * FROM agg
         |QUALIFY session_num < max(session_num) OVER (PARTITION BY user_id)""".stripMargin),
 
@@ -554,11 +485,7 @@ object EventsQueries {
     // windowed attribution pairs: the oracle states the range predicate
     // directly; the engine's bucketed equi-join must reproduce it exactly
     QueryDef("events_interval_join", qEventsIntervalJoin,
-      """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-        |  (epoch_us(c.ts) - epoch_us(v.ts)) // 1000 AS gap_ms
-        |FROM events v JOIN events c ON c.user_id = v.user_id
-        |WHERE v.event_type = 'view' AND c.event_type = 'click'
-        |  AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 24 HOUR""".stripMargin),
+      ViewClickPairsSql),
 
     // typed JSON field extraction + keyed aggregation (DuckDB sums of
     // BIGINT widen to HUGEINT — cast back so the schemas agree)
@@ -571,11 +498,7 @@ object EventsQueries {
 
     // the streaming twin must produce EXACTLY the batch aggregation
     QueryDef("events_hourly_stream", qEventsHourlyStream,
-      """SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms, event_type,
-        |  count(*) AS n,
-        |  ROUND(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0, 4) AS sum_value,
-        |  ROUND(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 / count(*), 6) AS avg_value
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      HourlyEventsSql),
 
     QueryDef("events_forecast", qEventsForecast,
       """WITH counts AS (

@@ -223,10 +223,9 @@ object MvQueries {
       val tag = s"v$p$eq"
       val xs = (1 to p).map(i => s"b$i") ++ (1 to p).map(i => s"m$i")
       val cond = (s"$yx IS NOT NULL" +: xs.map(x => s"$x IS NOT NULL")).mkString(" AND ")
-      val pred = "beta_0" + xs.zipWithIndex.map { case (x, i) => s" + beta_${i + 1}*$x" }.mkString
       s"""${OracleGen.momentsCte(tag, xs, s"wide WHERE $cond", yx)},
          |${OracleGen.solveCtes(tag, xs.size)},
-         |${tag}_a AS (SELECT count(*) * ln(sum(pow($yx - ($pred), 2)) / count(*))
+         |${tag}_a AS (SELECT count(*) * ln(sum(pow($yx - (${linPred(xs)}), 2)) / count(*))
          |  + 2.0 * ${xs.size + 1} AS aic FROM wide, ${tag}_fit WHERE $cond)""".stripMargin
     }).mkString(",\n")
     val aicsUnion = ps.map(p =>
@@ -253,23 +252,10 @@ object MvQueries {
 
     // star join → per-nation z-score → 25 grouped Cholesky OLS solves
     QueryDef("mv_star_fit", qMvStarFit,
-      s"""WITH base AS (
-         |  SELECT n_name AS series_id,
-         |    CAST(date_trunc('month', o_orderdate) AS DATE) AS ds,
-         |    ROUND(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0, 2) AS y
-         |  FROM lineitem
-         |  JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN nation ON c_nationkey = n_nationkey
-         |  GROUP BY 1, 2),
-         |zp AS (SELECT series_id, avg(y) AS mu, stddev_samp(y) AS sd
-         |       FROM base GROUP BY 1),
-         |series AS (SELECT base.series_id, ds, (y - mu) / sd AS y
-         |           FROM base JOIN zp USING (series_id)),
-         |feats AS (SELECT series_id, ds, y,
-         |    CAST(row_number() OVER (PARTITION BY series_id ORDER BY ds) AS DOUBLE) AS t,
-         |    lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS ar_1
-         |  FROM series),
+      s"""WITH base AS ($NationMonthly),
+         |${zScoreBySeriesCtes("base", "series")},
+         |${trendIndexCte(", lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS ar_1",
+              grouped = true, name = "feats")},
          |rws AS (SELECT * FROM feats WHERE ar_1 IS NOT NULL),
          |${OracleGen.momentsCte("sf", Seq("t", "ar_1"), "rws", keys = Seq("series_id"))},
          |${OracleGen.solveCtes("sf", 2)}
@@ -307,25 +293,13 @@ object MvQueries {
          |uni AS (
          |  SELECT 'a' AS series_id, ds, y FROM b2
          |  UNION ALL ${(fdefs ++ ndefs).mkString("\n  UNION ALL ")}),
-         |lg AS (SELECT series_id AS src, ds,
-         |       lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS xval FROM uni),
-         |pr AS (SELECT t.series_id AS target, l.src, corr(t.y, l.xval) AS c
-         |       FROM uni t JOIN lg l USING (ds)
-         |       WHERE t.series_id <> l.src AND l.xval IS NOT NULL GROUP BY 1, 2),
-         |rk AS (SELECT target, src,
-         |       row_number() OVER (PARTITION BY target ORDER BY abs(c) DESC, src ASC) AS r
-         |       FROM pr WHERE c IS NOT NULL AND abs(c) >= 0.6),
-         |blk AS (SELECT series_id AS target, series_id AS src, 0 AS r
-         |        FROM (SELECT DISTINCT series_id FROM uni)
-         |        UNION ALL SELECT target, src, r FROM rk WHERE r <= 1)
+         |${corrScreenCtes("uni", 1, " AND abs(c) >= 0.6")}
          |SELECT target, src, CAST(r AS BIGINT) AS src_rank FROM blk""".stripMargin
     }),
 
     QueryDef("mv_blocked_var", qBlockedVar,
       s"""$ZSEG,
-         |bounds AS (SELECT max(mn) AS lo, min(mx) AS hi FROM
-         |  (SELECT series_id, min(ds) AS mn, max(ds) AS mx FROM series GROUP BY 1)),
-         |series2 AS (SELECT s.* FROM series s, bounds WHERE s.ds BETWEEN lo AND hi),
+         |$CommonSpanCtes,
          |${blockedVarCtes("series2")}
          |SELECT f.target AS series_id, CAST(g.fi AS BIGINT) AS fi,
          |  coalesce(b2.src, 'intercept') AS src,
@@ -360,12 +334,10 @@ object MvQueries {
           s"ROUND(p_${sn(s)}, 6) AS yhat FROM rec, nn WHERE i >= 1")
         .mkString("\n UNION ALL ")
       s"""${ZSEG.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |bounds AS (SELECT max(mn) AS lo, min(mx) AS hi FROM
-         |  (SELECT series_id, min(ds) AS mn, max(ds) AS mx FROM series GROUP BY 1)),
-         |series2 AS (SELECT s.* FROM series s, bounds WHERE s.ds BETWEEN lo AND hi),
+         |$CommonSpanCtes,
          |${blockedVarCtes("series2")},
          |wm AS (SELECT $wcols, $ccols FROM blk b JOIN bv_fit f ON f.target = b.target),
-         |nn AS (SELECT max(ds) AS ld FROM series2),
+         |${nnCte("series2")},
          |rec AS (
          |  SELECT 0 AS i, $seed FROM nn
          |  UNION ALL
@@ -420,10 +392,7 @@ object MvQueries {
            |FROM eqrows e, ${tag}_fit WHERE e.series_id = '$sid'""".stripMargin
       s"""$SEG,
          |two AS (SELECT * FROM series WHERE series_id IN ('AUTOMOBILE', 'BUILDING')),
-         |zp AS (SELECT series_id, avg(y) AS mu, stddev_samp(y) AS sd
-         |       FROM two GROUP BY 1),
-         |tz AS (SELECT t.series_id, t.ds, (t.y - zp.mu) / zp.sd AS y
-         |       FROM two t JOIN zp USING (series_id)),
+         |${zScoreBySeriesCtes("two", "tz")},
          |longd AS (SELECT series_id, ds, y,
          |          y - lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS dy FROM tz),
          |spine AS (SELECT DISTINCT ds FROM tz),
@@ -458,10 +427,7 @@ object MvQueries {
            |${OracleGen.solveCtes(tag, 2)}""".stripMargin
       s"""${SEG.replaceFirst("WITH ", "WITH RECURSIVE ")},
          |two AS (SELECT * FROM series WHERE series_id IN ('AUTOMOBILE', 'BUILDING')),
-         |zp AS (SELECT series_id, avg(y) AS mu, stddev_samp(y) AS sd
-         |       FROM two GROUP BY 1),
-         |tz AS (SELECT t.series_id, t.ds, (t.y - zp.mu) / zp.sd AS y
-         |       FROM two t JOIN zp USING (series_id)),
+         |${zScoreBySeriesCtes("two", "tz")},
          |spine AS (SELECT DISTINCT ds FROM tz),
          |dense AS (SELECT sp.ds, sid.series_id, l.y
          |  FROM spine sp CROSS JOIN (VALUES ('AUTOMOBILE'), ('BUILDING')) sid(series_id)
@@ -476,7 +442,7 @@ object MvQueries {
          |  FROM tz l JOIN fw f ON f.ds = l.ds),
          |${eq("ma", "AUTOMOBILE")},
          |${eq("mb", "BUILDING")},
-         |nn AS (SELECT max(ds) AS ld FROM tz),
+         |${nnCte("tz")},
          |seed AS (SELECT
          |  (SELECT y FROM tz, nn WHERE series_id = 'AUTOMOBILE' AND ds = ld) AS pa,
          |  (SELECT y FROM tz, nn WHERE series_id = 'BUILDING' AND ds = ld) AS pb),
@@ -503,10 +469,7 @@ object MvQueries {
     QueryDef("mv_backtest", qMvBacktest,
       s"""$SEG,
          |two AS (SELECT * FROM series WHERE series_id IN ('AUTOMOBILE', 'BUILDING')),
-         |zp AS (SELECT series_id, avg(y) AS mu, stddev_samp(y) AS sd
-         |       FROM two GROUP BY 1),
-         |tz AS (SELECT t.series_id, t.ds, (t.y - zp.mu) / zp.sd AS y
-         |       FROM two t JOIN zp USING (series_id)),
+         |${zScoreBySeriesCtes("two", "tz")},
          |bdp AS (SELECT series_id, min(ds) AS lo, max(ds) AS hi FROM tz GROUP BY 1),
          |bd AS (SELECT max(lo) AS lo, min(hi) AS hi FROM bdp),
          |al AS (SELECT tz.* FROM tz, bd WHERE ds BETWEEN lo AND hi),

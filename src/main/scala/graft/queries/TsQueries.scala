@@ -1063,27 +1063,13 @@ object TsQueries {
       .select(col(SeriesId), col(Ds), round(col("yhat"), 6).as("yhat"))
   }
 
-  /** Z-scored trend+seasonal scoring with horizon (train = all but last 12);
-    * same shape as [[trendSeasonalSql]] but over the z-scored series. */
-  private def zTrendSeasonalForecastSql(tail: String): String =
-    s"""$ZS, s2 AS (SELECT series_id, ds, y,
-       |    CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
-       |nn AS (SELECT count(*) AS n, max(ds) AS last_ds FROM s2),
-       |train AS (SELECT s2.* FROM s2, nn WHERE t <= n - 12),
-       |fit AS (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a FROM train),
-       |eff AS (SELECT month(ds) AS m, avg(y - (a + b * t)) AS e
-       |        FROM train, fit GROUP BY 1),
-       |allrows AS (
-       |  SELECT series_id, ds, y, t, FALSE AS is_future FROM s2
-       |  UNION ALL
-       |  SELECT 'orders', CAST(last_ds + to_months(CAST(i AS INT)) AS DATE),
-       |         CAST(NULL AS DOUBLE), n + i, TRUE
-       |  FROM nn, generate_series(1, 12) t(i)),
-       |scored AS (
-       |  SELECT r.series_id, r.ds, r.y, r.is_future,
-       |         a + b * r.t + coalesce(eff.e, 0.0) AS yhat
-       |  FROM allrows r CROSS JOIN fit LEFT JOIN eff ON eff.m = month(r.ds))
-       |$tail""".stripMargin
+  /** Fourier pairs sin/cos(ω_j·t), j = 1..k, spliced as the SAME Scala
+    * double literals the Spark side uses, so both engines evaluate sin(c*t)
+    * on identical bits. */
+  private def fourier(k: Int): Seq[String] = (1 to k).flatMap { j =>
+    val w = graft.models.ProphetLike.omega(j, 12.0)
+    Seq(s"sin($w * t)", s"cos($w * t)")
+  }
 
   // ---- STL oracle machinery -----------------------------------------------
   // DuckDB text generators replaying [[graft.operators.Transforms.lowess]] /
@@ -1186,37 +1172,50 @@ object TsQueries {
     * tagged `<pfx><a|b><s><ar>`, over prep CTEs `<prep>tr`/`<prep>te`
     * (feature columns t/t2/ms/mc/a1/a2). Shared by the search oracle and
     * the spec-replay oracle (which runs a second set on the target series). */
-  private def xvarChainsSql(pfx: String, prep: String): String =
+  private def xvarChainsSql(pfx: String, prep: String, grouped: Boolean = false): String =
     (for ((tKey, tXs) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2) yield {
       val tag = s"$pfx$tKey$sKey$aKey"
       val xs = tXs ++ (if (sKey == 1) Seq("ms", "mc") else Nil) ++ (1 to aKey).map(i => s"a$i")
       val arCond = (1 to aKey).map(i => s" AND a$i IS NOT NULL").mkString
-      val pred = "beta_0" + xs.zipWithIndex.map { case (x, i) => s" + beta_${i + 1}*$x" }.mkString
-      s"""${OracleGen.momentsCte(tag, xs, s"${prep}tr WHERE TRUE$arCond")},
+      val (key, from, grp) =
+        if (grouped) ("te.series_id, ", s"${prep}te te JOIN ${tag}_fit USING (series_id)", " GROUP BY te.series_id")
+        else ("", s"${prep}te, ${tag}_fit", "")
+      s"""${OracleGen.momentsCte(tag, xs, s"${prep}tr WHERE TRUE$arCond",
+           keys = if (grouped) Seq("series_id") else Nil)},
          |${OracleGen.solveCtes(tag, xs.size)},
-         |${tag}_r AS (SELECT sqrt(avg(pow(y - ($pred), 2))) AS r_$tag FROM ${prep}te, ${tag}_fit)""".stripMargin
+         |${tag}_r AS MATERIALIZED (SELECT ${key}sqrt(avg(pow(y - (${linPred(xs)}), 2))) AS r_$tag
+         |  FROM $from WHERE TRUE$arCond$grp)""".stripMargin
     }).mkString(",\n")
 
-  /** Candidate-feature prep CTEs (`<prep>2/3/n/tr/te`) over a single-series
-    * CTE `src` (columns series_id/ds/y): trend, Fourier pair, AR lags, and
-    * the last-12 holdout split. */
-  private def xvarPrepSql(prep: String, src: String): String =
+  /** Candidate-feature prep CTEs (`<prep>2/3/n/tr/te`) over a series CTE
+    * `src` (columns series_id/ds/y): trend, Fourier pair, AR lags, and the
+    * last-12 holdout split — every window and count per series when grouped. */
+  private def xvarPrepSql(prep: String, src: String, grouped: Boolean = false): String = {
+    val w = if (grouped) "PARTITION BY series_id ORDER BY ds" else "ORDER BY ds"
+    val (key, grp, join) =
+      if (grouped) ("series_id, ", " GROUP BY 1", s" JOIN ${prep}n USING (series_id)")
+      else ("", "", s", ${prep}n")
     s"""${prep}2 AS (SELECT series_id, ds, y,
-       |  CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t,
+       |  CAST(row_number() OVER ($w) AS DOUBLE) AS t,
        |  sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc,
-       |  lag(y, 1) OVER (ORDER BY ds) AS a1, lag(y, 2) OVER (ORDER BY ds) AS a2
+       |  lag(y, 1) OVER ($w) AS a1, lag(y, 2) OVER ($w) AS a2
        |  FROM $src),
        |${prep}3 AS (SELECT *, t * t AS t2 FROM ${prep}2),
-       |${prep}n AS (SELECT count(*) AS n FROM ${prep}3),
-       |${prep}tr AS (SELECT p.* FROM ${prep}3 p, ${prep}n WHERE t <= n - 12),
-       |${prep}te AS (SELECT p.* FROM ${prep}3 p, ${prep}n WHERE t > n - 12)""".stripMargin
+       |${prep}n AS (SELECT ${key}count(*) AS n FROM ${prep}3$grp),
+       |${prep}tr AS (SELECT p.* FROM ${prep}3 p$join WHERE t <= n - 12),
+       |${prep}te AS (SELECT p.* FROM ${prep}3 p$join WHERE t > n - 12)""".stripMargin
+  }
 
   /** The three greedy decisions (trend → seasonal → AR order) over the
-    * `r_<pfx>*` columns, Scala minBy's first-min tie order. */
-  private def xvarSelSql(pfx: String): String = {
-    val rAll = (for ((tKey, _) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2)
-      yield s"$pfx$tKey$sKey${aKey}_r").mkString(", ")
-    s"""sel AS (SELECT
+    * `r_<pfx>*` columns (per series when grouped), Scala minBy's first-min
+    * tie order. */
+  private def xvarSelSql(pfx: String, grouped: Boolean = false): String = {
+    val rs = for ((tKey, _) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2)
+      yield s"$pfx$tKey$sKey${aKey}_r"
+    val rAll =
+      if (grouped) rs.head + rs.tail.map(r => s" JOIN $r USING (series_id)").mkString
+      else rs.mkString(", ")
+    s"""sel AS (SELECT ${if (grouped) "series_id," else ""}
        |  CASE WHEN r_${pfx}a00 <= r_${pfx}b00 THEN 0 ELSE 1 END AS dt,
        |  CASE WHEN dt = 0 THEN (CASE WHEN r_${pfx}a00 <= r_${pfx}a10 THEN 0 ELSE 1 END)
        |       ELSE (CASE WHEN r_${pfx}b00 <= r_${pfx}b10 THEN 0 ELSE 1 END) END AS dsn,
@@ -1230,54 +1229,25 @@ object TsQueries {
        |  FROM $rAll)""".stripMargin
   }
 
-  /** Grouped candidate-prep CTEs: [[xvarPrepSql]] with every window and
-    * count per series. */
-  private def xvarPrepBySeriesSql(prep: String, src: String): String =
-    s"""${prep}2 AS (SELECT series_id, ds, y,
-       |  CAST(row_number() OVER (PARTITION BY series_id ORDER BY ds) AS DOUBLE) AS t,
-       |  sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc,
-       |  lag(y, 1) OVER (PARTITION BY series_id ORDER BY ds) AS a1,
-       |  lag(y, 2) OVER (PARTITION BY series_id ORDER BY ds) AS a2
-       |  FROM $src),
-       |${prep}3 AS (SELECT *, t * t AS t2 FROM ${prep}2),
-       |${prep}n AS (SELECT series_id, count(*) AS n FROM ${prep}3 GROUP BY 1),
-       |${prep}tr AS (SELECT p.* FROM ${prep}3 p JOIN ${prep}n USING (series_id)
-       |  WHERE t <= n - 12),
-       |${prep}te AS (SELECT p.* FROM ${prep}3 p JOIN ${prep}n USING (series_id)
-       |  WHERE t > n - 12)""".stripMargin
+  /** The searched spec as output columns, from [[xvarSelSql]]'s decisions. */
+  private val XvarSpecCols =
+    """CASE dt WHEN 0 THEN 't' ELSE 't,t2' END AS trend,
+      |  CASE dsn WHEN 0 THEN '' ELSE 'monthsin,monthcos' END AS seasonal,
+      |  CAST(da AS BIGINT) AS ar_order""".stripMargin
 
-  /** Grouped 12-candidate fit+score chains: [[xvarChainsSql]] with moments
-    * keyed by series_id (one Cholesky chain solves every series) and
-    * per-series holdout rmse CTEs `<tag>_r(series_id, r_<tag>)`. */
-  private def xvarChainsBySeriesSql(pfx: String, prep: String): String =
-    (for ((tKey, tXs) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2) yield {
-      val tag = s"$pfx$tKey$sKey$aKey"
-      val xs = tXs ++ (if (sKey == 1) Seq("ms", "mc") else Nil) ++ (1 to aKey).map(i => s"a$i")
-      val arCond = (1 to aKey).map(i => s" AND a$i IS NOT NULL").mkString
-      val pred = "beta_0" + xs.zipWithIndex.map { case (x, i) => s" + beta_${i + 1}*$x" }.mkString
-      s"""${OracleGen.momentsCte(tag, xs, s"${prep}tr WHERE TRUE$arCond",
-           keys = Seq("series_id"))},
-         |${OracleGen.solveCtes(tag, xs.size)},
-         |${tag}_r AS MATERIALIZED (SELECT te.series_id,
-         |  sqrt(avg(pow(y - ($pred), 2))) AS r_$tag
-         |  FROM ${prep}te te JOIN ${tag}_fit USING (series_id)
-         |  WHERE TRUE$arCond GROUP BY te.series_id)""".stripMargin
-    }).mkString(",\n")
-
-  /** Oracle for ts_auto_xvar: replays all 12 reachable
-    * (trend ∈ {t; t,t2}) × (seasonal ∈ {∅; monthsin,monthcos}) ×
-    * (ar ∈ {0,1,2}) OLS fits — the empty trend candidate scores NaN in the
-    * engine (scoreFeatures on no features) so it can never win and is
-    * omitted statically — then walks the three greedy decisions with
-    * Scala minBy's first-min tie order. */
-  private def autoXvarOracleSql: String =
-    s"""$ZS,
-       |${xvarPrepSql("s", "series")},
-       |${xvarChainsSql("x", "s")},
-       |${xvarSelSql("x")}
-       |SELECT CASE dt WHEN 0 THEN 't' ELSE 't,t2' END AS trend,
-       |  CASE dsn WHEN 0 THEN '' ELSE 'monthsin,monthcos' END AS seasonal,
-       |  CAST(da AS BIGINT) AS ar_order,
+  /** Oracle for ts_auto_xvar (z-scored orders) and, grouped,
+    * ts_auto_xvar_by_series (z-scored segments, one search per series):
+    * replays all 12 reachable (trend ∈ {t; t,t2}) × (seasonal ∈ {∅;
+    * monthsin,monthcos}) × (ar ∈ {0,1,2}) OLS fits — the empty trend
+    * candidate scores NaN in the engine (scoreFeatures on no features) so it
+    * can never win and is omitted statically — then walks the three greedy
+    * decisions with Scala minBy's first-min tie order. */
+  private def autoXvarOracleSql(grouped: Boolean): String =
+    s"""${if (grouped) ZSEG else ZS},
+       |${xvarPrepSql("s", "series", grouped)},
+       |${xvarChainsSql("x", "s", grouped)},
+       |${xvarSelSql("x", grouped)}
+       |SELECT ${if (grouped) "series_id, " else ""}$XvarSpecCols,
        |  ROUND(CASE da WHEN 0 THEN r0 WHEN 1 THEN r1 ELSE r2 END, 6) AS rmse
        |FROM sel""".stripMargin
 
@@ -1291,21 +1261,14 @@ object TsQueries {
       s"WHEN dt = $dt AND dsn = $sKey AND da = $aKey THEN r_g$tKey$sKey$aKey"
     }).mkString(" ")
     s"""$ZS,
-       |bb AS (SELECT 'BUILDING' AS series_id,
-       |       CAST(date_trunc('month', o_orderdate) AS DATE) AS ds,
-       |       ROUND(SUM(o_totalprice), 2) AS y
-       |       FROM orders JOIN customer ON o_custkey = c_custkey
-       |       WHERE c_mktsegment = 'BUILDING' GROUP BY 1, 2),
-       |bz AS (SELECT avg(y) AS mu, stddev_samp(y) AS sd FROM bb),
-       |gseries AS (SELECT series_id, ds, (y - mu) / sd AS y FROM bb, bz),
+       |bb AS (${monthlyOrders("'BUILDING'", SegmentJoin, " WHERE c_mktsegment = 'BUILDING'")}),
+       |${zScoreCtes("bb", "gseries", "bz")},
        |${xvarPrepSql("s", "series")},
        |${xvarPrepSql("g", "gseries")},
        |${xvarChainsSql("x", "s")},
        |${xvarChainsSql("g", "g")},
        |${xvarSelSql("x")}
-       |SELECT CASE dt WHEN 0 THEN 't' ELSE 't,t2' END AS trend,
-       |  CASE dsn WHEN 0 THEN '' ELSE 'monthsin,monthcos' END AS seasonal,
-       |  CAST(da AS BIGINT) AS ar_order,
+       |SELECT $XvarSpecCols,
        |  ROUND(CASE $segCase END, 6) AS seg_rmse
        |FROM sel, ${(for ((tKey, _) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2)
         yield s"g$tKey$sKey${aKey}_r").mkString(", ")}""".stripMargin
@@ -1317,9 +1280,9 @@ object TsQueries {
     * union of the accepted/rejected branches under that flag. */
   private def optTransformOracleSql: String =
     s"""$ZS,
-       |st0 AS MATERIALIZED (SELECT ds, y FROM series),
+       |st0 AS MATERIALIZED (SELECT series_id, ds, y FROM series),
        |${ar4ScoreCtes("s0", "st0")},
-       |st0t AS MATERIALIZED (SELECT ds, y, CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM st0),
+       |${trendIndexCte(src = "st0", name = "st0t")},
        |dtp AS MATERIALIZED (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a FROM st0t),
        |c1 AS MATERIALIZED (SELECT ds, y - (a + b * t) AS y FROM st0t, dtp),
        |${ar4ScoreCtes("s1", "c1")},
@@ -1369,24 +1332,17 @@ object TsQueries {
       "c3"  -> all.filter(_._2 == "mc"))
     val chains = subsets.map { case (tag, fs) =>
       val cols = fs.map(_._2)
-      val pred = "beta_0" + cols.zipWithIndex
-        .map { case (c, i) => s" + beta_${i + 1}*$c" }.mkString
       val imps = fs.zipWithIndex.map { case ((_, c), i) =>
         s"any_value(abs(beta_${i + 1}) * sd_$c) AS imp_${tag}_$c" }
       s"""${OracleGen.momentsCte(tag, cols, "tr")},
          |${OracleGen.solveCtes(tag, cols.size)},
-         |${tag}_r AS (SELECT sqrt(avg(pow(y - ($pred), 2))) AS rmse_$tag,
+         |${tag}_r AS (SELECT sqrt(avg(pow(y - (${linPred(cols)}), 2))) AS rmse_$tag,
          |  ${imps.mkString(", ")} FROM te, ${tag}_fit, sds)""".stripMargin
     }.mkString(",\n")
     val joinAll = subsets.map(s => s"${s._1}_r").mkString(", ")
     s"""$ZS,
-       |s2 AS (SELECT series_id, ds, y,
-       |  CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t,
-       |  sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc
-       |  FROM series),
-       |nn AS (SELECT count(*) AS n FROM s2),
-       |tr AS (SELECT s2.* FROM s2, nn WHERE t <= n - 12),
-       |te AS (SELECT s2.* FROM s2, nn WHERE t > n - 12),
+       |${trendIndexCte(", sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc")},
+       |${holdoutCtes()},
        |sds AS (SELECT stddev_samp(t) AS sd_t, stddev_samp(ms) AS sd_ms,
        |        stddev_samp(mc) AS sd_mc FROM tr),
        |$chains,
@@ -1420,15 +1376,7 @@ object TsQueries {
 
     // star-schema series ingest: net revenue per customer nation per month
     QueryDef("ts_build_star", (s, d) => SeriesFrame.nationMonthly(s, d).orderBy(SeriesId, Ds),
-      """SELECT n_name AS series_id,
-        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS ds,
-        |  ROUND(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0, 2) AS y,
-        |  FALSE AS is_future
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      s"WITH base AS ($NationMonthly)\nSELECT series_id, ds, y, FALSE AS is_future FROM base ORDER BY 1, 2"),
 
     // weekly (ISO Monday-truncated) brand quantity series off lineitem⨝part
     QueryDef("ts_build_brand_weekly", qBuildBrandWeekly,
@@ -1441,15 +1389,7 @@ object TsQueries {
     // hierarchical reconciliation: cents-space history, snaive spine, both
     // reconciliation paths, and the share arithmetic replayed term for term
     QueryDef("ts_reconcile", qReconcile,
-      """WITH base AS (
-        |  SELECT n_name AS series_id,
-        |    CAST(date_trunc('month', o_orderdate) AS DATE) AS ds,
-        |    ROUND(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0, 2) AS y
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH base AS ($NationMonthly),
         |map AS (SELECT n_name AS series_id, r_name AS parent
         |  FROM nation JOIN region ON n_regionkey = r_regionkey),
         |bh AS (SELECT b.series_id, m.parent, ds, CAST(ROUND(y * 100) AS BIGINT) AS yc
@@ -1498,15 +1438,15 @@ object TsQueries {
          |FROM series WINDOW w AS (ORDER BY ds)""".stripMargin),
 
     QueryDef("ts_calendar", qCalendar,
-      s"""$S SELECT series_id, ds,
-         |  CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t,
+      s"""$S, ${trendIndexCte()}
+         |SELECT series_id, ds, t,
          |  CAST(month(ds) AS DOUBLE) AS month, CAST(quarter(ds) AS DOUBLE) AS quarter,
          |  CAST(year(ds) AS DOUBLE) AS year,
          |  ROUND(sin(pi() * month(ds) / 6.0), 6) + 0.0 AS monthsin,
          |  ROUND(cos(pi() * month(ds) / 6.0), 6) + 0.0 AS monthcos,
-         |  ROUND(sin(pi() * (row_number() OVER (ORDER BY ds)) / 6.75), 6) + 0.0 AS cycsin,
-         |  ROUND(cos(pi() * (row_number() OVER (ORDER BY ds)) / 6.75), 6) + 0.0 AS cyccos
-         |FROM series""".stripMargin),
+         |  ROUND(sin(pi() * t / 6.75), 6) + 0.0 AS cycsin,
+         |  ROUND(cos(pi() * t / 6.75), 6) + 0.0 AS cyccos
+         |FROM s2""".stripMargin),
 
     QueryDef("ts_naive", qNaive,
       s"""$S, obs AS (
@@ -1527,8 +1467,7 @@ object TsQueries {
          |SELECT series_id, ds, y, yhat_naive, yhat_snaive, TRUE AS is_future FROM fut""".stripMargin),
 
     QueryDef("ts_metrics", qMetrics,
-      s"""$S, p AS (SELECT avg(y) AS mu, stddev_samp(y) AS sd FROM series),
-         |z AS (SELECT series_id, ds, (y - mu) / sd AS y FROM series, p),
+      s"""$S, ${zScoreCtes("series", "z", "p")},
          |f AS (SELECT series_id, ds, y,
          |        lag(y, 1) OVER (ORDER BY ds) AS f_naive,
          |        lag(y, 12) OVER (ORDER BY ds) AS f_snaive FROM z),
@@ -1584,8 +1523,7 @@ object TsQueries {
          |FROM series WINDOW w AS (ORDER BY ds)""".stripMargin),
 
     QueryDef("ts_detrend", qDetrend,
-      s"""$S, s2 AS (SELECT series_id, ds, y,
-         |    CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
+      s"""$S, ${trendIndexCte()},
          |fit AS (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a FROM s2)
          |SELECT series_id, ds, y,
          |  ROUND(y - (a + b * t), 0) AS resid,
@@ -1627,13 +1565,11 @@ object TsQueries {
     // quantile_cont width per series over its own holdout
     QueryDef("ts_conformal_by_series", qConformalBySeries,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val xs = Seq("t", s"sin($w1 * t)", s"cos($w1 * t)")
-      val pred = s"beta_0 + beta_1*t + beta_2*sin($w1 * t) + beta_3*cos($w1 * t)"
+      val xs = "t" +: fourier(1)
+      val pred = linPred(xs)
       s"""$ZSEG,
-         |s2 AS (SELECT series_id, ds, y, CAST(row_number() OVER
-         |  (PARTITION BY series_id ORDER BY ds) AS DOUBLE) AS t FROM series),
-         |nn AS (SELECT series_id, count(*) AS n, max(ds) AS ld FROM s2 GROUP BY 1),
+         |${trendIndexCte(grouped = true)},
+         |${nnCte(grouped = true)},
          |s3 AS (SELECT s2.*, s2.t > nn.n - 12 AS is_test
          |       FROM s2 JOIN nn USING (series_id)),
          |${OracleGen.momentsCte("gc", xs, "s3 WHERE NOT is_test",
@@ -1668,8 +1604,7 @@ object TsQueries {
         val s1xs = (1 to l).map(j => s"l$j")
         val s1 = s"${OracleGen.momentsCte(s"c${i}s1", s1xs, s"lagd WHERE t > $l")},\n" +
           OracleGen.solveCtes(s"c${i}s1", l)
-        val pred1 = ("beta_0" +: s1xs.zipWithIndex.map { case (x, j) => s"beta_${j + 1}*$x" })
-          .mkString(" + ")
+        val pred1 = linPred(s1xs)
         // innovations + their lags (e rows are contiguous t > L, so window
         // lags over them are exactly e_{t-j})
         val eCte = s"e$i AS (SELECT t, y, " +
@@ -1686,8 +1621,7 @@ object TsQueries {
         val from2 = if (q == 0) "lagd" else s"el$i"
         val s2 = s"${OracleGen.momentsCte(s"c${i}s2", s2xs, s"$from2 WHERE t > $lo2")},\n" +
           OracleGen.solveCtes(s"c${i}s2", s2xs.size)
-        val pred2 = ("beta_0" +: s2xs.zipWithIndex.map { case (x, j) => s"beta_${j + 1}*$x" })
-          .mkString(" + ")
+        val pred2 = linPred(s2xs)
         val ss = s"ss$i AS (SELECT sum(pow(y - ($pred2), 2)) AS sse, " +
           s"CAST(count(*) AS DOUBLE) AS n FROM $from2, c${i}s2_fit WHERE t > $lo2)"
         (Seq(s1) ++ (if (q > 0) Seq(eCte, elCte) else Nil) ++ Seq(s2, ss)).mkString(",\n")
@@ -1696,11 +1630,9 @@ object TsQueries {
         s"SELECT CAST($p AS BIGINT) AS p, CAST($q AS BIGINT) AS q, $i AS idx, " +
           s"n * ln(sse / n) + 2.0 * ${p + q + 1} AS aic FROM ss$i"
       }.mkString("\nUNION ALL\n")
+      val lags = (1 to maxL).map(j => s", lag(y, $j) OVER (ORDER BY ds) AS l$j").mkString
       s"""$ZS,
-         |lagd AS (SELECT series_id, ds, y,
-         |         CAST(row_number() OVER (ORDER BY ds) AS INT) AS t,
-         |         ${(1 to maxL).map(j => s"lag(y, $j) OVER (ORDER BY ds) AS l$j").mkString(", ")}
-         |         FROM series),
+         |${trendIndexCte(lags, "INT", name = "lagd")},
          |$defs,
          |scored AS ($rows)
          |SELECT p, q, ROUND(aic, 6) AS aic FROM scored ORDER BY aic, idx LIMIT 1""".stripMargin
@@ -1737,22 +1669,7 @@ object TsQueries {
     QueryDef("ts_stat_transform", qStatTransform,
       s"""$S,
          |cum AS (SELECT series_id, ds, sum(y) OVER (ORDER BY ds) AS y FROM series),
-         |r0 AS (SELECT series_id, ds, y,
-         |       y - lag(y) OVER (ORDER BY ds) AS dy,
-         |       lag(y) OVER (ORDER BY ds) AS ylag FROM cum),
-         |r1 AS (SELECT *, lag(dy) OVER (ORDER BY ds) AS dy1 FROM r0),
-         |rws AS (SELECT * FROM r1
-         |        WHERE dy IS NOT NULL AND ylag IS NOT NULL AND dy1 IS NOT NULL),
-         |${OracleGen.momentsCte("ad", Seq("ylag", "dy1"), "rws", yExpr = "dy")},
-         |${OracleGen.solveCtes("ad", 2)},
-         |ex AS (SELECT sum(dy * dy) AS syy, CAST(count(*) AS DOUBLE) AS n FROM rws),
-         |adf AS (SELECT beta_1 / sqrt(
-         |    (syy - (beta_0 * sb_0 + beta_1 * sb_1 + beta_2 * sb_2)) / (n - 3) *
-         |    ((sa_0_0 * sa_2_2 - sa_2_0 * sa_2_0) /
-         |     (sa_0_0 * (sa_1_1 * sa_2_2 - sa_2_1 * sa_2_1)
-         |      - sa_1_0 * (sa_1_0 * sa_2_2 - sa_2_1 * sa_2_0)
-         |      + sa_2_0 * (sa_1_0 * sa_2_1 - sa_1_1 * sa_2_0)))) AS t
-         |  FROM ad_fit, ex),
+         |${adfCtes("cum", grouped = false)},
          |dec AS (SELECT (SELECT t FROM adf) > -2.86 AS nonstat,
          |               (SELECT min(y) FROM cum) > 0 AS pos),
          |s1 AS (SELECT series_id, ds,
@@ -1779,18 +1696,11 @@ object TsQueries {
     // percentile becomes the target's CI width.
     QueryDef("ts_transfer", qTransfer,
       s"""$S,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t,
-         |       lag(y) OVER (ORDER BY ds) AS yl FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |fit AS (SELECT regr_slope(y, yl) AS b, regr_intercept(y, yl) AS a
-         |        FROM s2, nn WHERE t <= n - 12 AND yl IS NOT NULL),
-         |wid AS (SELECT quantile_cont(abs(y - (a + b * yl)), 0.95) AS w
-         |        FROM s2, nn, fit WHERE t > n - 12),
-         |tgt AS (SELECT c_mktsegment AS series_id,
-         |        CAST(date_trunc('month', o_orderdate) AS DATE) AS ds,
-         |        ROUND(SUM(o_totalprice), 2) AS y
-         |        FROM orders JOIN customer ON o_custkey = c_custkey
-         |        WHERE c_mktsegment = 'BUILDING' GROUP BY 1, 2),
+         |${trendIndexCte(", lag(y) OVER (ORDER BY ds) AS yl", "BIGINT")},
+         |${holdoutCtes(trWhere = " AND yl IS NOT NULL")},
+         |fit AS (SELECT regr_slope(y, yl) AS b, regr_intercept(y, yl) AS a FROM tr),
+         |wid AS (SELECT quantile_cont(abs(y - (a + b * yl)), 0.95) AS w FROM te, fit),
+         |tgt AS (${monthlyOrders("c_mktsegment", SegmentJoin, " WHERE c_mktsegment = 'BUILDING'")}),
          |t2 AS (SELECT series_id, ds, y, lag(y) OVER (ORDER BY ds) AS yl FROM tgt)
          |SELECT series_id, ds, ROUND(y, 2) AS y, ROUND(a + b * yl, 0) AS yhat,
          |       ROUND(a + b * yl - w, 0) AS lower, ROUND(a + b * yl + w, 0) AS upper
@@ -1814,7 +1724,7 @@ object TsQueries {
       reduceXvarsOracleSql),
 
     QueryDef("ts_auto_xvar", qAutoXvar,
-      autoXvarOracleSql),
+      autoXvarOracleSql(grouped = false)),
 
     QueryDef("ts_xvar_replay", qXvarReplay,
       xvarReplayOracleSql),
@@ -1845,7 +1755,7 @@ object TsQueries {
     QueryDef("ts_stl", qStl,
       s"""$ZS,
          |s0 AS (SELECT series_id, ds, y AS v, row_number() OVER (ORDER BY ds) - 1 AS i FROM series),
-         |nn AS (SELECT count(*) AS n FROM s0),
+         |${nnCte("s0")},
          |${stlIteration(1, None)},
          |${stlIteration(2, Some("tr1"))}
          |SELECT s0.series_id, s0.ds, ROUND(tr2.fit, 6) AS trend,
@@ -1858,7 +1768,7 @@ object TsQueries {
     QueryDef("ts_periodogram", qPeriodogram,
       s"""$ZS,
          |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS rn FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
+         |${nnCte()},
          |ks AS (SELECT unnest(range(1, CAST(n // 2 AS BIGINT) + 1)) AS k FROM nn),
          |mu AS (SELECT avg(y) AS mu FROM s2),
          |c AS (SELECT series_id, rn - 1 AS tt, y - mu AS c FROM s2, mu)
@@ -1871,15 +1781,10 @@ object TsQueries {
     // find_seasonal_length: ACF at each candidate period, winner flagged by
     // strict argmax on the unrounded statistic.
     QueryDef("ts_seasonal_length", qSeasonalLength,
-      s"""$S, s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS rn FROM series),
-         |mu AS (SELECT avg(y) AS mu, count(*) AS n FROM s2),
-         |c AS (SELECT series_id, rn, y - mu AS c FROM s2, mu),
-         |d AS (SELECT sum(c * c) AS d FROM c),
+      s"""$S, $AcfCtes,
          |acfs AS (SELECT a.series_id, g.k AS lag,
          |    sum(a.c * b.c) / (SELECT d FROM d) AS acf
-         |  FROM (VALUES (3), (4), (6), (12)) g(k)
-         |  JOIN c a ON a.rn > g.k
-         |  JOIN c b ON b.rn = a.rn - g.k AND b.series_id = a.series_id
+         |  FROM ${acfPairs("(VALUES (3), (4), (6), (12))")}
          |  GROUP BY 1, 2)
          |SELECT series_id, CAST(lag AS BIGINT) AS lag, ROUND(acf, 6) AS acf,
          |       acf = max(acf) OVER () AS is_best
@@ -1895,9 +1800,7 @@ object TsQueries {
          |d AS (SELECT series_id, sum(c * c) AS d FROM c GROUP BY 1),
          |acfs AS (SELECT a.series_id, g.k AS lag,
          |    sum(a.c * b.c) / any_value(d.d) AS acf
-         |  FROM (VALUES (3), (4), (6), (12)) g(k)
-         |  JOIN c a ON a.rn > g.k
-         |  JOIN c b ON b.rn = a.rn - g.k AND b.series_id = a.series_id
+         |  FROM ${acfPairs("(VALUES (3), (4), (6), (12))")}
          |  JOIN d ON d.series_id = a.series_id
          |  GROUP BY 1, 2),
          |best AS (SELECT series_id, lag, acf, row_number()
@@ -1913,9 +1816,7 @@ object TsQueries {
     QueryDef("ts_opt_transform_by_series", qOptTransformBySeries,
       s"""$ZSEG,
          |${ar4ScoreBySeriesCtes("q0", "series")},
-         |st AS (SELECT series_id, ds, y,
-         |  CAST(row_number() OVER (PARTITION BY series_id ORDER BY ds) AS DOUBLE) AS t
-         |  FROM series),
+         |${trendIndexCte(grouped = true, name = "st")},
          |dt AS (SELECT series_id, covar_samp(t, y) / var_samp(t) AS slope,
          |       avg(y) - covar_samp(t, y) / var_samp(t) * avg(t) AS icept
          |       FROM st GROUP BY 1),
@@ -1948,32 +1849,7 @@ object TsQueries {
     // grouped auto_Xvar_select: the full 12-candidate staged search run per
     // series — grouped moments chains + a per-series greedy decision tree
     QueryDef("ts_auto_xvar_by_series", qAutoXvarBySeries,
-      {
-      val tags = for ((tKey, _) <- xvarTrendSets; sKey <- 0 to 1; aKey <- 0 to 2)
-        yield s"x$tKey$sKey$aKey"
-      val rJoin = s"${tags.head}_r" +
-        tags.tail.map(t => s" JOIN ${t}_r USING (series_id)").mkString
-      s"""$ZSEG,
-         |${xvarPrepBySeriesSql("s", "series")},
-         |${xvarChainsBySeriesSql("x", "s")},
-         |sel AS (SELECT series_id,
-         |  CASE WHEN r_xa00 <= r_xb00 THEN 0 ELSE 1 END AS dt,
-         |  CASE WHEN dt = 0 THEN (CASE WHEN r_xa00 <= r_xa10 THEN 0 ELSE 1 END)
-         |       ELSE (CASE WHEN r_xb00 <= r_xb10 THEN 0 ELSE 1 END) END AS dsn,
-         |  CASE WHEN dt = 0 AND dsn = 0 THEN r_xa00 WHEN dt = 0 THEN r_xa10
-         |       WHEN dsn = 0 THEN r_xb00 ELSE r_xb10 END AS r0,
-         |  CASE WHEN dt = 0 AND dsn = 0 THEN r_xa01 WHEN dt = 0 THEN r_xa11
-         |       WHEN dsn = 0 THEN r_xb01 ELSE r_xb11 END AS r1,
-         |  CASE WHEN dt = 0 AND dsn = 0 THEN r_xa02 WHEN dt = 0 THEN r_xa12
-         |       WHEN dsn = 0 THEN r_xb02 ELSE r_xb12 END AS r2,
-         |  CASE WHEN r0 <= r1 AND r0 <= r2 THEN 0 WHEN r1 <= r2 THEN 1 ELSE 2 END AS da
-         |  FROM $rJoin)
-         |SELECT series_id, CASE dt WHEN 0 THEN 't' ELSE 't,t2' END AS trend,
-         |  CASE dsn WHEN 0 THEN '' ELSE 'monthsin,monthcos' END AS seasonal,
-         |  CAST(da AS BIGINT) AS ar_order,
-         |  ROUND(CASE da WHEN 0 THEN r0 WHEN 1 THEN r1 ELSE r2 END, 6) AS rmse
-         |FROM sel""".stripMargin
-    }),
+      autoXvarOracleSql(grouped = true)),
 
     // grouped find_statistical_transformation decision table: every
     // segment's ADF(p=1) regression solved in ONE grouped Cholesky chain
@@ -1981,43 +1857,21 @@ object TsQueries {
     // moments row per series flows through as one fit per series).
     QueryDef("ts_stat_recipes_by_series", qStatRecipesBySeries,
       s"""$ZSEG,
-         |r0 AS (SELECT series_id, ds, y,
-         |       y - lag(y) OVER w AS dy, lag(y) OVER w AS ylag FROM series
-         |       WINDOW w AS (PARTITION BY series_id ORDER BY ds)),
-         |r1 AS (SELECT *, lag(dy) OVER (PARTITION BY series_id ORDER BY ds) AS dy1 FROM r0),
-         |rws AS (SELECT * FROM r1
-         |        WHERE dy IS NOT NULL AND ylag IS NOT NULL AND dy1 IS NOT NULL),
-         |${OracleGen.momentsCte("ad", Seq("ylag", "dy1"), "rws", yExpr = "dy",
-                                 keys = Seq("series_id"))},
-         |${OracleGen.solveCtes("ad", 2)},
-         |ex AS (SELECT series_id, sum(dy * dy) AS syy,
-         |       CAST(count(*) AS DOUBLE) AS n FROM rws GROUP BY 1),
-         |fin AS MATERIALIZED (SELECT f.series_id,
-         |  sa_0_0 * (sa_1_1 * sa_2_2 - sa_2_1 * sa_2_1)
-         |  - sa_1_0 * (sa_1_0 * sa_2_2 - sa_2_1 * sa_2_0)
-         |  + sa_2_0 * (sa_1_0 * sa_2_1 - sa_1_1 * sa_2_0) AS det,
-         |  (sa_0_0 * sa_2_2 - sa_2_0 * sa_2_0) AS c11,
-         |  syy - (beta_0 * sb_0 + beta_1 * sb_1 + beta_2 * sb_2) AS rss,
-         |  n, beta_1
-         |  FROM ad_fit f JOIN ex USING (series_id)),
-         |tt AS (SELECT series_id,
-         |  beta_1 / sqrt(rss / (n - 3) * (c11 / det)) AS t FROM fin)
-         |SELECT tt.series_id, ROUND(t, 6) AS adf_t, t > -2.86 AS needs_diff,
+         |${adfCtes("series", grouped = true)}
+         |SELECT adf.series_id, ROUND(t, 6) AS adf_t, t > -2.86 AS needs_diff,
          |       (t > -2.86 AND miny > 0) AS use_log
-         |FROM tt JOIN zp USING (series_id)""".stripMargin),
+         |FROM adf JOIN zp USING (series_id)""".stripMargin),
 
     // save_feature_importance: |standardized coefficient| = |beta_j| * sd_j
     // of the unstandardized OLS fit; rank by importance desc with the
     // feature-order tiebreak of a stable sort.
     QueryDef("ts_feature_imp", qFeatureImportance,
       {
+      val feats = ", sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc, " +
+        "lag(y, 1) OVER (ORDER BY ds) AS ar1"
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |  CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t,
-         |  sin(pi() * month(ds) / 6.0) AS ms, cos(pi() * month(ds) / 6.0) AS mc,
-         |  lag(y, 1) OVER (ORDER BY ds) AS ar1 FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |tr AS (SELECT s2.* FROM s2, nn WHERE t <= n - 12 AND ar1 IS NOT NULL),
+         |${trendIndexCte(feats)},
+         |${holdoutCtes(trWhere = " AND ar1 IS NOT NULL")},
          |sds AS (SELECT stddev_samp(t) AS sd_t, stddev_samp(ms) AS sd_ms,
          |        stddev_samp(mc) AS sd_mc, stddev_samp(ar1) AS sd_ar1 FROM tr),
          |${OracleGen.momentsCte("fi", Seq("t", "ms", "mc", "ar1"), "tr")},
@@ -2038,7 +1892,7 @@ object TsQueries {
     // cells stay observed inside h=12, future innovations are 0).
     QueryDef("ts_sarma", qSarma,
       {
-      val s1pred = "beta_0" + (1 to 16).map(i => s" + beta_$i*x$i").mkString
+      val s1pred = linPred((1 to 16).map(i => s"x$i"))
       s"""$ZSR,
          |lagd AS (SELECT series_id, ds, y,
          |  ${(1 to 16).map(i => s"lag(y, $i) OVER (ORDER BY ds) AS x$i").mkString(", ")}
@@ -2058,7 +1912,7 @@ object TsQueries {
          |        ROUND(CASE WHEN ar1 IS NOT NULL AND ar12 IS NOT NULL AND elag IS NOT NULL
          |              THEN c + phi1*ar1 + phi12*ar12 + th1*elag END, 6) AS yhat,
          |        FALSE AS is_future FROM e2, f2),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM series),
+         |${nnCte("series")},
          |tl AS (SELECT n - t AS back, y FROM e2, nn WHERE t > n - 12),
          |le AS (SELECT e FROM er ORDER BY ds DESC LIMIT 1),
          |st AS (SELECT y AS yh FROM e2, nn WHERE t = n),
@@ -2070,11 +1924,7 @@ object TsQueries {
          |           + CASE WHEN fc.i = 0 THEN th1*le.e ELSE 0 END
          |  FROM fc JOIN tl ON tl.back = 11 - fc.i CROSS JOIN f2 CROSS JOIN le
          |  WHERE fc.i < 12),
-         |fut AS (SELECT 'orders' AS series_id,
-         |        CAST(ld + to_months(i::INT) AS DATE) AS ds, CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(fc.yh, 6) AS yhat, TRUE AS is_future
-         |        FROM fc, nn WHERE fc.i >= 1)
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin
+         |${horizonSql("ROUND(fc.yh, 6)", "fc, nn WHERE fc.i >= 1")}""".stripMargin
     }),
 
     QueryDef("ts_ar1_mlr", qAr1Mlr,
@@ -2082,16 +1932,12 @@ object TsQueries {
          |lagd AS (SELECT series_id, ds, y, lag(y) OVER (ORDER BY ds) AS yl FROM series),
          |fit AS (SELECT regr_slope(y, yl) AS b, regr_intercept(y, yl) AS a
          |        FROM lagd WHERE yl IS NOT NULL),
-         |nn AS (SELECT max(ds) AS ld, count(*) AS n FROM series),
+         |${nnCte("series")},
          |yt AS (SELECT y AS yT FROM series ORDER BY ds DESC LIMIT 1),
          |obs AS (SELECT series_id, ds, ROUND(y, 6) AS y, ROUND(a + b * yl, 6) AS yhat,
          |        FALSE AS is_future FROM lagd, fit),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(a * (1 - pow(b, i)) / (1 - b) + pow(b, i) * yT, 6) AS yhat,
-         |        TRUE AS is_future
-         |        FROM nn, fit, yt, generate_series(1, 12) g(i))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin),
+         |${horizonSql("ROUND(a * (1 - pow(b, i)) / (1 - b) + pow(b, i) * yT, 6)",
+              "nn, fit, yt, generate_series(1, 12) g(i)")}""".stripMargin),
 
     // prophet_like: trend + order-2 Fourier OLS; the sin/cos angular
     // coefficients are spliced as the SAME Scala double literals the Spark
@@ -2100,38 +1946,12 @@ object TsQueries {
     // → Box-Cox series → trend+Fourier OLS via unrolled Cholesky → revert
     QueryDef("ts_tbats_like", qTbatsLike,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val w2 = graft.models.ProphetLike.omega(2, 12.0)
-      val xs = Seq("t", s"sin($w1 * t)", s"cos($w1 * t)", s"sin($w2 * t)", s"cos($w2 * t)")
-      val pred = s"beta_0 + beta_1*t + beta_2*sin($w1 * t) + beta_3*cos($w1 * t) " +
-        s"+ beta_4*sin($w2 * t) + beta_5*cos($w2 * t)"
-      val inv = s"CASE WHEN b.l = 0.0 THEN exp($pred) " +
-        s"ELSE pow(($pred) * b.l + 1, 1.0 / b.l) END"
-      s"""$S,
-         |cands AS (SELECT i / 10.0 AS l FROM generate_series(-20, 20) g(i)),
-         |bcp AS (SELECT c.l,
-         |  CASE WHEN c.l = 0.0 THEN ln(s.y) ELSE (pow(s.y, c.l) - 1) / c.l END AS p
-         |  FROM series s CROSS JOIN cands c),
-         |slog AS (SELECT sum(ln(y)) AS sl, CAST(count(*) AS DOUBLE) AS n FROM series),
-         |vv AS (SELECT l, sum(p*p)/count(*) - pow(sum(p)/count(*), 2) AS v
-         |       FROM bcp GROUP BY l),
-         |ll AS (SELECT l, CASE WHEN v <= 0 THEN -1e308
-         |       ELSE -(n/2.0) * ln(v) + (l - 1.0) * sl END AS ll FROM vv, slog),
-         |best AS (SELECT l FROM ll ORDER BY ll DESC, l ASC LIMIT 1),
-         |s2 AS (SELECT s.series_id, s.ds, s.y,
-         |  CASE WHEN b.l = 0.0 THEN ln(s.y) ELSE (pow(s.y, b.l) - 1) / b.l END AS yb,
-         |  CAST(row_number() OVER (ORDER BY s.ds) AS DOUBLE) AS t
-         |  FROM series s, best b),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
-         |${OracleGen.momentsCte("tb", xs, "s2", yExpr = "yb")},
-         |${OracleGen.solveCtes("tb", 5)},
+      val xs = "t" +: fourier(2)
+      val inv = invBoxCox(linPred(xs))
+      s"""${tbatsCurveCtes(xs)},
          |obs AS (SELECT series_id, ds, y, ROUND($inv, 0) AS yhat,
          |        FALSE AS is_future FROM s2, tb_fit, best b),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y, ROUND($inv, 0) AS yhat, TRUE AS is_future
-         |        FROM nn, tb_fit, best b, LATERAL (SELECT i, CAST(n + i AS DOUBLE) AS t
-         |                                          FROM generate_series(1, 12) g(i)))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin
+         |${horizonSql(s"ROUND($inv, 0)", s"nn, tb_fit, best b, $HorizonT")}""".stripMargin
     }),
 
     // tbats_like ∘ ARMA(1,1): the ts_tbats_like oracle extended with the
@@ -2140,64 +1960,26 @@ object TsQueries {
     // solve chains from colliding
     QueryDef("ts_tbats_arma", qTbatsArma,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val w2 = graft.models.ProphetLike.omega(2, 12.0)
-      val xs = Seq("t", s"sin($w1 * t)", s"cos($w1 * t)", s"sin($w2 * t)", s"cos($w2 * t)")
-      val tbp = s"tb0 + tb1*t + tb2*sin($w1 * t) + tb3*cos($w1 * t) " +
-        s"+ tb4*sin($w2 * t) + tb5*cos($w2 * t)"
-      def inv(x: String) = s"CASE WHEN b.l = 0.0 THEN exp($x) " +
-        s"ELSE pow(($x) * b.l + 1, 1.0 / b.l) END"
+      val xs = "t" +: fourier(2)
+      val tbp = ("tb0" +: xs.zipWithIndex.map { case (x, i) => s"tb${i + 1}*$x" }).mkString(" + ")
       val corrObs = "COALESCE(CASE WHEN e2.ar1 IS NOT NULL AND e2.elag IS NOT NULL " +
         "THEN a0 + a1*e2.ar1 + a2*e2.elag END, 0.0)"
       val corrFut = "CASE WHEN i = 1 THEN r1 " +
         "ELSE a0 * (1 - pow(a1, i - 1)) / (1 - a1) + pow(a1, i - 1) * r1 END"
-      s"""$S,
-         |cands AS (SELECT i / 10.0 AS l FROM generate_series(-20, 20) g(i)),
-         |bcp AS (SELECT c.l,
-         |  CASE WHEN c.l = 0.0 THEN ln(s.y) ELSE (pow(s.y, c.l) - 1) / c.l END AS p
-         |  FROM series s CROSS JOIN cands c),
-         |slog AS (SELECT sum(ln(y)) AS sl, CAST(count(*) AS DOUBLE) AS n FROM series),
-         |vv AS (SELECT l, sum(p*p)/count(*) - pow(sum(p)/count(*), 2) AS v
-         |       FROM bcp GROUP BY l),
-         |ll AS (SELECT l, CASE WHEN v <= 0 THEN -1e308
-         |       ELSE -(n/2.0) * ln(v) + (l - 1.0) * sl END AS ll FROM vv, slog),
-         |best AS (SELECT l FROM ll ORDER BY ll DESC, l ASC LIMIT 1),
-         |s2 AS (SELECT s.series_id, s.ds, s.y,
-         |  CASE WHEN b.l = 0.0 THEN ln(s.y) ELSE (pow(s.y, b.l) - 1) / b.l END AS yb,
-         |  CAST(row_number() OVER (ORDER BY s.ds) AS DOUBLE) AS t
-         |  FROM series s, best b),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
-         |${OracleGen.momentsCte("tb", xs, "s2", yExpr = "yb")},
-         |${OracleGen.solveCtes("tb", 5)},
+      s"""${tbatsCurveCtes(xs)},
          |tbf AS (SELECT beta_0 AS tb0, beta_1 AS tb1, beta_2 AS tb2,
          |        beta_3 AS tb3, beta_4 AS tb4, beta_5 AS tb5 FROM tb_fit),
          |cur AS (SELECT s2.series_id, s2.ds, s2.y, s2.yb, s2.t, $tbp AS fb
          |        FROM s2, tbf),
-         |lagd AS (SELECT series_id, ds, yb - fb AS y,
-         |  ${(1 to 6).map(i => s"lag(yb - fb, $i) OVER (ORDER BY ds) AS x$i").mkString(", ")}
-         |  FROM cur),
-         |${OracleGen.momentsCte("ta1", (1 to 6).map(i => s"x$i"), "lagd WHERE x6 IS NOT NULL")},
-         |${OracleGen.solveCtes("ta1", 6)},
-         |er AS (SELECT lagd.*, CASE WHEN x6 IS NOT NULL THEN y -
-         |  (beta_0 + beta_1*x1 + beta_2*x2 + beta_3*x3 + beta_4*x4 + beta_5*x5 + beta_6*x6)
-         |  END AS e FROM lagd, ta1_fit),
-         |e2 AS (SELECT series_id, ds, y, x1 AS ar1,
-         |       lag(e, 1) OVER (ORDER BY ds) AS elag FROM er),
-         |${OracleGen.momentsCte("ta2", Seq("ar1", "elag"), "e2 WHERE elag IS NOT NULL")},
-         |${OracleGen.solveCtes("ta2", 2)},
+         |${arma11Ctes("cur", "yb - fb", "ta1", "ta2")},
          |af AS (SELECT beta_0 AS a0, beta_1 AS a1, beta_2 AS a2 FROM ta2_fit),
          |obs AS (SELECT c.series_id, c.ds, c.y,
-         |        ROUND(${inv(s"c.fb + $corrObs")}, 0) AS yhat,
+         |        ROUND(${invBoxCox(s"c.fb + $corrObs")}, 0) AS yhat,
          |        FALSE AS is_future FROM cur c JOIN e2 ON e2.ds = c.ds, af, best b),
          |lastrow AS (SELECT y AS rT, e AS eT FROM er ORDER BY ds DESC LIMIT 1),
          |h1 AS (SELECT a0 + a1*rT + a2*eT AS r1 FROM af, lastrow),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(${inv(s"($tbp) + ($corrFut)")}, 0) AS yhat, TRUE AS is_future
-         |        FROM nn, tbf, af, h1, best b,
-         |             LATERAL (SELECT i, CAST(n + i AS DOUBLE) AS t
-         |                      FROM generate_series(1, 12) g(i)))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin
+         |${horizonSql(s"ROUND(${invBoxCox(s"($tbp) + ($corrFut)")}, 0)",
+              s"nn, tbf, af, h1, best b, $HorizonT")}""".stripMargin
     }),
 
     // the SQL-surface twin: snaive = lag(12), OLS = k=1 Cholesky chain,
@@ -2212,8 +1994,7 @@ object TsQueries {
            |    (sum(pow(y, 2)) - pow(sum(y), 2) / count(y)), 6) AS r2
            |FROM sc $filter""".stripMargin
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
+         |${trendIndexCte()},
          |${OracleGen.momentsCte("sf", Seq("t"), "s2")},
          |${OracleGen.solveCtes("sf", 1)},
          |sc AS (SELECT s2.*, lag(y, 12) OVER (ORDER BY ds) AS f_sn,
@@ -2225,24 +2006,16 @@ object TsQueries {
 
     QueryDef("ts_prophet_like", qProphetLike,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val w2 = graft.models.ProphetLike.omega(2, 12.0)
-      val xs = Seq("t", s"sin($w1 * t)", s"cos($w1 * t)", s"sin($w2 * t)", s"cos($w2 * t)")
-      val pred = s"beta_0 + beta_1*t + beta_2*sin($w1 * t) + beta_3*cos($w1 * t) " +
-        s"+ beta_4*sin($w2 * t) + beta_5*cos($w2 * t)"
+      val xs = "t" +: fourier(2)
+      val pred = linPred(xs)
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
+         |${trendIndexCte()},
+         |${nnCte()},
          |${OracleGen.momentsCte("pl", xs, "s2")},
          |${OracleGen.solveCtes("pl", 5)},
          |obs AS (SELECT series_id, ds, ROUND(y, 6) AS y, ROUND($pred, 6) AS yhat,
          |        FALSE AS is_future FROM s2, pl_fit),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y, ROUND($pred, 6) AS yhat, TRUE AS is_future
-         |        FROM nn, pl_fit, LATERAL (SELECT i, CAST(n + i AS DOUBLE) AS t
-         |                                  FROM generate_series(1, 12) g(i)))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin
+         |${horizonSql(s"ROUND($pred, 6)", s"nn, pl_fit, $HorizonT")}""".stripMargin
     }),
 
     // prophet_like changepoint trend: replay the planted slope break, the
@@ -2250,21 +2023,13 @@ object TsQueries {
     // the 9-feature Cholesky OLS
     QueryDef("ts_prophet_cp", qProphetCp,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val w2 = graft.models.ProphetLike.omega(2, 12.0)
-      val hinges = (1 to 4).map(j => s"greatest(0.0, t - c$j)")
-      val xs = Seq("t") ++ hinges ++
-        Seq(s"sin($w1 * t)", s"cos($w1 * t)", s"sin($w2 * t)", s"cos($w2 * t)")
-      val pred = "beta_0 + beta_1*t + " +
-        (1 to 4).map(j => s"beta_${j + 1}*greatest(0.0, t - c$j)").mkString(" + ") +
-        s" + beta_6*sin($w1 * t) + beta_7*cos($w1 * t)" +
-        s" + beta_8*sin($w2 * t) + beta_9*cos($w2 * t)"
+      val xs = ("t" +: (1 to 4).map(j => s"greatest(0.0, t - c$j)")) ++ fourier(2)
+      val pred = linPred(xs)
       s"""$ZS,
-         |s1 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
+         |${trendIndexCte(name = "s1")},
          |s2 AS (SELECT series_id, ds,
          |       y + 0.08 * greatest(0.0, t - 36.0) AS y, t FROM s1),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
+         |${nnCte()},
          |cp AS (SELECT ${(1 to 4).map(j =>
                   s"CAST((8*n*$j)//(10*5) AS DOUBLE) AS c$j").mkString(", ")} FROM nn),
          |s3 AS (SELECT s2.*, ${(1 to 4).map(j => s"c$j").mkString(", ")} FROM s2, cp),
@@ -2272,17 +2037,13 @@ object TsQueries {
          |${OracleGen.solveCtes("pc", 9)},
          |obs AS (SELECT series_id, ds, ROUND(y, 6) AS y, ROUND($pred, 6) AS yhat,
          |        FALSE AS is_future FROM s3, pc_fit),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y, ROUND($pred, 6) AS yhat, TRUE AS is_future
-         |        FROM nn, cp, pc_fit, LATERAL (SELECT i, CAST(n + i AS DOUBLE) AS t
-         |                                      FROM generate_series(1, 12) g(i)))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin
+         |${horizonSql(s"ROUND($pred, 6)", s"nn, cp, pc_fit, $HorizonT")}""".stripMargin
     }),
 
     QueryDef("ts_ses", qSes,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t FROM series),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
+         |${trendIndexCte(tType = "BIGINT")},
+         |${nnCte()},
          |obs AS (SELECT a.series_id, a.ds, ROUND(a.y, 6) AS y,
          |        ROUND((SELECT sum(CASE WHEN b.t = 1 THEN pow(0.7, a.t - 2) * b.y
          |                       ELSE 0.3 * pow(0.7, a.t - 1 - b.t) * b.y END)
@@ -2291,10 +2052,7 @@ object TsQueries {
          |lvl AS (SELECT (SELECT sum(CASE WHEN b.t = 1 THEN pow(0.7, n - 1) * b.y
          |                      ELSE 0.3 * pow(0.7, n - b.t) * b.y END)
          |                FROM s2 b, nn) AS lT),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y, ROUND(lT, 6) AS yhat, TRUE AS is_future
-         |        FROM nn, lvl, generate_series(1, 6) g(i))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin),
+         |${horizonSql("ROUND(lT, 6)", "nn, lvl, generate_series(1, 6) g(i)")}""".stripMargin),
 
     QueryDef("ts_impute", qImpute,
       """WITH daily AS (SELECT 'lineitem' AS series_id, CAST(l_shipdate AS DATE) AS ds,
@@ -2325,9 +2083,8 @@ object TsQueries {
 
     QueryDef("ts_cv_rolling", qCvRolling,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |    CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
+         |${trendIndexCte()},
+         |${nnCte()},
          |folds AS (SELECT i AS f FROM generate_series(0, 2) g(i)),
          |fr AS (SELECT s2.*, f, n FROM s2, folds, nn WHERE t <= n - f * 8),
          |tr AS (SELECT * FROM fr WHERE t <= n - f * 8 - 8),
@@ -2345,13 +2102,7 @@ object TsQueries {
 
     QueryDef("ts_backtest", qBacktest,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |iters AS (SELECT i AS it FROM generate_series(0, 2) g(i)),
-         |fr AS (SELECT s2.*, it, n FROM s2, iters, nn WHERE t <= n - it * 6),
-         |te AS (SELECT fr.series_id, fr.it, fr.y, b.y AS yhat
-         |       FROM fr JOIN s2 b ON b.t = fr.t - 12
-         |       WHERE fr.t > fr.n - fr.it * 6 - 12)
+         |$SnaiveBacktestCtes
          |SELECT CAST(it AS BIGINT) AS iter, series_id,
          |  ROUND(sqrt(avg(pow(yhat - y, 2))), 6) AS rmse,
          |  ROUND(avg(abs(yhat - y)), 6) AS mae
@@ -2362,13 +2113,7 @@ object TsQueries {
     // Spark reduce so both engines add identically before rounding.
     QueryDef("ts_backtest_metrics", qBacktestMetrics,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |iters AS (SELECT i AS it FROM generate_series(0, 2) g(i)),
-         |fr AS (SELECT s2.*, it, n FROM s2, iters, nn WHERE t <= n - it * 6),
-         |te AS (SELECT fr.series_id, fr.it, fr.y, b.y AS yhat
-         |       FROM fr JOIN s2 b ON b.t = fr.t - 12
-         |       WHERE fr.t > fr.n - fr.it * 6 - 12),
+         |$SnaiveBacktestCtes,
          |per AS (SELECT it, series_id,
          |        sqrt(avg(pow(yhat - y, 2))) AS rmse, avg(abs(yhat - y)) AS mae
          |        FROM te GROUP BY 1, 2),
@@ -2385,20 +2130,17 @@ object TsQueries {
 
     QueryDef("ts_mase_msis", qMaseMsis,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t,
-         |       lag(y, 12) OVER (ORDER BY ds) AS yhat FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |tr AS (SELECT s2.* FROM s2, nn WHERE t <= n - 24),
+         |${trendIndexCte(", lag(y, 12) OVER (ORDER BY ds) AS yhat", "BIGINT")},
+         |${holdoutCtes(24)},
          |den AS (SELECT avg(abs(y - yhat)) AS denom FROM tr WHERE yhat IS NOT NULL),
          |wid AS (SELECT quantile_cont(abs(y - yhat), 0.95) AS width FROM tr WHERE yhat IS NOT NULL),
-         |te AS (SELECT s2.*, width, yhat + width AS uf, yhat - width AS lf
-         |       FROM s2, nn, wid WHERE t > n - 24),
+         |tw AS (SELECT te.*, width, yhat + width AS uf, yhat - width AS lf FROM te, wid),
          |agg AS (SELECT series_id,
          |  avg(abs(yhat - y)) AS mae_num,
          |  avg((uf - lf)
          |      + CASE WHEN y < lf THEN (lf - y) * (2 / 0.05) ELSE 0 END
          |      + CASE WHEN y > uf THEN (y - uf) * (2 / 0.05) ELSE 0 END) AS msis_num
-         |  FROM te GROUP BY 1)
+         |  FROM tw GROUP BY 1)
          |SELECT series_id, ROUND(mae_num / denom, 6) AS mase,
          |  ROUND(msis_num / denom, 6) AS msis FROM agg, den""".stripMargin),
 
@@ -2427,12 +2169,11 @@ object TsQueries {
     // export_fitted_vals: snaive fitted values over the train slice.
     QueryDef("ts_export_fitted", qExportFitted,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS t,
-         |       lag(y, 12) OVER (ORDER BY ds) AS fv FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2)
+         |${trendIndexCte(", lag(y, 12) OVER (ORDER BY ds) AS fv", "BIGINT")},
+         |${holdoutCtes()}
          |SELECT series_id, ds, ROUND(y, 6) AS actuals, ROUND(fv, 6) AS fitted_vals,
          |  ROUND(y - fv, 6) AS residuals
-         |FROM s2, nn WHERE t <= n - 12 AND fv IS NOT NULL""".stripMargin),
+         |FROM tr WHERE fv IS NOT NULL""".stripMargin),
 
     // combo: simple average + metric-weighted (worst→best reversal collapses
     // to f1·(r2/t) + f2·(r1/t) — the worse model always takes the other's
@@ -2453,27 +2194,8 @@ object TsQueries {
     // standard error needs (X'X)⁻¹[1][1] — computed from the 3×3 cofactor.
     QueryDef("ts_adf", qAdf,
       s"""$ZS,
-         |r0 AS (SELECT series_id, ds, y,
-         |       y - lag(y) OVER (ORDER BY ds) AS dy,
-         |       lag(y) OVER (ORDER BY ds) AS ylag FROM series),
-         |r1 AS (SELECT *, lag(dy) OVER (ORDER BY ds) AS dy1 FROM r0),
-         |rws AS (SELECT * FROM r1
-         |        WHERE dy IS NOT NULL AND ylag IS NOT NULL AND dy1 IS NOT NULL),
-         |${OracleGen.momentsCte("ad", Seq("ylag", "dy1"), "rws", yExpr = "dy")},
-         |${OracleGen.solveCtes("ad", 2)},
-         |ex AS (SELECT sum(dy * dy) AS syy, CAST(count(*) AS DOUBLE) AS n,
-         |       max(series_id) AS series_id FROM rws),
-         |fin AS MATERIALIZED (SELECT series_id,
-         |  sa_0_0 * (sa_1_1 * sa_2_2 - sa_2_1 * sa_2_1)
-         |  - sa_1_0 * (sa_1_0 * sa_2_2 - sa_2_1 * sa_2_0)
-         |  + sa_2_0 * (sa_1_0 * sa_2_1 - sa_1_1 * sa_2_0) AS det,
-         |  (sa_0_0 * sa_2_2 - sa_2_0 * sa_2_0) AS c11,
-         |  syy - (beta_0 * sb_0 + beta_1 * sb_1 + beta_2 * sb_2) AS rss,
-         |  n, beta_1
-         |  FROM ad_fit, ex)
-         |SELECT series_id,
-         |  ROUND(beta_1 / sqrt(rss / (n - 3) * (c11 / det)), 6) AS adf_t
-         |FROM fin""".stripMargin),
+         |${adfCtes("series", grouped = false)}
+         |SELECT series_id, ROUND(t, 6) AS adf_t FROM adf""".stripMargin),
 
     // D'Agostino-Pearson K²: population g1/g2 from raw central-moment
     // averages (matches Spark's skewness/kurtosis, NOT DuckDB's
@@ -2510,14 +2232,9 @@ object TsQueries {
     // PACF lags 1..3: Durbin-Levinson unrolled in closed form over the
     // unrounded ACF values (φ11 = r1; φ22, φ33 the textbook recursions).
     QueryDef("ts_pacf", qPacf,
-      s"""$S, s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS rn FROM series),
-         |mu AS (SELECT avg(y) AS mu, count(*) AS n FROM s2),
-         |c AS (SELECT series_id, rn, y - mu AS c FROM s2, mu),
-         |d AS (SELECT sum(c * c) AS d FROM c),
+      s"""$S, $AcfCtes,
          |ac AS (SELECT g.k AS lag, sum(a.c * b.c) / (SELECT d FROM d) AS r
-         |  FROM generate_series(1, 3) g(k)
-         |  JOIN c a ON a.rn > g.k
-         |  JOIN c b ON b.rn = a.rn - g.k AND b.series_id = a.series_id
+         |  FROM ${acfPairs("generate_series(1, 3)")}
          |  GROUP BY 1),
          |rr AS (SELECT
          |  max(CASE WHEN lag = 1 THEN r END) AS r1,
@@ -2532,26 +2249,18 @@ object TsQueries {
          |UNION ALL SELECT 'orders', 3, ROUND(phi33, 6) FROM p4""".stripMargin),
 
     QueryDef("ts_acf", qAcf,
-      s"""$S, s2 AS (SELECT series_id, ds, y, row_number() OVER (ORDER BY ds) AS rn FROM series),
-         |mu AS (SELECT avg(y) AS mu, count(*) AS n FROM s2),
-         |c AS (SELECT series_id, rn, y - mu AS c FROM s2, mu),
-         |d AS (SELECT sum(c * c) AS d FROM c)
+      s"""$S, $AcfCtes
          |SELECT a.series_id, g.k AS lag,
          |  ROUND(sum(a.c * b.c) / (SELECT d FROM d), 6) AS acf
-         |FROM generate_series(1, 12) g(k)
-         |JOIN c a ON a.rn > g.k
-         |JOIN c b ON b.rn = a.rn - g.k AND b.series_id = a.series_id
+         |FROM ${acfPairs("generate_series(1, 12)")}
          |GROUP BY 1, 2""".stripMargin),
 
     QueryDef("ts_model_summaries", qModelSummaries,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y, month(ds) AS mon,
-         |    CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
-         |nn AS (SELECT count(*) AS n FROM s2),
-         |fit AS (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a
-         |        FROM s2, nn WHERE t <= n - 12),
-         |eff AS (SELECT mon, avg(y - (a + b * t)) AS e
-         |        FROM s2, nn, fit WHERE t <= n - 12 GROUP BY 1),
+         |${trendIndexCte(", month(ds) AS mon")},
+         |${holdoutCtes()},
+         |fit AS (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a FROM tr),
+         |eff AS (SELECT mon, avg(y - (a + b * t)) AS e FROM tr, fit GROUP BY 1),
          |scored AS (
          |  SELECT 'naive' AS model, s2.series_id, s2.y, t > n - 12 AS is_test,
          |         lag(y, 1) OVER (ORDER BY ds) AS yhat FROM s2, nn
@@ -2582,9 +2291,9 @@ object TsQueries {
          |FROM ins JOIN tes ON tes.model = ins.model AND tes.series_id = ins.series_id""".stripMargin),
 
     QueryDef("ts_synthesize", qSynthesize,
-      zTrendSeasonalForecastSql(
+      trendSeasonalSql(
       """, futsteps AS (
-        |  SELECT CAST(last_ds + to_months(CAST(i AS INT)) AS DATE) AS ds, i
+        |  SELECT CAST(ld + to_months(CAST(i AS INT)) AS DATE) AS ds, i
         |  FROM nn, generate_series(1, 12) g(i)),
         |all3 AS (
         |  SELECT ds, yhat FROM scored WHERE is_future
@@ -2598,41 +2307,27 @@ object TsQueries {
         |SELECT 'orders' AS series_id, ds, ROUND(yhat, 6) AS yhat,
         |  ROUND(yhat - 1.959963984540054 * sd / sqrt(n3), 6) AS lower,
         |  ROUND(yhat + 1.959963984540054 * sd / sqrt(n3), 6) AS upper
-        |FROM syn""".stripMargin)),
+        |FROM syn""".stripMargin, ZS)),
 
     // Hannan–Rissanen ARMA(1,1): stage-1 long-AR(6) OLS via unrolled Cholesky
     // (OracleGen), residuals as innovation estimates, stage-2 OLS on
     // (y-lag, resid-lag), flat-innovation horizon recursion in closed form.
     QueryDef("ts_arma", qArma,
+      {
+      val yhat = "ROUND(CASE WHEN i = 1 THEN y1 ELSE beta_0 * (1 - pow(beta_1, i - 1)) / (1 - beta_1)" +
+        " + pow(beta_1, i - 1) * y1 END, 6)"
       s"""$ZS,
-         |lagd AS (SELECT series_id, ds, y,
-         |  ${(1 to 6).map(i => s"lag(y, $i) OVER (ORDER BY ds) AS x$i").mkString(", ")}
-         |  FROM series),
-         |${OracleGen.momentsCte("s1", (1 to 6).map(i => s"x$i"), "lagd WHERE x6 IS NOT NULL")},
-         |${OracleGen.solveCtes("s1", 6)},
-         |er AS (SELECT lagd.*, CASE WHEN x6 IS NOT NULL THEN y -
-         |  (beta_0 + beta_1*x1 + beta_2*x2 + beta_3*x3 + beta_4*x4 + beta_5*x5 + beta_6*x6)
-         |  END AS e FROM lagd, s1_fit),
-         |e2 AS (SELECT series_id, ds, y, x1 AS ar1,
-         |       lag(e, 1) OVER (ORDER BY ds) AS elag FROM er),
-         |${OracleGen.momentsCte("s2f", Seq("ar1", "elag"), "e2 WHERE elag IS NOT NULL")},
-         |${OracleGen.solveCtes("s2f", 2)},
+         |${arma11Ctes("series", "y", "s1", "s2f")},
          |f2 AS (SELECT beta_0, beta_1, beta_2 FROM s2f_fit),
          |obs AS (SELECT series_id, ds, ROUND(y, 6) AS y,
          |        ROUND(CASE WHEN ar1 IS NOT NULL AND elag IS NOT NULL
          |              THEN beta_0 + beta_1*ar1 + beta_2*elag END, 6) AS yhat,
          |        FALSE AS is_future FROM e2, f2),
          |lastrow AS (SELECT y AS yT, e AS eT FROM er ORDER BY ds DESC LIMIT 1),
-         |nn AS (SELECT max(ds) AS ld FROM series),
+         |${nnCte("series")},
          |h1 AS (SELECT beta_0 + beta_1*yT + beta_2*eT AS y1 FROM f2, lastrow),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(CASE WHEN i = 1 THEN y1
-         |              ELSE beta_0 * (1 - pow(beta_1, i - 1)) / (1 - beta_1)
-         |                   + pow(beta_1, i - 1) * y1 END, 6) AS yhat,
-         |        TRUE AS is_future
-         |        FROM nn, f2, h1, generate_series(1, 12) g(i))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin),
+         |${horizonSql(yhat, "nn, f2, h1, generate_series(1, 12) g(i)")}""".stripMargin
+    }),
 
     // Additive Holt-Winters (α=.3, β=.1, γ=.2, m=12), classical first-cycle
     // init: the level/trend recursion runs in a recursive CTE; the seasonal
@@ -2640,15 +2335,7 @@ object TsQueries {
     // value appended to the tail), so seas[1] is always this step's index.
     QueryDef("ts_holtwinters", qHoltWinters,
       s"""$ZSR,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS INT) AS t FROM series),
-         |agg AS (SELECT list(y ORDER BY ds) AS ys, CAST(count(*) AS INT) AS n,
-         |        max(ds) AS ld FROM s2),
-         |init AS (SELECT n, ld,
-         |         (${(1 to 12).map(i => s"ys[$i]").mkString(" + ")}) / 12.0 AS m1,
-         |         (${(13 to 24).map(i => s"ys[$i]").mkString(" + ")}) / 12.0 AS m2,
-         |         (m2 - m1) / 12.0 AS b0,
-         |         list_transform(ys[1:12], s -> s - m1) AS seas0 FROM agg),
+         |$HoltWintersInitCtes,
          |hw AS (
          |  SELECT 0 AS t, m1 AS level, b0 AS trend, seas0 AS seas,
          |         CAST(NULL AS DOUBLE) AS yhat FROM init
@@ -2663,25 +2350,15 @@ object TsQueries {
          |        ROUND(hw.yhat, 6) AS yhat, FALSE AS is_future
          |        FROM s2 JOIN hw ON hw.t = s2.t),
          |fin AS MATERIALIZED (SELECT hw.* FROM hw, agg WHERE hw.t = agg.n),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(fin.level + i * fin.trend + fin.seas[i], 6) AS yhat, TRUE AS is_future
-         |        FROM agg, fin, generate_series(1, 12) g(i))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin),
+         |${horizonSql("ROUND(fin.level + i * fin.trend + fin.seas[i], 6)",
+              "agg, fin, generate_series(1, 12) g(i)")}""".stripMargin),
 
     // HW grid search: all 9 (α, β, γ) recursions advance in ONE recursive
     // CTE (the grid point is part of the state), SSE accumulates in time
     // order, argmin at the end — mirrors holtWintersGridSearch exactly.
     QueryDef("ts_hw_opt", qHwOpt,
       s"""$ZSR,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS INT) AS t FROM series),
-         |agg AS (SELECT list(y ORDER BY ds) AS ys, CAST(count(*) AS INT) AS n FROM s2),
-         |init AS (SELECT n,
-         |         (${(1 to 12).map(i => s"ys[$i]").mkString(" + ")}) / 12.0 AS m1,
-         |         (${(13 to 24).map(i => s"ys[$i]").mkString(" + ")}) / 12.0 AS m2,
-         |         (m2 - m1) / 12.0 AS b0,
-         |         list_transform(ys[1:12], s -> s - m1) AS seas0 FROM agg),
+         |$HoltWintersInitCtes,
          |grid AS (SELECT CAST(a AS DOUBLE) AS a, CAST(b AS DOUBLE) AS b,
          |                CAST(g AS DOUBLE) AS g
          |         FROM (VALUES (0.2), (0.5), (0.8)) va(a),
@@ -2704,58 +2381,20 @@ object TsQueries {
     // AR(3) OLS (Cholesky) + 12-step dynamic recursion carrying the last
     // three predictions through a recursive CTE.
     QueryDef("ts_ar3_dynamic", qAr3Dynamic,
-      s"""$ZSR,
-         |lagd AS (SELECT series_id, ds, y, lag(y, 1) OVER win AS x1,
-         |         lag(y, 2) OVER win AS x2, lag(y, 3) OVER win AS x3
-         |         FROM series WINDOW win AS (ORDER BY ds)),
-         |${OracleGen.momentsCte("a3", Seq("x1", "x2", "x3"), "lagd WHERE x3 IS NOT NULL")},
-         |${OracleGen.solveCtes("a3", 3)},
-         |f AS (SELECT beta_0, beta_1, beta_2, beta_3 FROM a3_fit),
-         |tl AS (SELECT list(y ORDER BY ds DESC) AS t3
-         |       FROM (SELECT y, ds FROM series ORDER BY ds DESC LIMIT 3)),
-         |nn AS (SELECT max(ds) AS ld FROM series),
-         |rec AS (
-         |  SELECT 0 AS i, t3[1] AS p1, t3[2] AS p2, t3[3] AS p3 FROM tl
-         |  UNION ALL
-         |  SELECT rec.i + 1, beta_0 + beta_1*rec.p1 + beta_2*rec.p2 + beta_3*rec.p3,
-         |         rec.p1, rec.p2
-         |  FROM rec, f WHERE rec.i < 12)
-         |SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |       ROUND(p1, 6) AS yhat
-         |FROM rec, nn WHERE i >= 1""".stripMargin),
+      Ar3DynamicSql),
 
     // The SQL-surface twin (graft_ols_fit + LATERAL VIEW graft_forecast)
     // replays with the IDENTICAL chain as ts_ar3_dynamic: same AR(3) fit
     // rows, same 12-step recursive CTE carrying the last three predictions.
     QueryDef("ts_sql_forecast", qSqlForecast,
-      s"""$ZSR,
-         |lagd AS (SELECT series_id, ds, y, lag(y, 1) OVER win AS x1,
-         |         lag(y, 2) OVER win AS x2, lag(y, 3) OVER win AS x3
-         |         FROM series WINDOW win AS (ORDER BY ds)),
-         |${OracleGen.momentsCte("sq", Seq("x1", "x2", "x3"), "lagd WHERE x3 IS NOT NULL")},
-         |${OracleGen.solveCtes("sq", 3)},
-         |f AS (SELECT beta_0, beta_1, beta_2, beta_3 FROM sq_fit),
-         |tl AS (SELECT list(y ORDER BY ds DESC) AS t3
-         |       FROM (SELECT y, ds FROM series ORDER BY ds DESC LIMIT 3)),
-         |nn AS (SELECT max(ds) AS ld FROM series),
-         |rec AS (
-         |  SELECT 0 AS i, t3[1] AS p1, t3[2] AS p2, t3[3] AS p3 FROM tl
-         |  UNION ALL
-         |  SELECT rec.i + 1, beta_0 + beta_1*rec.p1 + beta_2*rec.p2 + beta_3*rec.p3,
-         |         rec.p1, rec.p2
-         |  FROM rec, f WHERE rec.i < 12)
-         |SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |       ROUND(p1, 6) AS yhat
-         |FROM rec, nn WHERE i >= 1""".stripMargin),
+      Ar3DynamicSql),
 
     // dynamic_testing=4: AR(1) OLS fit on train; each 4-step test chunk
     // recurses from the actual value preceding the chunk (closed form).
     QueryDef("ts_mlr_dynk4", qMlrDynK4,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS INT) AS t,
-         |       lag(y, 1) OVER (ORDER BY ds) AS yl FROM series),
-         |nn AS (SELECT CAST(count(*) AS INT) AS n FROM s2),
+         |${trendIndexCte(", lag(y, 1) OVER (ORDER BY ds) AS yl", "INT")},
+         |${nnCte()},
          |fit AS (SELECT regr_slope(y, yl) AS b, regr_intercept(y, yl) AS a
          |        FROM s2, nn WHERE yl IS NOT NULL AND t <= n - 24),
          |test AS (SELECT s2.*, t - (n - 24) AS s, n FROM s2, nn WHERE t > n - 24),
@@ -2780,9 +2419,8 @@ object TsQueries {
     // seasonal-naive forecast.
     QueryDef("ts_dynamic_ci", qDynamicCi,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS INT) AS t FROM series),
-         |nn AS (SELECT CAST(count(*) AS INT) AS n, max(ds) AS ld FROM s2),
+         |${trendIndexCte(tType = "INT")},
+         |${nnCte()},
          |resid AS (SELECT g.i AS iter, a.t - (n - 6*g.i - 6) AS s, abs(a.y - b.y) AS r
          |  FROM generate_series(0, 2) g(i)
          |  CROSS JOIN nn
@@ -2801,11 +2439,8 @@ object TsQueries {
     // segment — every window, count, and residual join keys on series_id.
     QueryDef("ts_dynamic_ci_by_series", qDynamicCiBySeries,
       s"""$ZSEG,
-         |s2 AS (SELECT series_id, ds, y,
-         |  CAST(row_number() OVER (PARTITION BY series_id ORDER BY ds) AS INT) AS t
-         |  FROM series),
-         |nn AS (SELECT series_id, CAST(count(*) AS INT) AS n, max(ds) AS ld
-         |       FROM s2 GROUP BY 1),
+         |${trendIndexCte(tType = "INT", grouped = true)},
+         |${nnCte(grouped = true)},
          |resid AS (SELECT a.series_id, g.i AS iter,
          |    a.t - (n - 6*g.i - 6) AS s, abs(a.y - b.y) AS r
          |  FROM generate_series(0, 2) g(i)
@@ -2828,14 +2463,12 @@ object TsQueries {
     // calendar-anchored trend + Fourier features, 6-month horizon.
     QueryDef("ts_stream_forecast", qStreamForecast,
       {
-      val w1 = graft.models.ProphetLike.omega(1, 12.0)
-      val xs = Seq("t", s"sin($w1 * t)", s"cos($w1 * t)")
-      val pred = s"beta_0 + beta_1*t + beta_2*sin($w1 * t) + beta_3*cos($w1 * t)"
+      val xs = "t" +: fourier(1)
       s"""$ZSEG,
          |s2 AS (SELECT series_id, ds, y,
          |  CAST(datediff('month', DATE '1992-01-01', ds) AS DOUBLE) AS t
          |  FROM series),
-         |nn AS (SELECT series_id, max(ds) AS ld FROM s2 GROUP BY 1),
+         |${nnCte(grouped = true)},
          |${OracleGen.momentsCte("sf", xs, "s2", keys = Seq("series_id"))},
          |${OracleGen.solveCtes("sf", 3)},
          |fut AS (SELECT sf_fit.series_id,
@@ -2844,7 +2477,7 @@ object TsQueries {
          |             CAST(nn.ld + to_months(k::INT) AS DATE)) AS DOUBLE) AS t
          |        FROM sf_fit JOIN nn USING (series_id)
          |        CROSS JOIN generate_series(1, 6) g(k))
-         |SELECT f.series_id, f.ds, ROUND($pred, 6) AS yhat
+         |SELECT f.series_id, f.ds, ROUND(${linPred(xs)}, 6) AS yhat
          |FROM fut f JOIN sf_fit USING (series_id)""".stripMargin
     }),
 
@@ -2869,22 +2502,18 @@ object TsQueries {
         val xs = xsOf(p, tr)
         def rmse(f: Int): String = {
           val tag = s"g${ci}f$f"
-          val pred = ("beta_0" +: xs.zipWithIndex.map { case (x, i) => s"beta_${i + 1}*$x" })
-            .mkString(" + ")
-          s"(SELECT sqrt(avg(pow(($pred) - y, 2))) FROM lagd, nn, ${tag}_fit " +
+          s"(SELECT sqrt(avg(pow((${linPred(xs)}) - y, 2))) FROM lagd, nn, ${tag}_fit " +
             s"WHERE t > n - ${f * 8 + 8} AND t <= n - ${f * 8})"
         }
         s"SELECT CAST($p AS DOUBLE) AS ar, CAST(${if (tr) 1 else 0} AS DOUBLE) AS trend, " +
           s"ROUND(${rmse(0)}, 6) AS fold_0_rmse, ROUND(${rmse(1)}, 6) AS fold_1_rmse, " +
           s"ROUND((${rmse(0)} + ${rmse(1)}) / 2, 6) AS mean_rmse"
       }.mkString("\nUNION ALL\n")
+      val cols = ", CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS tt, " +
+        "lag(y, 1) OVER (ORDER BY ds) AS x1, lag(y, 2) OVER (ORDER BY ds) AS x2"
       s"""$ZS,
-         |lagd AS (SELECT series_id, ds, y,
-         |         CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS tt,
-         |         CAST(row_number() OVER (ORDER BY ds) AS INT) AS t,
-         |         lag(y, 1) OVER (ORDER BY ds) AS x1,
-         |         lag(y, 2) OVER (ORDER BY ds) AS x2 FROM series),
-         |nn AS (SELECT CAST(count(*) AS INT) AS n FROM lagd),
+         |${trendIndexCte(cols, "INT", name = "lagd")},
+         |${nnCte("lagd")},
          |$defs
          |$rows""".stripMargin
     }),
@@ -2892,18 +2521,14 @@ object TsQueries {
     // Pooled AR(1) over 5 z-scored segment series; recursion per series is
     // the AR(1) closed form seeded from each series' last observation.
     QueryDef("ts_seg_dynamic", qSegDynamic,
-      s"""$SEG,
-         |zp AS (SELECT series_id, avg(y) AS mu, stddev_samp(y) AS sd
-         |       FROM series GROUP BY 1),
-         |tz AS (SELECT t.series_id, t.ds, (t.y - zp.mu) / zp.sd AS y
-         |       FROM series t JOIN zp USING (series_id)),
+      s"""$ZSEG,
          |lagd AS (SELECT series_id, ds, y,
-         |         lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS x1 FROM tz),
+         |         lag(y) OVER (PARTITION BY series_id ORDER BY ds) AS x1 FROM series),
          |fit AS (SELECT regr_slope(y, x1) AS b, regr_intercept(y, x1) AS a
          |        FROM lagd WHERE x1 IS NOT NULL),
-         |lastv AS (SELECT series_id, max(ds) AS ld FROM tz GROUP BY 1),
+         |${nnCte("series", grouped = true)},
          |seed AS (SELECT l.series_id, l.ld, t.y AS y0
-         |         FROM lastv l JOIN tz t ON t.series_id = l.series_id AND t.ds = l.ld)
+         |         FROM nn l JOIN series t ON t.series_id = l.series_id AND t.ds = l.ld)
          |SELECT s.series_id, CAST(s.ld + to_months(i::INT) AS DATE) AS ds,
          |  ROUND(a * (1 - pow(b, i)) / (1 - b) + pow(b, i) * s.y0, 6) AS yhat
          |FROM seed s, fit, generate_series(1, 6) g(i)""".stripMargin),
@@ -2912,13 +2537,12 @@ object TsQueries {
     // SES via the ts_ses closed-form unroll with α=0.3.
     QueryDef("ts_theta", qTheta,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
+         |${trendIndexCte()},
          |fit AS (SELECT regr_slope(y, t) AS b, regr_intercept(y, t) AS a FROM s2),
          |z3 AS (SELECT s2.series_id, s2.ds, s2.y, s2.t,
          |       CAST(s2.t AS INT) AS ti, a + b * s2.t AS trend,
          |       2 * s2.y - (a + b * s2.t) AS z2 FROM s2, fit),
-         |nn AS (SELECT count(*) AS n, max(ds) AS ld FROM s2),
+         |${nnCte()},
          |obs AS (SELECT x.series_id, x.ds, ROUND(x.y, 6) AS y,
          |        ROUND((x.trend + (SELECT sum(CASE WHEN b.ti = 1 THEN pow(0.7, x.ti - 2) * b.z2
          |                       ELSE 0.3 * pow(0.7, x.ti - 1 - b.ti) * b.z2 END)
@@ -2927,18 +2551,14 @@ object TsQueries {
          |lvl AS (SELECT (SELECT sum(CASE WHEN b.ti = 1 THEN pow(0.7, n - 1) * b.z2
          |               ELSE 0.3 * pow(0.7, n - b.ti) * b.z2 END)
          |               FROM z3 b, nn) AS lT),
-         |fut AS (SELECT 'orders' AS series_id, CAST(ld + to_months(i::INT) AS DATE) AS ds,
-         |        CAST(NULL AS DOUBLE) AS y,
-         |        ROUND(((a + b * (n + i)) + lT) / 2.0, 6) AS yhat, TRUE AS is_future
-         |        FROM nn, fit, lvl, generate_series(1, 12) g(i))
-         |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin),
+         |${horizonSql("ROUND(((a + b * (n + i)) + lT) / 2.0, 6)",
+              "nn, fit, lvl, generate_series(1, 12) g(i)")}""".stripMargin),
 
     // Quadratic detrend: 3-basis OLS (1, t, t²) via the Cholesky CTE chain;
     // y_detrended = y − (β0 + β1·t + β2·t²).
     QueryDef("ts_detrend_poly", qDetrendPoly,
       s"""$ZS,
-         |s2 AS (SELECT series_id, ds, y,
-         |       CAST(row_number() OVER (ORDER BY ds) AS DOUBLE) AS t FROM series),
+         |${trendIndexCte()},
          |${OracleGen.momentsCte("dp", Seq("t", "t*t"), "s2")},
          |${OracleGen.solveCtes("dp", 2)}
          |SELECT series_id, ds,
@@ -2950,46 +2570,22 @@ object TsQueries {
     // with the smallest-λ tie-break (mirrors the Scala candidates order).
     QueryDef("ts_yeojohnson", qYeoJohnson,
       s"""$ZS,
-         |cands AS (SELECT i / 10.0 AS l FROM generate_series(-20, 20) g(i)),
-         |psi AS (SELECT c.l, s.ds, s.y,
-         |  CASE WHEN s.y >= 0 THEN
-         |    CASE WHEN c.l = 0.0 THEN ln(s.y + 1) ELSE (pow(s.y + 1, c.l) - 1) / c.l END
-         |  ELSE
-         |    CASE WHEN c.l = 2.0 THEN -ln(-s.y + 1)
-         |         ELSE -(pow(-s.y + 1, 2 - c.l) - 1) / (2 - c.l) END
-         |  END AS p
-         |  FROM series s CROSS JOIN cands c),
-         |slog AS (SELECT sum(sign(y) * ln(abs(y) + 1)) AS sl FROM series),
-         |ll AS (SELECT l,
-         |  CASE WHEN sum(p*p)/count(*) - pow(sum(p)/count(*), 2) <= 0 THEN -1e308
-         |       ELSE -(count(*)/2.0) * ln(sum(p*p)/count(*) - pow(sum(p)/count(*), 2))
-         |            + (l - 1.0) * sl END AS ll
-         |  FROM psi, slog GROUP BY l, sl),
-         |best AS (SELECT l FROM ll ORDER BY ll DESC, l ASC LIMIT 1)
-         |SELECT s.series_id, s.ds,
-         |  ROUND(CASE WHEN s.y >= 0 THEN
-         |    CASE WHEN b.l = 0.0 THEN ln(s.y + 1) ELSE (pow(s.y + 1, b.l) - 1) / b.l END
-         |  ELSE
-         |    CASE WHEN b.l = 2.0 THEN -ln(-s.y + 1)
-         |         ELSE -(pow(-s.y + 1, 2 - b.l) - 1) / (2 - b.l) END
-         |  END, 6) AS y_yj
+         |${lambdaMleCtes(yeoJohnson("s.y", "c.l"), "sign(y) * ln(abs(y) + 1)")}
+         |SELECT s.series_id, s.ds, ROUND(${yeoJohnson("s.y", "b.l")}, 6) AS y_yj
          |FROM series s, best b""".stripMargin),
 
     // Weekly series + naive: checks the weekly horizon spine (ds + 7·i days)
     // that frequency inference must produce.
     QueryDef("ts_weekly_naive", qWeeklyNaive,
-      """WITH series AS (
+      s"""WITH series AS (
         |  SELECT 'lineitem' AS series_id,
         |         CAST(date_trunc('week', l_shipdate) AS DATE) AS ds,
         |         ROUND(SUM(l_quantity), 2) AS y
         |  FROM lineitem GROUP BY 1, 2),
-        |nn AS (SELECT max(ds) AS ld FROM series),
+        |${nnCte("series")},
         |yt AS (SELECT y AS yT FROM series ORDER BY ds DESC LIMIT 1),
         |obs AS (SELECT series_id, ds, y, lag(y, 1) OVER (ORDER BY ds) AS yhat,
         |        FALSE AS is_future FROM series),
-        |fut AS (SELECT 'lineitem' AS series_id, CAST(ld + to_days(7 * i::INT) AS DATE) AS ds,
-        |        CAST(NULL AS DOUBLE) AS y, yT AS yhat, TRUE AS is_future
-        |        FROM nn, yt, generate_series(1, 8) g(i))
-        |SELECT * FROM obs UNION ALL SELECT * FROM fut""".stripMargin)
+        |${horizonSql("yT", "nn, yt, generate_series(1, 8) g(i)", "'lineitem'", "to_days(7 * i::INT)")}""".stripMargin)
   )
 }

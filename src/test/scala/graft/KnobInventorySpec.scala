@@ -1,8 +1,8 @@
 package graft
 
+import graft.SourceScan.code
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Every process-wide switch `src/main` reads — environment variables,
   * system properties and `spark.graft.*` session confs — is on the
@@ -22,27 +22,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_SCALE_ANN",
     "dynamic@BenchScale.scala")
 
-  /** `line` with its `//` comment removed (a `//` inside a string literal
-    * is kept). */
-  private def stripLineComment(line: String): String = {
-    var inString = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (c == '"' && (i == 0 || line.charAt(i - 1) != '\\')) inString = !inString
-      else if (!inString && c == '/' && i + 1 < line.length && line.charAt(i + 1) == '/')
-        return line.substring(0, i)
-      i += 1
-    }
-    line
-  }
-
-  /** Source text with block comments (scaladoc included) and line
-    * comments removed. */
-  private def code(p: Path): String =
-    "(?s)/\\*.*?\\*/".r.replaceAllIn(Files.readString(p), "")
-      .linesIterator.map(stripLineComment).mkString("\n")
-
   private val Access =
     """(?:sys\.env|sys\.props|System\.getenv|System\.getProperty)(?:\.\w+)?\s*(\(\s*("[^"]*")?)?""".r
   private val EnvLiteral = "\"(SPARK_GRAFT_[A-Z0-9_]+)\"".r
@@ -58,13 +37,7 @@ class KnobInventorySpec extends AnyFunSuite {
       ConfLiteral.findAllMatchIn(src).map(_.group(1))).toSet
   }
 
-  private def mainSources: Seq[Path] = {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
+  private def mainSources: Seq[Path] = SourceScan.sources("src/main")
 
   test("src/main reads exactly the allowlisted knobs") {
     val found = mainSources.flatMap(knobs).toSet

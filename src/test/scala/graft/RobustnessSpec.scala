@@ -22,6 +22,19 @@ class RobustnessSpec extends SparkSpec {
     assert(out.count(_.err.isDefined) == 1)
   }
 
+  test("Bench.attempt reports a failed step on stderr and lets a fatal error through") {
+    val err = new java.io.ByteArrayOutputStream()
+    var ran = false
+    Console.withErr(new java.io.PrintStream(err, true)) {
+      Bench.attempt("memo prewarm")(throw new IllegalStateException("no such memo"))
+      Bench.attempt("calibration") { ran = true }
+    }
+    assert(ran, "a step that succeeds runs once and prints nothing")
+    assert(err.toString.trim ==
+      "[bench] memo prewarm failed: IllegalStateException: no such memo")
+    intercept[LinkageError](Bench.attempt("record write")(throw new LinkageError("fatal")))
+  }
+
   test("segment-law detector flags micro-segment exchanges and only those") {
     import graft.core.SegmentLaw
     // the predicate itself: the three measured regimes

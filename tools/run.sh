@@ -1,8 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars without
-# sbt overhead. Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/out
+# sbt overhead. Usage: tools/run.sh graft.Verify <sfDir> <outDir>
 set -e
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script lives in, wherever it is run from
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 # scala-library ships inside /opt/spark/jars — adding another copy (e.g. the
 # sbt boot one) causes NoSuchMethodError on minor-version mismatch.
 ADD_OPENS=""

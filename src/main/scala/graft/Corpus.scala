@@ -3,6 +3,7 @@ package graft
 import graft.functions.TextOps
 import graft.operators.{Decontaminate, Dedup, Graph, Packing, Pii, Quality, Sampling, Similarity}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Chainable training-corpus curation facade — the data-pipeline twin of
@@ -32,6 +33,18 @@ import org.apache.spark.sql.functions._
   * Every step is the facade form of an oracle-checked operator (the
   * doc_* declared queries), so the chain's semantics are exactly the
   * hash-verified ones.
+  *
+  * "Optimized end to end" has one measured limit: a frame read twice in
+  * one query is computed twice, because Spark reuses no exchange above a
+  * checkpoint scan, nor above a cached relation while AQE is on. So each
+  * step reads its input once, or materializes its small per-doc decision
+  * frame once (see [[graft.operators.Dedup]]).
+  *
+  * Constructor contract: `idCol` and `textCol` must exist and `textCol`
+  * must be a string. `idCol` must also be a KEY (one row per id):
+  * [[dedupExact]] keeps the row whose id is its digest group's least, and
+  * [[decontaminate]] counts shingles per id; duplicate ids would change
+  * both results.
   */
 final case class Corpus(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text") {
@@ -122,18 +135,20 @@ final case class Corpus(docs: DataFrame, idCol: String = "doc_id",
     copy(docs = Quality.gopherFilter(docs, idCol, textCol))
 
   /** Exact dedup: keep each md5 digest's canonical (min-id) row
-    * (doc_dedup_exact). */
-  def dedupExact(): Corpus = {
-    val canon = Dedup.exactGroups(docs, idCol, textCol)
-      .select(col("canonical_id").as(idCol))
-    copy(docs = docs.join(canon, Seq(idCol), "left_semi"))
-  }
+    * (doc_dedup_exact's canonical ids). One window pass over one exchange
+    * keyed by digest: the rows [[Dedup.exactGroups]]' semi-join would
+    * keep, without reading `docs` a second time. */
+  def dedupExact(): Corpus =
+    copy(docs = docs
+      .withColumn("_exact_canon", min(col(idCol)).over(Window.partitionBy(md5(col(textCol)))))
+      .filter(col(idCol) === col("_exact_canon"))
+      .select(docs.columns.map(col).toSeq: _*))
 
   /** Near-dup removal: capped-jaccard pairs ≥ minJ, the higher id of each
     * pair drops (doc_pipeline's policy; doc_jaccard_pairs semantics). */
   def dedupNear(minJ: Double, n: Int = 3, maxDocFreq: Int = 100): Corpus = {
     val dupIds = Dedup.jaccardPairs(docs, idCol, textCol, n, minJ, maxDocFreq)
-      .select(col("doc_b").as(idCol)).distinct()
+      .select(col("doc_b").as(idCol))
     copy(docs = docs.join(dupIds, Seq(idCol), "left_anti"))
   }
 
@@ -145,7 +160,7 @@ final case class Corpus(docs: DataFrame, idCol: String = "doc_id",
                        maxDocFreq: Int = 100): Corpus = {
     val dupIds = Dedup.fingerprintPairs(docs, idCol, textCol, k, w,
         minShared, maxDocFreq)
-      .select(col("doc_b").as(idCol)).distinct()
+      .select(col("doc_b").as(idCol))
     copy(docs = docs.join(dupIds, Seq(idCol), "left_anti"))
   }
 
@@ -178,14 +193,13 @@ final case class Corpus(docs: DataFrame, idCol: String = "doc_id",
     * duplicates are a separate [[dedupNear]]/[[dedupExact]] pass. */
   def dedupAgainst(reference: DataFrame, minJ: Double = 0.5, n: Int = 3,
                    maxDocFreq: Int = 100): Corpus = {
-    val refDigests = reference.select(md5(col(textCol)).as("_d")).distinct()
+    val refDigests = reference.select(md5(col(textCol)).as("_d"))
     val exactIds = docs.select(col(idCol), md5(col(textCol)).as("_d"))
       .join(refDigests, Seq("_d"), "left_semi").select(col(idCol))
     val nearIds = Dedup.crossJaccardPairs(docs, reference, idCol, textCol,
         n, minJ, maxDocFreq)
-      .select(col("doc_l").as(idCol)).distinct()
-    copy(docs = docs.join(exactIds.unionByName(nearIds).distinct(),
-      Seq(idCol), "left_anti"))
+      .select(col("doc_l").as(idCol))
+    copy(docs = docs.join(exactIds.unionByName(nearIds), Seq(idCol), "left_anti"))
   }
 
   /** Per-stratum duplication profile (doc_span_profile): how much of each
@@ -277,7 +291,7 @@ final case class Corpus(docs: DataFrame, idCol: String = "doc_id",
     val benchVecs = TextOps.trigramVectors(bench, idCol, textCol)
     val bad = Similarity.crossCosineMatches(corpusVecs, benchVecs,
         "vid", "vec", tau)
-      .select(col("corpus_id").as(idCol)).distinct()
+      .select(col("corpus_id").as(idCol))
     copy(docs = docs.join(bad, Seq(idCol), "left_anti"))
   }
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * a training doc is contaminated when a large-enough fraction of its
   * distinct word n-grams also appears in SOME single benchmark doc.
   *
-  * Shape: both sides shingle through [[Dedup.shingles]], the candidate
+  * Shape: both sides shingle through [[Dedup.shingles]] (the train side
+  * carrying each doc's distinct-shingle count), the candidate
   * generation is an EQUI-join keyed by shingle (inverted index — never
   * train × bench), and the per-(train, bench) overlap count is one shuffle
   * keyed by the pair. The benchmark side is typically tiny relative to the
@@ -28,25 +29,30 @@ object Decontaminate {
   def contaminatedPairs(train: DataFrame, bench: DataFrame,
                         idCol: String, textCol: String,
                         n: Int = 3, minFrac: Double = 0.5): DataFrame = {
-    val ts = Dedup.shingles(train, idCol, textCol, n)
     val bs = Dedup.shingles(bench, idCol, textCol, n)
       .withColumnRenamed("doc", "bench_id")
-    val sizes = ts.groupBy("doc").agg(count(lit(1)).as("_sz"))
+    overlapPairs(Dedup.sizedShingles(train, idCol, textCol, n), bs, minFrac)
+  }
+
+  /** Pairs of train shingle rows (carrying their doc's full distinct
+    * count `_sz`, [[Dedup.sizedShingles]]) and bench shingle rows whose
+    * overlap fraction reaches minFrac. The denominator rides the rows, so
+    * the train side is read once: no per-doc size aggregate joins back. */
+  private def overlapPairs(ts: DataFrame, bs: DataFrame,
+                           minFrac: Double): DataFrame =
     ts.join(bs, Seq("shingle"))
       .filter(col("doc") =!= col("bench_id"))
-      .groupBy("doc", "bench_id").agg(count(lit(1)).as("_common"))
-      .join(sizes, Seq("doc"))
+      .groupBy("doc", "bench_id", "_sz").agg(count(lit(1)).as("_common"))
       .withColumn("overlap_frac", col("_common") / col("_sz"))
       .filter(col("overlap_frac") >= minFrac)
       .select(col("doc"), col("bench_id"), col("overlap_frac"))
-  }
 
   /** The cleaned training corpus: drop every doc contaminated against ANY
     * benchmark doc (anti-join on the flagged ids). */
   def clean(train: DataFrame, bench: DataFrame, idCol: String, textCol: String,
             n: Int = 3, minFrac: Double = 0.5): DataFrame = {
     val bad = contaminatedPairs(train, bench, idCol, textCol, n, minFrac)
-      .select(col("doc").as(idCol)).distinct()
+      .select(col("doc").as(idCol))
     train.join(bad, Seq(idCol), "left_anti")
   }
 
@@ -90,7 +96,7 @@ object Decontaminate {
                              n: Int = 3, minFrac: Double = 0.5,
                              expectedItems: Long = -1L,
                              numBits: Long = -1L): DataFrame = {
-    val ts = Dedup.shingles(train, idCol, textCol, n)
+    val ts = Dedup.sizedShingles(train, idCol, textCol, n)
     val bsRaw = Dedup.shingles(bench, idCol, textCol, n)
       .withColumnRenamed("doc", "bench_id")
     // when auto-sizing, materialize the (small-by-contract) bench shingles
@@ -98,8 +104,6 @@ object Decontaminate {
     // bench explode lineage would run a second full time for the bloom
     // aggregate + equi-join (ADVICE r10).
     val bs = if (expectedItems > 0) bsRaw else bsRaw.localCheckpoint(false)
-    // denominator BEFORE any prefilter: overlap_frac's |shingles(train)|
-    val sizes = ts.groupBy("doc").agg(count(lit(1)).as("_sz"))
     // size on GLOBAL distinct shingles, not per-doc-distinct rows: the
     // filter holds one bit-set entry per distinct shingle whatever the
     // insertion multiplicity, and overlapping bench docs (benchmarks
@@ -121,13 +125,9 @@ object Decontaminate {
     val candidates = ts.filter(GraftColumns.column(BloomFilterMightContain(
       GraftColumns.expression(bloom),
       GraftColumns.expression(xxhash64(col("shingle"))))))
-    candidates.join(bs, Seq("shingle"))
-      .filter(col("doc") =!= col("bench_id"))
-      .groupBy("doc", "bench_id").agg(count(lit(1)).as("_common"))
-      .join(sizes, Seq("doc"))
-      .withColumn("overlap_frac", col("_common") / col("_sz"))
-      .filter(col("overlap_frac") >= minFrac)
-      .select(col("doc"), col("bench_id"), col("overlap_frac"))
+    // the carried _sz was taken before the prefilter: overlap_frac's
+    // denominator stays |shingles(train)|
+    overlapPairs(candidates, bs, minFrac)
   }
 
   /** [[clean]] through the Bloom-prefiltered pair path — same result set
@@ -142,7 +142,7 @@ object Decontaminate {
                  numBits: Long = -1L): DataFrame = {
     val bad = contaminatedPairsBloom(train, bench, idCol, textCol, n, minFrac,
         expectedItems, numBits)
-      .select(col("doc").as(idCol)).distinct()
+      .select(col("doc").as(idCol))
     train.join(bad, Seq(idCol), "left_anti")
   }
 }

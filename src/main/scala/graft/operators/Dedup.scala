@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   *
   * All hashes derive from md5 (portable across engines) — no engine-native
   * hash functions, so results are reproducible anywhere.
+  *
+  * Read the input once per query, or materialize the small per-doc
+  * decision frame once inside the operator. A frame read twice in one
+  * query is computed twice: Spark reuses no exchange above a checkpoint
+  * scan, nor above a cached relation while AQE is on (the default), and
+  * every corpus step sits on one of the two. So each extra read re-runs
+  * all of that frame's exchanges as new jobs.
   */
 object Dedup {
 
@@ -29,15 +36,28 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("canonical_id"))
 
   /** Distinct word n-gram shingles per document: (id, shingle). */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("doc"), explode(shingleSet(textCol, n)).as("shingle"))
+
+  /** [[shingles]] with each doc's distinct-shingle count `_sz` carried on
+    * its rows: the size is taken from the per-doc array before the
+    * explode, so a consumer that filters rows keeps the full-set count and
+    * never re-reads the input for a `groupBy(doc).count`. */
+  private[graft] def sizedShingles(df: DataFrame, idCol: String,
+                                   textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("doc"), shingleSet(textCol, n).as("_set"))
+      .select(col("doc"), size(col("_set")).cast("long").as("_sz"),
+        explode(col("_set")).as("shingle"))
+
+  /** The per-doc distinct word n-gram array: shingle i = tokens[i..i+n-1]
+    * joined by `_`, empty for docs shorter than n tokens. */
+  private def shingleSet(textCol: String, n: Int): Column = {
     val toks = TextOps.tokens(col(textCol))
-    // shingle i = tokens[i..i+n-1] joined; build via transform over indices
-    val sh = when(size(toks) >= n,
+    array_distinct(when(size(toks) >= n,
       transform(
         sequence(lit(0), size(toks) - n),
         i => concat_ws("_", slice(toks, i + 1, lit(n)))
-      )).otherwise(array())
-    df.select(col(idCol).as("doc"), explode(array_distinct(sh)).as("shingle"))
+      )).otherwise(array()))
   }
 
   /** Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle,
@@ -643,6 +663,10 @@ object Dedup {
       .agg(min("pos").as("s"), (max("pos") + lit(minTokens - 1)).as("e"))
       .groupBy("_sds_doc")
       .agg(collect_list(struct(col("s"), col("e"))).as("_spans"))
+      // at most one row per doc, built once: every read of the output
+      // re-reads these blocks instead of re-running the canonical
+      // aggregate and the island window
+      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // tokens materialize into a column first: referencing the split
     // EXPRESSION inside the rebuild lambda would re-split the text once per
     // element (O(n²) chars/row); a bound column is an O(1) array read

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 /** Distributed connected components over an edge list — the shared kernel
@@ -43,7 +44,11 @@ object Graph {
     * scheduling (~0.5 s × O(log diameter) rounds) that dwarfs a toy graph;
     * the local tier is bounded at ~8 MB of edges (≈ a few hundred thousand
     * pairs), far under driver memory, and both tiers produce identical
-    * labels (pinned by GraphSpec). */
+    * labels (pinned by GraphSpec). Local-tier labels come back as a
+    * `LocalRelation`, which carries exact size statistics: a join against
+    * them plans its broadcast up front, where an RDD-backed frame (no
+    * statistics) first plans and runs a shuffle and only then converts —
+    * two jobs per read. */
   val LocalMaxBytes: Long = 8L << 20
 
   /** (id, comp) for every vertex appearing in `edges`; comp = least vertex
@@ -52,7 +57,9 @@ object Graph {
     * default them to their own singleton. Supported id types: string, long,
     * int (both columns must match). `localMaxBytes` gates the driver-local
     * small-graph tier (see [[LocalMaxBytes]]); pass 0 to force the
-    * distributed loop. */
+    * distributed loop. The local tier — taken from the plan estimate or
+    * from the loop's measured edge bytes — returns its labels as a
+    * `LocalRelation`; the loop tier returns an RDD-backed frame. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 64,
                           localMaxBytes: Long = LocalMaxBytes): DataFrame = {
@@ -74,7 +81,7 @@ object Graph {
     val estBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
     // labels stay an RDD in the loop tier — the result is vertex-sized and
     // must never transit the driver; only the local tier's (already
-    // driver-resident, size-gated) labels are parallelized back out.
+    // driver-resident, size-gated) labels go back out, as a LocalRelation.
     // When the estimate EXCEEDS the gate it may still be join-tree noise
     // (mv_blocked_dynamic's ~12-edge coupling graph estimated 4.5 GB through
     // the screen's join tree and paid ~5 loop jobs per call); the loop's own
@@ -82,23 +89,19 @@ object Graph {
     // persisted bytes, so the local-tier decision is re-taken there from the
     // MEASURED size — free for genuinely big graphs, and a toy graph escapes
     // to the driver after one cheap count instead of riding the full loop.
-    def solve[T: Ordering : ClassTag](get: Row => (T, T)): RDD[(T, T)] =
-      if (estBytes <= localMaxBytes)
-        spark.sparkContext.parallelize(localCC(e.collect().map(get)).toSeq, 1)
-      else ccLoop[T](e.rdd.map(get), e.rdd.getNumPartitions, maxIter,
-        localMaxBytes)
-    val labels = idType match {
+    val schema = StructType(Seq(StructField("id", idType), StructField("comp", idType)))
+    def solve[T: Ordering : ClassTag](get: Row => (T, T)): DataFrame =
+      (if (estBytes <= localMaxBytes) Left(localCC(e.collect().map(get)))
+       else ccLoop[T](e.rdd.map(get), e.rdd.getNumPartitions, maxIter, localMaxBytes))
+        .fold(local => spark.createDataFrame(local.map(p => Row(p._1, p._2)).toSeq.asJava, schema),
+          rdd => spark.createDataFrame(rdd.map(p => Row(p._1, p._2)), schema))
+    idType match {
       case StringType => solve[String](r => (r.getString(0), r.getString(1)))
-        .map { case (v, c) => Row(v, c) }
       case LongType => solve[Long](r => (r.getLong(0), r.getLong(1)))
-        .map { case (v, c) => Row(v, c) }
       case IntegerType => solve[Int](r => (r.getInt(0), r.getInt(1)))
-        .map { case (v, c) => Row(v, c) }
       case t: DataType => throw new IllegalArgumentException(
         s"connectedComponents supports string/long/int vertex ids, got $t")
     }
-    spark.createDataFrame(labels,
-      StructType(Seq(StructField("id", idType), StructField("comp", idType))))
   }
 
   /** Driver-local tier: path-compressing union-by-min over an in-memory edge
@@ -124,10 +127,13 @@ object Graph {
     parent.keys.map(v => (v, find(v)))
   }
 
+  /** The distributed tier: Right(labels RDD), or Left(driver-local labels)
+    * when the materialized edges measure under the local gate. */
   private def ccLoop[T: Ordering : ClassTag](rawEdges: RDD[(T, T)],
                                              physicalWidth: Int,
                                              maxIter: Int,
-                                             localGateBytes: Long = 0L): RDD[(T, T)] = {
+                                             localGateBytes: Long = 0L)
+      : Either[Iterable[(T, T)], RDD[(T, T)]] = {
     val ord = implicitly[Ordering[T]]
     def lo(x: T, y: T): T = if (ord.lteq(x, y)) x else y
     val sc = rawEdges.sparkContext
@@ -166,7 +172,7 @@ object Graph {
         actualBytes <= 2 * localGateBytes) {
       val pairs = eLwide.collect()
       eLwide.unpersist(blocking = false)
-      return sc.parallelize(localCC(pairs).toSeq, 1)
+      return Left(localCC(pairs))
     }
     val nPart = math.max(1, math.min(
       if (actualBytes > 0) (actualBytes / (32L << 20) + 1).toInt
@@ -224,6 +230,6 @@ object Graph {
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds (a " +
         s"2^$maxIter-diameter chain); raise maxIter")
-    labels
+    Right(labels)
   }
 }

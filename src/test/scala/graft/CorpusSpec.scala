@@ -100,6 +100,48 @@ class CorpusSpec extends SparkSpec {
     assert(viaBloom == cleaned.docs.select("doc_id").as[Long].collect().toSet)
   }
 
+  test("window dedupExact keeps exactly the rows the exactGroups semi-join kept") {
+    import spark.implicits._
+    // repeated texts out of id order, one null text, one empty text
+    val d = Seq[(Long, String)]((5L, "a b c"), (2L, "a b c"), (9L, "a b c"),
+      (3L, null), (7L, ""), (1L, "x y"), (8L, "x y"), (6L, "z"))
+      .toDF("doc_id", "text")
+    val semi = d.join(graft.operators.Dedup.exactGroups(d, "doc_id", "text")
+        .select(col("canonical_id").as("doc_id")), Seq("doc_id"), "left_semi")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    val got = Corpus(d).dedupExact().docs
+    assert(got.columns.toSeq == d.columns.toSeq, "schema preserved")
+    assert(rows(got) == rows(semi))
+    assert(rows(got).map(_._1) == Set(2L, 3L, 7L, 1L, 6L))
+  }
+
+  test("the benchmark-shaped chain runs a pinned number of jobs and shuffle stages") {
+    // qualityFilter → dedupExact → dedupNearClusters → stripDupSpans →
+    // decontaminate → pack, built and written once: each step reads its
+    // input once (or its per-doc decision frame once), so a step that
+    // starts reading a frame twice in the final write shows up here as
+    // extra jobs and shuffle stages. Pins are the measured counts (31 jobs
+    // and 13 shuffle stages while the final write recomputed the spans and
+    // read the decontamination input three times).
+    val (jobPin, stagePin) = (19, 10)
+    val bench = docs.filter(col("doc_id") === 4L)
+      .select((col("doc_id") + 100L).as("doc_id"), col("text"))
+    val rec = graft.obs.RunRecorder.install(spark)
+    val (packed, d) = try rec.measure {
+      val p = Corpus(docs).qualityFilter(0.5).dedupExact().dedupNearClusters(0.8)
+        .stripDupSpans(8).decontaminate(bench).pack(2048)
+      p.write.mode("overwrite").format("noop").save()
+      p
+    } finally rec.close()
+    info(s"chain: ${d.jobs} jobs, ${d.shuffleStages} shuffle stages")
+    assert(d.jobs <= jobPin, s"chain ran ${d.jobs} jobs > pinned $jobPin")
+    assert(d.shuffleStages <= stagePin,
+      s"chain materialized ${d.shuffleStages} shuffle stages > pinned $stagePin")
+    // 2 is 1's exact copy, 6 fails the quality gate, 4 is the benchmark
+    assert(packed.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 5L))
+  }
+
   test("topTerms ranks distinctive terms above ubiquitous ones") {
     val top = Corpus(docs).topTerms(2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet

@@ -125,6 +125,24 @@ class DedupHygieneSpec extends SparkSpec {
     assert(auto1.size >= auto.size)
   }
 
+  test("sizedShingles carries each doc's distinct-shingle count on its rows") {
+    import spark.implicits._
+    // a doc with repeated trigrams (6 windows, 2 distinct), a plain doc,
+    // and a doc shorter than n = 3 tokens (no shingles on either path)
+    val d = Seq((1L, "a b a b a b a b"), (2L, "p q r s t"), (3L, "x y"))
+      .toDF("doc_id", "text")
+    val old = Dedup.shingles(d, "doc_id", "text", 3).groupBy("doc").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sized = Dedup.sizedShingles(d, "doc_id", "text", 3)
+    val carried = sized.select("doc", "_sz").distinct()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(carried == old, s"carried $carried vs counted $old")
+    assert(old == Map(1L -> 2L, 2L -> 3L))
+    assert(sized.drop("_sz").select("doc", "shingle").collect().toSet ==
+      Dedup.shingles(d, "doc_id", "text", 3).collect().toSet,
+      "the sized rows are exactly the shingle rows")
+  }
+
   test("band-join pin engages only above the volume gate") {
     // 2 shuffle partitions in the test session → gate at 8192 banded rows
     val nPart = spark.sessionState.conf.numShufflePartitions

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components: correctness on known shapes, the
@@ -84,9 +85,31 @@ class GraphSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       // one chain 0..12 → comp 0 everywhere
       assert(labels == (0L to 12L).map(_ -> 0L).toMap, s"got $labels")
+      assert(Graph.connectedComponents(edges, "a", "b").queryExecution.analyzed
+        .isInstanceOf[LocalRelation], "the measured escape returns a LocalRelation too")
       // materialize+count, driver collect, label parallelize-collect — the
       // loop tier's per-round jobs (≥2 rounds × join/count) would exceed this
       assert(d.jobs <= 4, s"expected the local tier's ≤4 jobs, ran ${d.jobs}")
+    } finally rec.close()
+  }
+
+  test("local-tier labels are a LocalRelation: an anti-join against them shuffles nothing") {
+    import spark.implicits._
+    // an RDD-backed label frame has no size statistics, so the anti-join
+    // first plans and runs a shuffle and only then converts to a
+    // broadcast; a LocalRelation is broadcast from the start
+    val edges = Seq((2L, 1L), (3L, 2L), (10L, 11L)).toDF("a", "b")
+    val labels = Graph.connectedComponents(edges, "a", "b")
+    assert(labels.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      s"got ${labels.queryExecution.analyzed}")
+    val docs = spark.range(0, 20).toDF("id")
+    val rec = graft.obs.RunRecorder.install(spark)
+    try {
+      val (kept, d) = rec.measure(docs
+        .join(labels.filter(col("id") =!= col("comp")).select("id"), Seq("id"), "left_anti")
+        .collect().map(_.getLong(0)).toSet)
+      assert(kept == (0L until 20L).toSet -- Set(2L, 3L, 11L))
+      assert(d.shuffleStages == 0, s"anti-join materialized ${d.shuffleStages} shuffle stages")
     } finally rec.close()
   }
 

@@ -38,7 +38,8 @@ class PlanPinSpec extends SparkSpec {
     "emb_knn_ivf" -> (21, 26),                // 17
     "doc_curation_audit" -> (16, 22),         // 12
     "doc_curation_chain" -> (10, 15),         // 8 (keyed ckpt + narrow strat)
-    "mv_blocked_dynamic" -> (32, 16),         // 27
+    // 15 jobs since the local-tier CC labels plan their broadcast up front
+    "mv_blocked_dynamic" -> (32, 15),         // 27
     // r16: the greedy walk evaluates a reject-path LOOKAHEAD candidate
     // concurrently; each ACCEPT discards one speculative eval and re-runs
     // it against the new state, so the stage count is data-dependent up

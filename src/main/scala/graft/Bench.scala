@@ -171,7 +171,7 @@ object Bench {
     // healthy battery); each flag's detail went to stderr as it fired
     val ms = memo +: results.map(_.m)
     val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","memo_build":${f3(memo.sec)},"failed":$failed"""
-    val totals = s""""task_total_sec":${f3(w.taskMs / 1000.0)},"cpu_total_sec":${f3(w.cpuMs / 1000.0)},"gc_total_sec":${f3(w.gcMs / 1000.0)},"spill_total_mb":${(w.spillMem + w.spillDisk) >> 20},"segment_flags":${ms.map(_.segmentFlags).sum},"segment_flags_plan":${ms.map(_.segmentFlagsPlan).sum},"jobs":${results.map(_.m.jobs).sum},"shuffle_total_mb":${w.shuffleWrite >> 20},"calib_sec":${f3(calib.sec)},"calib_cpu_sec":${f3(calib.work.cpuMs / 1000.0)}"""
+    val totals = s""""task_total_sec":${f3(w.taskMs / 1000.0)},"cpu_total_sec":${f3(w.cpuMs / 1000.0)},"gc_total_sec":${f3(w.gcMs / 1000.0)},"spill_total_mb":${(w.spillMem + w.spillDisk) >> 20},"segment_flags":${ms.map(_.segmentFlags).sum},"segment_flags_plan":${ms.map(_.segmentFlagsPlan).sum},"jobs":${results.map(_.m.jobs).sum},"compiles":${results.map(_.m.compiles).sum},"shuffle_total_mb":${w.shuffleWrite >> 20},"calib_sec":${f3(calib.sec)},"calib_cpu_sec":${f3(calib.work.cpuMs / 1000.0)}"""
     val line = s"""$head$errPart$rerunPart,$totals,"driver_used_mb":$usedMb,"storage_used_mb":$storageMb,"memo_free_mb":$memoFreedMb,"queries":${secMap(results)},"sf":"$sfDir"}"""
     println(line)
     // compact totals-only record as the LAST stdout line (VERDICT r15 #1):

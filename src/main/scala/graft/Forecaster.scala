@@ -5,16 +5,16 @@ import graft.functions.FeatureOps
 import graft.models._
 import graft.operators.Conformal
 import graft.results.ResultsStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftCheckpoint}
 import org.apache.spark.sql.functions._
 
 /** User-facing facade mirroring the reference's `Forecaster` workflow
   * (/root/reference/src/scalecast/Forecaster.py:44-208): build a series,
   * generate future dates, add regressors, pick an estimator, call
   * `manualForecast`, export. Unlike the reference's mutable object, every
-  * step returns a NEW immutable Forecaster (frames are lazy plans; nothing
-  * executes until an export/action) — the same call sequence a scalecast
-  * user writes, over the distributed engine:
+  * step returns a NEW immutable Forecaster (frames are lazy plans, except
+  * that `setTestLength` runs the prepared frame once into a leaf) — the
+  * same call sequence a scalecast user writes, over the distributed engine:
   *
   * {{{
   *   val f = Forecaster(series)                 // long (series_id, ds, y)
@@ -70,9 +70,15 @@ final case class Forecaster(
   def generateFutureDates(h: Int, freq: Option[String] = None): Forecaster =
     copy(frame = freq.fold(withInferredHorizon(frame, h))(f => withHorizon(frame, h, f)))
 
-  /** `set_test_length`: flags the trailing rows per series as the holdout. */
+  /** `set_test_length`: flags the trailing rows per series as the holdout.
+    * This completes the prepared frame (spine + flag), which every later
+    * query reads — tune folds, each model, the conformal widths, combo and
+    * every export — so it is run once here (one job) into a leaf
+    * ([[org.apache.spark.sql.GraftCheckpoint.materialize]]) instead of
+    * being re-derived, and recompiled, by each of them. */
   def setTestLength(n: Int): Forecaster =
-    copy(frame = withTestFlag(frame.drop("is_test"), n), testLength = n)
+    copy(frame = GraftCheckpoint.materialize(withTestFlag(frame.drop("is_test"), n)),
+      testLength = n)
 
   /** `set_cilevel` (needs testLength ≥ 1/(1−cilevel) for conformal CIs). */
   def setCilevel(level: Double): Forecaster = copy(cilevel = level)

@@ -3,7 +3,7 @@ package graft
 import graft.core.SeriesFrame._
 import graft.models.{BlockedVar, MvForecast}
 import graft.results.ResultsStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftCheckpoint}
 import org.apache.spark.sql.functions._
 
 /** User-facing multivariate facade mirroring the reference's `MVForecaster`
@@ -102,7 +102,7 @@ final case class MvForecaster(
     * lags (train rows only), walk the coupled recursion over the horizon,
     * bank under `callMe`. */
   def manualForecast(callMe: String = "mv"): MvForecaster = {
-    val scored = score(base.localCheckpoint(true))
+    val scored = score(GraftCheckpoint.materialize(base))
     // per-series conformal CIs when the holdout supports the cilevel —
     // MVForecaster._set_cis (MVForecaster.py:446-511), same gate as the
     // univariate facade
@@ -162,7 +162,7 @@ final case class MvForecaster(
       else frame.withColumn(IsFuture, lit(false))
     val aligned = lineUpDates(withFut.filter(!col(IsFuture)).drop("is_test"))
       .select(col(SeriesId), col(Ds), col(Y), col(IsFuture))
-    graft.eval.Evaluation.backtest(aligned.localCheckpoint(true), nIter, h,
+    graft.eval.Evaluation.backtest(GraftCheckpoint.materialize(aligned), nIter, h,
       jumpBack, flagged => score(flagged.localCheckpoint(true)),
       metricNames, parallelism)
   }

@@ -43,11 +43,14 @@ final case class StageRow(stageId: Int, name: String, work: Work)
   * stages. `segmentFlags` is the stage view of the segment law
   * ([[graft.core.SegmentProbe]]), `segmentFlagsPlan` the plan view
   * ([[graft.core.SegmentPlanScan]]); a pathology read un-coalesced can
-  * flag in both. `planScanErrors` counts plan scans that threw. */
+  * flag in both. `planScanErrors` counts plan scans that threw.
+  * `compiles` counts the classes Spark's code generator compiled while the
+  * call ran — a codegen-cache miss each; the counter is JVM-global, so it
+  * also counts compiles of any other session or thread running meanwhile. */
 final case class RunDelta(sec: Double, jobs: Long = 0L,
                           stageRows: Vector[StageRow] = Vector.empty,
                           segmentFlags: Long = 0L, segmentFlagsPlan: Long = 0L,
-                          planScanErrors: Long = 0L) {
+                          planScanErrors: Long = 0L, compiles: Long = 0L) {
   def stages: Int = stageRows.size
   /** Stages that wrote shuffle bytes: exchanges that materialized data. */
   def shuffleStages: Int = stageRows.count(_.work.shuffleWrite > 0)
@@ -58,7 +61,8 @@ final case class RunDelta(sec: Double, jobs: Long = 0L,
   def json(extra: (String, String)*): String = {
     import RunRecorder.{f3, mb, obj}
     obj(Seq("sec" -> f3(sec)) ++ extra ++ Seq(
-      "jobs" -> jobs, "stages" -> stages, "shuffle_stages" -> shuffleStages,
+      "jobs" -> jobs, "compiles" -> compiles, "stages" -> stages,
+      "shuffle_stages" -> shuffleStages,
       "task_sec" -> f3(work.taskMs / 1000.0), "cpu_sec" -> f3(work.cpuMs / 1000.0),
       "gc_sec" -> f3(work.gcMs / 1000.0),
       "shuffle_read_mb" -> mb(work.shuffleRead), "shuffle_write_mb" -> mb(work.shuffleWrite),
@@ -110,11 +114,12 @@ final class RunRecorder private (val spark: SparkSession) extends SparkListener 
   def measure[A](body: => A): (A, RunDelta) = {
     GraftBus.drain(spark.sparkContext)
     update(_ => RunDelta(0.0))
+    val c0 = GraftBus.compiles
     val t0 = System.nanoTime()
     val out = body
     val sec = (System.nanoTime() - t0) / 1e9
     GraftBus.drain(spark.sparkContext)
-    (out, synchronized(acc.copy(sec = sec)))
+    (out, synchronized(acc.copy(sec = sec, compiles = GraftBus.compiles - c0)))
   }
 
   /** Remove both listeners from the session. */

@@ -2,6 +2,7 @@ package graft.results
 
 import graft.core.SeriesFrame._
 import graft.functions.Metrics
+import org.apache.commons.math3.distribution.NormalDistribution
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -113,18 +114,17 @@ object ResultsStore {
         .select(col(SeriesId), col(Ds), col("yhat").as(s"signal_$model")),
       Seq(SeriesId, Ds), "left")
 
+  /** The two-sided standard-normal quantile of a confidence level. */
+  private[graft] def zOf(cilevel: Double): Double = {
+    require(cilevel > 0 && cilevel < 1, s"cilevel must lie in (0, 1), got $cilevel")
+    new NormalDistribution().inverseCumulativeProbability(0.5 + cilevel / 2)
+  }
+
   /** `synthesize_models`: average ≥2 models' forecasts; CI = z·σ/√n around
     * the mean (/root/reference/src/scalecast/Forecaster.py:217-259). */
   def synthesize(results: DataFrame, models: Seq[String], cilevel: Double = 0.95,
                  name: String = "synthesis"): DataFrame = {
-    // two-sided Gaussian quantile via Acklam's rational approximation is
-    // overkill here: use the exact value for the common levels
-    val z = cilevel match {
-      case 0.95 => 1.959963984540054
-      case 0.9  => 1.6448536269514722
-      case 0.99 => 2.5758293035489004
-      case _    => 1.959963984540054
-    }
+    val z = zOf(cilevel)
     results.filter(col("model").isInCollection(models))
       .groupBy(SeriesId, Ds, Y, "is_test", IsFuture)
       .agg(avg("yhat").as("yhat"), stddev_samp(col("yhat")).as("_sd"),

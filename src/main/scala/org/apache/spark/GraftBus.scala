@@ -12,4 +12,10 @@ object GraftBus {
   def drain(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** Classes compiled by Spark's code generator in this JVM so far (every
+    * compile records one compilation-time sample; a codegen-cache hit
+    * records none). */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

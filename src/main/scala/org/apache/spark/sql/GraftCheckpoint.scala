@@ -31,6 +31,9 @@ import org.apache.spark.storage.StorageLevel
   * exchanges wherever the keys line up. Origin stats/constraints are
   * preserved (`otherCopyArgs`), so size-gated broadcast decisions are
   * unchanged.
+  *
+  * [[materialize]] is the replayable sibling for a frame reused across
+  * many queries: persisted rows that keep their lineage, not a checkpoint.
   */
 object GraftCheckpoint {
 
@@ -190,6 +193,42 @@ object GraftCheckpoint {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking); true
       case _ => false
     }
+
+  /** Run `df` once (one job on an exchange-free lineage) and return a leaf
+    * over its persisted rows — for a frame that many later queries read.
+    *
+    * Each query that derives such a frame from its lineage plans, and
+    * compiles, its own copy; Spark's codegen cache (100 entries, keyed by
+    * class loader and source, with the stage id in every whole-stage class
+    * name) does not carry those copies across queries. A leaf compiles
+    * nothing of the lineage.
+    *
+    * The rows are an `RDD.persist`, not a checkpoint: the ContextCleaner
+    * drops the blocks once the leaf is unreachable, and a lost block is
+    * recomputed from the kept lineage. The leaf advertises
+    * `SinglePartition` exactly when the RDD has one partition (a per-series
+    * aggregate or window over it then plans no exchange), otherwise no
+    * partitioning, and carries the origin's optimized-plan statistics, so
+    * size-gated broadcast decisions see what they saw before. */
+  def materialize(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition,
+      UnknownPartitioning}
+    import org.apache.spark.sql.execution.SQLExecution
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      val r = qe.executedPlan.execute().map(_.copy())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      r.count()
+      r
+    }
+    val n = rows.getNumPartitions
+    val origin = qe.optimizedPlan
+    classic.Dataset.ofRows(session, new LogicalRDD(origin.output, rows,
+      if (n == 1) SinglePartition else UnknownPartitioning(n))(
+      session, Some(origin.stats): Option[Statistics],
+      Some(origin.constraints): Option[ExpressionSet]))
+  }
 
   private def advertise(ckpt: DataFrame, df: DataFrame,
                         keyNames: Seq[String], nPart: Int): DataFrame = {

@@ -126,8 +126,12 @@ object Evaluation {
       perSeries.agg((sum(col(metricName) * wcol) / sum(wcol)))
         .first().getDouble(0)
     case sid => // a series_id: optimize for that one series
-      perSeries.filter(col(SeriesId) === sid)
-        .agg(avg(col(metricName))).first().getDouble(0)
+      val r = perSeries.filter(col(SeriesId) === sid)
+        .agg(avg(col(metricName)), count(lit(1))).first()
+      if (r.getLong(1) == 0) throw new IllegalArgumentException(
+        s"optimize_on '$sid' is neither a mode (mean, min, max, weighted) " +
+          "nor a series_id of the metrics")
+      r.getDouble(0)
   }
 
   /** Metric aggregates over the `is_test` slice, one row per series. */

@@ -284,15 +284,18 @@ object BlockedVar {
   }
 
   /** Recursive horizon forecast over the blocked equations — the coupled
-    * walk of [[MvForecast.dynamicForecast]] at blocked scale. The coupling
+    * walk of [[MvForecast.dynamicForecastOls]] at blocked scale. The coupling
     * graph (edges = each target's screened sources) decomposes into
     * connected components, and components are INDEPENDENT: the whole
     * recursion runs as ONE `flatMapGroups` pass keyed by component — each
     * component's horizon walks sequentially inside an executor task with
     * state bounded at |component| × (maxLag + h) ledger values, components
     * parallelize across the cluster, and there are zero per-step job
-    * barriers (the same shape [[Recursive.dynamicForecastScorer]] uses per
-    * series, lifted to the coupling unit the blocked equations force).
+    * barriers (the same shape as [[Recursive.walk]], lifted to the coupling
+    * unit the blocked equations force). It stays a walk of its own: its
+    * betas and edges are ROWS of the tagged frame, so no fit reaches the
+    * driver at 10⁶ series, where [[Recursive.walk]] takes per-target plans
+    * and scorers built on the driver.
     * Component discovery is [[graft.operators.Graph.connectedComponents]]
     * over the block EDGES — fully distributed (O(log diameter) rounds of
     * co-partitioned RDD joins), with the labels attached by a size-gated

@@ -14,8 +14,9 @@ import org.apache.spark.sql.DataFrame
   * `fit` trains on observed non-test rows with complete features (the
   * reference drops the first max-lag rows, models.py:78-84); `transform`
   * scores any frame vectorized. Dynamic multi-step prediction with AR
-  * features is [[Recursive.dynamicForecast]] — h small whole-frame
-  * transforms, never a per-series driver loop.
+  * features is [[Recursive.dynamicForecast]] — one executor-side walk per
+  * series, or one whole-frame transform per dependency level, never a
+  * per-series driver loop.
   */
 final case class MllibTsEstimator(
     algo: String,

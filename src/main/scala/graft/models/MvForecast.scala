@@ -1,16 +1,16 @@
 package graft.models
 
 import graft.core.SeriesFrame._
-import org.apache.spark.ml.Transformer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multivariate forecasting — the reference's `SKLearnMV`
   * (/root/reference/src/scalecast/models.py:164-420): every target series is
-  * modeled on the lags of ALL series (a VAR-by-OLS when the estimator is
-  * linear), with one model per target and a shared recursive prediction loop
-  * where each step's predictions for every series feed the next step's lag
-  * matrix (models.py:368-407).
+  * modeled on the lags of ALL series, one closed-form OLS equation per
+  * target (a VAR by OLS), with a shared recursive prediction where each
+  * step's predictions for every series feed the next step's lag matrix
+  * (models.py:368-407). Past [[CoupledSetMax]] series the estimation is
+  * [[BlockedVar]]'s screened per-equation designs.
   *
   * Features follow the naming convention `xlag_<sid>_<k>` = lag k of series
   * `sid`, built wide (one pivot on the shared calendar — requires
@@ -43,22 +43,11 @@ object MvForecast {
     }
   }
 
-  /** Fit one estimator per target series on the cross-series lag features
-    * (train = observed, non-test, feature-complete rows of that series). */
-  def fitPerSeries(frame: DataFrame, seriesIds: Seq[String], maxLag: Int,
-                   algo: String = "mlr"): Map[String, Transformer] = {
-    val feats = for (sid <- seriesIds; k <- 1 to maxLag) yield xlagCol(sid, k)
-    seriesIds.map { sid =>
-      sid -> (MllibTsEstimator(algo, feats)
-        .fit(frame.filter(col(SeriesId) === sid)): Transformer)
-    }.toMap
-  }
-
-  /** Above this many coupled series the scorer path's single-task state
-    * (nSeries × (maxLag + h) ledger entries) stops being obviously tiny and
-    * the step-wise ledger path takes over. MV cross-lag models are inherently
-    * small-N — every model's feature width already grows with nSeries
-    * (models.py:213-337), so real uses sit far below this. */
+  /** The largest coupled set the full cross-lag design takes: its width
+    * nSeries·maxLag + 1 makes the moments row quadratic in the series count
+    * and the horizon walk one task over the whole set. MV cross-lag models
+    * are inherently small-N (models.py:213-337); larger sets go to
+    * [[BlockedVar]]. */
   val CoupledSetMax = 64
 
   private def parseXlag(c: String): Option[(String, Int)] =
@@ -73,98 +62,6 @@ object MvForecast {
         else None
       }
     }
-
-  /** MV dynamic forecast: each step's predictions for every series feed the
-    * next step's cross-lag matrix (models.py:368-407).
-    *
-    * When every per-target model is row-scorable ([[RowScorer.unwrap]]) and
-    * the coupled set is small, the whole recursion runs as ONE executor task:
-    * cross-series coupling makes the set the irreducible unit of sequential
-    * work (exactly the reference's loop), and its state is bounded at
-    * nSeries × (maxLag + h) ledger entries. Otherwise: h steps, each filling
-    * every series' step-i cross-lags from the shared ledger (actuals ∪ all
-    * predictions so far) and scoring set-based — h × |series| small jobs. */
-  def dynamicForecast(frame: DataFrame, models: Map[String, Transformer],
-                      seriesIds: Seq[String], maxLag: Int): DataFrame = {
-    val scorers = seriesIds.flatMap(sid => RowScorer.unwrap(models(sid)).map(sid -> _)).toMap
-    if (scorers.size == seriesIds.size && seriesIds.size <= CoupledSetMax)
-      dynamicForecastScorer(frame, models, seriesIds, maxLag, scorers)
-    else dynamicForecastLedger(frame, models, seriesIds, maxLag)
-  }
-
-  /** The shared coupled-set walk: one executor task advances all series'
-    * horizons together, scoring each (series, step) row with `score` and
-    * feeding every prediction back into the shared cross-series ledger.
-    * Returns the (series_id, _t, yhat) horizon scores. */
-  private def coupledScores(withT: DataFrame, seriesIds: Seq[String], maxLag: Int,
-                            featColsOf: Map[String, Seq[String]],
-                            score: (String, Array[Double]) => Double): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
-    val obs = withT.filter(!col(IsFuture))
-    val fut = withT.filter(col(IsFuture))
-    val unionFeats: Seq[String] = seriesIds.flatMap(featColsOf).distinct
-    // per-target feature plan: union-array position, or (source series, lag)
-    val plans: Map[String, Array[Either[Int, (String, Int)]]] = seriesIds.map { sid =>
-      sid -> featColsOf(sid).map { c =>
-        parseXlag(c) match {
-          case Some(sk) => Right(sk): Either[Int, (String, Int)]
-          case None     => Left(unionFeats.indexOf(c)): Either[Int, (String, Int)]
-        }
-      }.toArray
-    }.toMap
-    val lastT = obs.groupBy(SeriesId).agg(max("_t").as("_maxT"))
-    val seed = obs.join(lastT, Seq(SeriesId))
-      .filter(col("_t") > col("_maxT") - maxLag)
-      .select(col(SeriesId), col("_t"), lit(0).as("_step"), col(Y).as("_v"),
-        lit(null).cast("array<double>").as("_feats"))
-    val futIn = fut.withColumn("_step", row_number().over(w))
-      .select(col(SeriesId), col("_t"), col("_step"),
-        lit(null).cast("double").as("_v"),
-        array(unionFeats.map(c => col(c).cast("double")): _*).as("_feats"))
-    val sidOrder = seriesIds.zipWithIndex.toMap
-    val outSchema = StructType(Seq(StructField(SeriesId, withT.schema(SeriesId).dataType),
-      StructField("_t", IntegerType), StructField("yhat", DoubleType)))
-    seed.unionByName(futIn)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .flatMapGroups { (_: Int, it: Iterator[Row]) =>
-        val rows = it.toArray
-        val ledger = scala.collection.mutable.HashMap.empty[(String, Int), Double]
-        rows.foreach(r => if (r.getInt(2) == 0 && !r.isNullAt(3))
-          ledger((r.getString(0), r.getInt(1))) = r.getDouble(3))
-        rows.filter(_.getInt(2) > 0)
-          .sortBy(r => (r.getInt(2), sidOrder.getOrElse(r.getString(0), Int.MaxValue)))
-          .iterator.map { r =>
-            val sid = r.getString(0)
-            val t = r.getInt(1)
-            val uf = r.getSeq[Any](4)
-            val feats = plans(sid).map {
-              case Left(i)         => val v = uf(i); if (v == null) Double.NaN else v.asInstanceOf[Double]
-              case Right((src, k)) => ledger.getOrElse((src, t - k), Double.NaN)
-            }
-            val yhat = score(sid, feats)
-            ledger((sid, t)) = yhat
-            Row(sid, t, yhat)
-          }
-      }(Encoders.row(outSchema)).toDF()
-  }
-
-  /** Coupled-set scorer path: one task walks all series' horizons together. */
-  private[graft] def dynamicForecastScorer(frame: DataFrame, models: Map[String, Transformer],
-                                           seriesIds: Seq[String], maxLag: Int,
-                                           scorers: Map[String, RowScorer]): DataFrame = {
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val obs = withT.filter(!col(IsFuture))
-    val fitted = seriesIds.map(sid => models(sid).transform(obs.filter(col(SeriesId) === sid)))
-      .reduce(_ unionByName _)
-    val fut = withT.filter(col(IsFuture))
-    val outCols = (frame.columns :+ "yhat").toSeq.map(col)
-    val scores = coupledScores(withT, seriesIds, maxLag,
-      seriesIds.map(sid => sid -> scorers(sid).featureCols).toMap,
-      (sid, feats) => scorers(sid).score(feats))
-    val futScored = fut.join(scores, Seq(SeriesId, "_t"), "left")
-    fitted.select(outCols: _*).unionByName(futScored.select(outCols: _*))
-  }
 
   /** One grouped moments aggregation fits EVERY per-target equation at once
     * — the equations share the cross-lag design matrix (only y differs per
@@ -207,69 +104,27 @@ object MvForecast {
     }.toMap
   }
 
-  /** MV dynamic forecast over closed-form fits: the fitted pass is ONE
-    * cased expression over the whole frame (no per-series transforms) and
-    * the recursion is the coupled-set walk. */
+  /** MV dynamic forecast over closed-form fits: each step's predictions for
+    * every series feed the next step's cross-lag matrix (models.py:368-407).
+    * The fitted pass is ONE cased expression over the whole frame; the
+    * horizon is [[Recursive.walk]] over the whole coupled set in one group —
+    * cross-series coupling makes the set the irreducible unit of sequential
+    * work, its ledger bounded at nSeries × (maxLag + h) values. */
   def dynamicForecastOls(frame: DataFrame, fits: Map[String, Ols.Fit],
                          seriesIds: Seq[String], maxLag: Int): DataFrame = {
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val outCols = (frame.columns :+ "yhat").toSeq.map(col)
     val fittedExpr = seriesIds.foldLeft(lit(null).cast("double")) { (acc, sid) =>
       when(col(SeriesId) === sid, fits(sid).predictExpr).otherwise(acc)
     }
-    val fitted = withT.filter(!col(IsFuture)).withColumn("yhat", fittedExpr)
-    val fut = withT.filter(col(IsFuture))
-    val scores = coupledScores(withT, seriesIds, maxLag,
-      seriesIds.map(sid => sid -> fits(sid).feats).toMap,
-      (sid, feats) => {
-        val f = fits(sid)
-        var s = f.intercept
-        var i = 0
-        val n = math.min(feats.length, f.beta.length)
-        while (i < n) { s += f.beta(i) * feats(i); i += 1 }
-        s
-      })
-    val futScored = fut.join(scores, Seq(SeriesId, "_t"), "left")
-    fitted.select(outCols: _*).unionByName(futScored.select(outCols: _*))
-  }
-
-  /** Step-wise ledger path — the generic fallback for any `Transformer`. */
-  private[graft] def dynamicForecastLedger(frame: DataFrame, models: Map[String, Transformer],
-                                           seriesIds: Seq[String], maxLag: Int): DataFrame = {
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val obs = withT.filter(!col(IsFuture))
-    val fittedParts = seriesIds.map(sid => models(sid).transform(obs.filter(col(SeriesId) === sid)))
-    val fitted = fittedParts.reduce(_ unionByName _)
-
-    val fut = withT.filter(col(IsFuture))
-      .withColumn("_step", row_number().over(w)).localCheckpoint(true)
-    val maxStep = {
-      val r = fut.agg(max("_step")).first()
-      if (r.isNullAt(0)) 0 else r.getInt(0)
-    }
-    // bounded ledger: only the last (maxLag + h) values per series are joinable
-    val lastT = obs.groupBy(SeriesId).agg(max("_t").as("_maxT"))
-    var known = obs.join(lastT, Seq(SeriesId))
-      .filter(col("_t") > col("_maxT") - (maxLag + maxStep))
-      .select(col(SeriesId), col("_t"), col(Y).as("_v")).localCheckpoint(true)
-    var preds = List.empty[DataFrame]
-    for (i <- 1 to maxStep) {
-      var rows = fut.filter(col("_step") === i)
-      for (sid <- seriesIds; k <- 1 to maxLag) {
-        val c = xlagCol(sid, k)
-        val lagged = known.filter(col(SeriesId) === sid)
-          .select((col("_t") + k).as("_t"), col("_v").as(c))
-        rows = rows.drop(c).join(lagged, Seq("_t"), "left")
-      }
-      val scored = seriesIds.map(sid =>
-          models(sid).transform(rows.filter(col(SeriesId) === sid)))
-        .reduce(_ unionByName _).localCheckpoint(true)
-      known = known.unionByName(
-        scored.select(col(SeriesId), col("_t"), col("yhat").as("_v"))).localCheckpoint(true)
-      preds ::= scored
-    }
-    val out = preds.foldLeft(fitted)((acc, p) =>
-      acc.unionByName(p.select(fitted.columns.map(col).toSeq: _*)))
-    out.drop("_t", "_step", "_fraw", "_f")
+    val scorers = seriesIds.map(sid => sid -> RowScorer.ols(fits(sid))).toMap
+    val cols = seriesIds.flatMap(fits(_).feats).distinct.filter(parseXlag(_).isEmpty)
+    val plans: Map[String, Array[Recursive.Feature]] = seriesIds.map { sid =>
+      sid -> fits(sid).feats.map { c =>
+        parseXlag(c).map { case (src, l) => Right((Some(src), l)): Recursive.Feature }
+          .getOrElse(Left(cols.indexOf(c)))
+      }.toArray
+    }.toMap
+    Recursive.walk(Recursive.positioned(frame), Recursive.horizon, Int.MaxValue, lit(""),
+      maxLag, cols, plans, (sid, feats) => scorers(sid).score(feats),
+      _.withColumn("yhat", fittedExpr))
   }
 }

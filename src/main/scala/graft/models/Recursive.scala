@@ -3,58 +3,56 @@ package graft.models
 import graft.core.SeriesFrame._
 import graft.functions.FeatureOps
 import org.apache.spark.ml.Transformer
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 
-/** Recursive multi-step ("dynamic") prediction: horizon step i's AR features
-  * are filled from the model's own predictions for steps < i
-  * (/root/reference/src/scalecast/models.py:109-149).
+/** Recursive ("dynamic") prediction over a slice of each series: a slice
+  * row's AR features are filled from the model's own predictions for the
+  * earlier slice positions (/root/reference/src/scalecast/models.py:109-149
+  * per series, 368-407 across an MV coupled set). The slice is the horizon
+  * (`is_future`, never peeked) or the test rows, where position s re-seeds
+  * from the ACTUAL when s % k == 0 (`dynamic_testing = k`: the reference's
+  * `series.append(peeks[i])` only when `(i+1) % k == 0`). A peek whose
+  * actual is null keeps the prediction. Rows outside the slice score
+  * vectorized (their AR cells hold actuals).
   *
-  * Two physical strategies, chosen by what the fitted model supports:
+  * One recursion, two physical strategies, chosen from the model:
   *
-  *  - **Scorer path** (default for every registry pipeline): when the model
-  *    is row-scorable ([[RowScorer.unwrap]]), the whole recursion runs as ONE
-  *    `mapGroups` pass — each series' horizon walks sequentially inside an
-  *    executor task with state bounded at (maxLag + h) ledger entries, so a
-  *    million series parallelize across the cluster with a single shuffle
-  *    keyed by series_id and zero per-step job barriers.
-  *  - **Ledger path** (generic fallback, needs only `Transformer.transform`):
-  *    each horizon step is ONE whole-frame operation — fill the AR columns of
-  *    every series' step-i row by joining against the accumulated
-  *    (series, t, value) ledger, then `model.transform` all of them at once.
-  *    h steps → h small jobs total, independent of the number of series.
-  *
-  * (The reference's step loop is per series, models.py:109-149; the scorer
-  * path is that exact walk batched series-wise, the ledger path is the same
-  * recursion batched step-wise.)
+  *  - **Walk** (the model is row-scorable, [[RowScorer.unwrap]]): ONE
+  *    `flatMapGroups` pass. Each group (a series, or the whole coupled MV
+  *    set) walks its slice inside an executor task with a (series, t)
+  *    ledger holding the maxLag actuals before the slice plus the slice
+  *    itself, so a million series parallelize with a single shuffle and no
+  *    per-step job barrier — on Spark the driver round trips, not the
+  *    arithmetic, dominate (MLlib*, ICDE 2019).
+  *  - **Wavefront** (the fallback for any `Transformer`: scaler pipelines,
+  *    knn, custom stages): slice position s depends on s − l for each AR lag
+  *    l unless a peek cuts it. Dependency LEVELS are series-independent
+  *    driver int math; iteration v fills every level-v row of EVERY series
+  *    from the ledger (the same maxLag actuals + peeks, then the predictions
+  *    so far) and scores them in one `model.transform`. AR(1) runs one
+  *    iteration per step; lag sets without 1, and peeks, need fewer.
   */
 object Recursive {
 
-  import org.apache.spark.sql.{Encoders, Row}
-  import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+  /** A feature of a target's plan: `Left(i)` is cell i of the row's feature
+    * array; `Right((source, lag))` is the ledger value at (source, t − lag),
+    * source None being the row's own series. */
+  private[graft] type Feature = Either[Int, (Option[String], Int)]
 
-  private def arLagsOf(frame: DataFrame): Seq[Int] =
-    FeatureOps.arCols(frame).map(c => c.stripPrefix(FeatureOps.ArPrefix).toInt)
+  private[graft] def horizon: Column = col(IsFuture)
+  private[graft] def testSlice: Column = col("is_test") && !col(IsFuture)
 
-  /** (feature-array index → AR lag) for the scorer's feature order. */
-  private def arIndex(sc: RowScorer): Seq[(Int, Int)] =
-    sc.featureCols.zipWithIndex.collect {
-      case (c, i) if c.startsWith(FeatureOps.ArPrefix) &&
-        c.stripPrefix(FeatureOps.ArPrefix).forall(_.isDigit) =>
-        (i, c.stripPrefix(FeatureOps.ArPrefix).toInt)
-    }
-
-  private def featsOf(r: Row, at: Int, n: Int): Array[Double] = {
-    val s = r.getSeq[Any](at)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val v = s(i)
-      out(i) = if (v == null) Double.NaN else v.asInstanceOf[Double]
-      i += 1
-    }
-    out
+  private def arLag(c: String): Option[Int] = {
+    val l = c.stripPrefix(FeatureOps.ArPrefix)
+    if (c.startsWith(FeatureOps.ArPrefix) && l.nonEmpty && l.forall(_.isDigit)) Some(l.toInt)
+    else None
   }
+
+  /** `frame` with `_t`, each row's 1-based position in its series. */
+  private[graft] def positioned(frame: DataFrame): DataFrame =
+    frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
 
   /** Fitted values + dynamic horizon forecast.
     *
@@ -65,256 +63,143 @@ object Recursive {
     *         hold actuals), recursive for horizon rows
     */
   def dynamicForecast(frame: DataFrame, model: Transformer): DataFrame =
-    RowScorer.unwrap(model) match {
-      case Some(sc) => dynamicForecastScorer(frame, model, sc)
-      case None     => dynamicForecastLedger(frame, model)
-    }
+    forecast(frame, model, horizon, Int.MaxValue, RowScorer.unwrap(model))
 
-  /** Scorer path: one shuffle keyed by series_id; per series the horizon
-    * walks sequentially with a (maxLag + h)-entry ledger — the reference's
-    * own per-series walk (models.py:129-149), executed on the executors. */
-  private[graft] def dynamicForecastScorer(frame: DataFrame, model: Transformer,
-                                           sc: RowScorer): DataFrame = {
-    val arLags = arLagsOf(frame)
-    val outCols = (frame.columns :+ "yhat").toSeq.map(col)
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    if (arLags.isEmpty) // no recursion: everything scores vectorized
-      return model.transform(withT).select(outCols: _*)
-    val obs = withT.filter(!col(IsFuture))
-    val fitted = model.transform(obs)
-    val fut = withT.filter(col(IsFuture))
-    val maxLag = arLags.max
-    // seed: only the trailing maxLag actuals per series can be referenced
-    val lastT = obs.groupBy(SeriesId).agg(max("_t").as("_maxT"))
-    val seed = obs.join(lastT, Seq(SeriesId))
-      .filter(col("_t") > col("_maxT") - maxLag)
-      .select(col(SeriesId), col("_t"), lit(false).as("_hz"),
-        col(Y).as("_v"), lit(null).cast("array<double>").as("_feats"))
-    val futIn = fut.select(col(SeriesId), col("_t"), lit(true).as("_hz"),
-      lit(null).cast("double").as("_v"),
-      array(sc.featureCols.map(c => col(c).cast("double")): _*).as("_feats"))
-    val arIdx = arIndex(sc)
-    val nFeat = sc.featureCols.size
-    val outSchema = StructType(Seq(StructField(SeriesId, withT.schema(SeriesId).dataType),
-      StructField("_t", IntegerType), StructField("yhat", DoubleType)))
-    val scores = seed.unionByName(futIn)
-      .groupByKey(_.getString(0))(Encoders.STRING)
-      .flatMapGroups { (sid: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        val ledger = scala.collection.mutable.HashMap.empty[Int, Double]
-        rows.foreach(r => if (!r.getBoolean(2) && !r.isNullAt(3))
-          ledger(r.getInt(1)) = r.getDouble(3))
-        rows.filter(_.getBoolean(2)).sortBy(_.getInt(1)).iterator.map { r =>
-          val t = r.getInt(1)
-          val feats = featsOf(r, 4, nFeat)
-          arIdx.foreach { case (i, l) => feats(i) = ledger.getOrElse(t - l, Double.NaN) }
-          val yhat = sc.score(feats)
-          ledger(t) = yhat
-          Row(sid, t, yhat)
-        }
-      }(Encoders.row(outSchema))
-    val futScored = fut.join(scores, Seq(SeriesId, "_t"), "left")
-    fitted.select(outCols: _*).unionByName(futScored.select(outCols: _*))
-  }
-
-  /** Ledger path — the generic fallback for any `Transformer`. */
-  private[graft] def dynamicForecastLedger(frame: DataFrame, model: Transformer): DataFrame = {
-    val arLags = arLagsOf(frame)
-    // localCheckpoint after each step truncates lineage — without it the
-    // h-step loop compounds the plan h-fold (heap blow-up at plan compile).
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val obs = withT.filter(!col(IsFuture))
-    val fitted = model.transform(obs)
-
-    val fut = withT.filter(col(IsFuture))
-      .withColumn("_step", row_number().over(w)).localCheckpoint(true)
-    val maxStep = {
-      val r = fut.agg(max("_step")).first()
-      if (r.isNullAt(0)) 0 else r.getInt(0)
-    }
-
-    // ledger of known values: actuals, then predictions as steps complete.
-    // Only the last (maxLag + h) actuals per series can ever be referenced,
-    // so trim the ledger up front — keeps the per-step state bounded at
-    // series × (lags + h) rows no matter how long the history is.
-    // Per step the ledger collapses to ONE tiny map column per series
-    // (t → value), so filling ALL k AR lags is a single join + k map lookups
-    // instead of k joins — one job per horizon step total. Ledger pieces are
-    // each checkpointed, so the running union stays a shallow plan without
-    // re-checkpointing.
-    val maxLag = if (arLags.isEmpty) 0 else arLags.max
-    val keep = maxLag + maxStep
-    val lastT = obs.groupBy(SeriesId).agg(max("_t").as("_maxT"))
-    var knownParts = List(obs.join(lastT, Seq(SeriesId))
-      .filter(col("_t") > col("_maxT") - keep)
-      .select(col(SeriesId), col("_t"), col(Y).as("_v"))
-      .localCheckpoint(true))
-    var preds = List.empty[DataFrame]
-    for (i <- 1 to maxStep) {
-      val ledgerMap = knownParts.reduce(_ unionByName _)
-        .groupBy(SeriesId)
-        .agg(map_from_entries(collect_list(struct(col("_t"), col("_v")))).as("_lm"))
-      var rows = fut.filter(col("_step") === i).join(ledgerMap, Seq(SeriesId), "left")
-      for (k <- arLags)
-        rows = rows.drop(s"${FeatureOps.ArPrefix}$k")
-          .withColumn(s"${FeatureOps.ArPrefix}$k", element_at(col("_lm"), col("_t") - k))
-      val scored = model.transform(rows.drop("_lm")).localCheckpoint(true)
-      knownParts ::= scored.select(col(SeriesId), col("_t"), col("yhat").as("_v"))
-      preds ::= scored
-    }
-    val out = preds.foldLeft(fitted)((acc, p) =>
-      acc.unionByName(p.select(fitted.columns.map(col).toSeq: _*)))
-    out.drop("_t", "_step", "_fraw", "_f")
-  }
-
-  /** Test-set prediction with peeking cadence `dynamic_testing = k`
-    * (/root/reference/src/scalecast/models.py:109-149): the reference walks
-    * the test slice sequentially, appending each PREDICTION to its value
-    * ledger except at peek positions s where s % k == 0, which re-seed with
-    * the ACTUAL (`series.append(peeks[i]) only when (i+1) % k == 0`). So an
-    * AR cell referencing an earlier test position reads the prediction made
-    * there unless that position was a peek. `k = 1` peeks everywhere (fully
-    * vectorized one-step); `k ≥ testLength` never peeks (the all-dynamic
-    * recursion).
-    *
-    * Spark-first shape: wavefront scheduling over the exact dependency DAG.
-    * Position s depends on position s−l for each AR lag l unless the
-    * dependency is cut (s−l precedes the test slice → train actual, or
-    * s−l is a peek). Dependency LEVELS are series-independent driver int
-    * math (an O(testLength·lags) array); iteration v scores every position
-    * of level v of EVERY series/chunk in one whole-frame op. For AR(1) this
-    * degenerates to exactly k iterations (the chunk-lockstep shape); for
-    * deeper lags it runs just as many iterations as the reference's data
-    * dependencies force — never one per test row when peeks cut the chains.
-    */
+  /** Test-set prediction with peeking cadence `dynamic_testing = k`: `k = 1`
+    * peeks everywhere (one-step-ahead), `k ≥ testLength` never peeks. */
   def dynamicTestForecast(frame: DataFrame, model: Transformer, k: Int): DataFrame = {
     require(k >= 1, s"peek cadence must be >= 1, got $k")
-    RowScorer.unwrap(model) match {
-      case Some(sc) => dynamicTestForecastScorer(frame, model, k, sc)
-      case None     => dynamicTestForecastLedger(frame, model, k)
+    forecast(frame, model, testSlice, k, RowScorer.unwrap(model))
+  }
+
+  /** The recursion over `slice` at peek cadence `k`: the walk when `scorer`
+    * is given, the wavefront otherwise. */
+  private[graft] def forecast(frame: DataFrame, model: Transformer, slice: Column, k: Int,
+                              scorer: Option[RowScorer]): DataFrame = {
+    val arLags = FeatureOps.arCols(frame).flatMap(arLag)
+    val withT = positioned(frame)
+    if (arLags.isEmpty) // no recursion: everything scores vectorized
+      return model.transform(withT).select(outCols(withT): _*)
+    scorer match {
+      case Some(sc) =>
+        val plan: Array[Feature] = sc.featureCols.zipWithIndex.map { case (c, i) =>
+          arLag(c).map(l => Right((None, l)): Feature).getOrElse(Left(i))
+        }.toArray
+        walk(withT, slice, k, col(SeriesId), arLags.max, sc.featureCols, _ => plan,
+          (_, feats) => sc.score(feats), model.transform(_))
+      case None => wavefront(withT, model, slice, k, arLags)
     }
   }
 
-  /** Scorer path for the peeking test walk: per series, ONE sequential pass
-    * over the test slice in an executor task — literally models.py's
-    * `series.append(pred)` / peek-reseed loop, state bounded at
-    * (maxLag + testLength) entries. */
-  private[graft] def dynamicTestForecastScorer(frame: DataFrame, model: Transformer,
-                                               k: Int, sc: RowScorer): DataFrame = {
-    val arLags = arLagsOf(frame)
-    val outCols = (frame.columns :+ "yhat").toSeq.map(col)
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val isTestRow = col("is_test") && !col(IsFuture)
-    if (arLags.isEmpty)
-      return model.transform(withT).select(outCols: _*)
-    val fittedRest = model.transform(withT.filter(!isTestRow))
-    val test = withT.filter(isTestRow)
-      .withColumn("_s", row_number().over(w))
-    val maxLag = arLags.max
-    // pre-test actuals: only the maxLag rows before each series' test slice
-    // can be referenced (test rows lag into history at most maxLag deep)
-    val firstTest = test.groupBy(SeriesId).agg(min("_t").as("_t0"))
-    val seed = withT.filter(!isTestRow && !col(IsFuture))
-      .join(firstTest, Seq(SeriesId))
-      .filter(col("_t") >= col("_t0") - maxLag && col("_t") < col("_t0"))
-      .select(col(SeriesId), col("_t"), lit(0).as("_s"),
-        col(Y).as("_v"), lit(null).cast("array<double>").as("_feats"))
-    val testIn = test.select(col(SeriesId), col("_t"), col("_s"),
-      col(Y).as("_v"),
-      array(sc.featureCols.map(c => col(c).cast("double")): _*).as("_feats"))
-    val arIdx = arIndex(sc)
-    val nFeat = sc.featureCols.size
-    val outSchema = StructType(Seq(StructField(SeriesId, withT.schema(SeriesId).dataType),
+  /** The actuals the slice reaches before it starts: per series, the last
+    * `maxLag` rows before the slice, as (series_id, _t, _v). */
+  private def seeds(withT: DataFrame, slice: Column, maxLag: Int): DataFrame = {
+    val before = withT.filter(!slice && !col(IsFuture))
+    val last = before.groupBy(SeriesId).agg(max("_t").as("_last"))
+    before.join(last, Seq(SeriesId)).filter(col("_t") > col("_last") - maxLag)
+      .select(col(SeriesId), col("_t"), col(Y).as("_v"))
+  }
+
+  private def outCols(withT: DataFrame): Seq[Column] =
+    (withT.columns.filterNot(_ == "_t") :+ "yhat").toSeq.map(col)
+
+  /** The walk: one `flatMapGroups` pass keyed by `key` (series_id, or a
+    * constant for a coupled set); each group scores its slice rows in
+    * (t, series) order, target `sid` reading its features through
+    * `plan(sid)` — row cells from `cols`, lags from the (series, t) ledger —
+    * and `score(sid, feats)`. A scored row enters the ledger as its
+    * prediction, or as its actual at a non-null peek (the series' s-th
+    * slice row, s % k == 0). Rows outside the slice are scored by `rest`.
+    * Returns `withT`'s columns less `_t`, plus `yhat`. */
+  private[graft] def walk(withT: DataFrame, slice: Column, k: Int, key: Column, maxLag: Int,
+                          cols: Seq[String], plan: String => Array[Feature],
+                          score: (String, Array[Double]) => Double,
+                          rest: DataFrame => DataFrame): DataFrame = {
+    val seed = seeds(withT, slice, maxLag)
+      .select(key.cast("string").as("_g"), col(SeriesId), col("_t"), lit(false).as("_in"),
+        col("_v"), lit(null).cast("array<double>").as("_feats"))
+    val rows = withT.filter(slice).select(key.cast("string").as("_g"), col(SeriesId), col("_t"),
+      lit(true).as("_in"), col(Y).as("_v"),
+      array(cols.map(c => col(c).cast("double")): _*).as("_feats"))
+    val outSchema = StructType(Seq(StructField(SeriesId, StringType),
       StructField("_t", IntegerType), StructField("yhat", DoubleType)))
-    val scores = seed.unionByName(testIn)
+    val scores = seed.unionByName(rows)
       .groupByKey(_.getString(0))(Encoders.STRING)
-      .flatMapGroups { (sid: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        // actuals ledger: pre-test history + peek positions (s % k == 0);
-        // actuals win over predictions at peeks (coalesce order of the
-        // ledger path: _am before _pm)
-        val actuals = scala.collection.mutable.HashMap.empty[Int, Double]
-        val preds = scala.collection.mutable.HashMap.empty[Int, Double]
-        rows.foreach { r =>
-          val s = r.getInt(2)
-          if ((s == 0 || s % k == 0) && !r.isNullAt(3)) actuals(r.getInt(1)) = r.getDouble(3)
-        }
-        rows.filter(_.getInt(2) > 0).sortBy(_.getInt(2)).iterator.map { r =>
-          val t = r.getInt(1)
-          val feats = featsOf(r, 4, nFeat)
-          arIdx.foreach { case (i, l) =>
-            feats(i) = actuals.getOrElse(t - l, preds.getOrElse(t - l, Double.NaN))
+      .flatMapGroups { (_: String, it: Iterator[Row]) =>
+        val (in, before) = it.toArray.partition(_.getBoolean(3))
+        val ledger = scala.collection.mutable.HashMap.empty[(String, Int), Double]
+        before.foreach(r => if (!r.isNullAt(4)) ledger((r.getString(1), r.getInt(2))) = r.getDouble(4))
+        val pos = scala.collection.mutable.HashMap.empty[String, Int]
+        in.sortBy(r => (r.getInt(2), r.getString(1))).iterator.map { r =>
+          val (sid, t) = (r.getString(1), r.getInt(2))
+          val s = pos.getOrElse(sid, 0) + 1
+          pos(sid) = s
+          val cells = r.getSeq[Any](5)
+          val feats = plan(sid).map {
+            case Left(i) => val v = cells(i); if (v == null) Double.NaN else v.asInstanceOf[Double]
+            case Right((src, l)) => ledger.getOrElse((src.getOrElse(sid), t - l), Double.NaN)
           }
-          val yhat = sc.score(feats)
-          preds(t) = yhat
+          val yhat = score(sid, feats)
+          ledger((sid, t)) = if (s % k == 0 && !r.isNullAt(4)) r.getDouble(4) else yhat
           Row(sid, t, yhat)
         }
       }(Encoders.row(outSchema))
-    val testScored = test.join(scores, Seq(SeriesId, "_t"), "left")
-    fittedRest.select(outCols: _*).unionByName(testScored.select(outCols: _*))
+    rest(withT.filter(!slice)).select(outCols(withT): _*)
+      .unionByName(withT.filter(slice).join(scores, Seq(SeriesId, "_t"), "left")
+        .select(outCols(withT): _*))
   }
 
-  /** Ledger/wavefront path — the generic fallback for any `Transformer`. */
-  private[graft] def dynamicTestForecastLedger(frame: DataFrame, model: Transformer,
-                                               k: Int): DataFrame = {
-    val arLags = arLagsOf(frame)
-    val withT = frame.withColumn("_t", row_number().over(w)).localCheckpoint(true)
-    val isTestRow = col("is_test") && !col(IsFuture)
-    val test0 = withT.filter(isTestRow)
-      .withColumn("_s", row_number().over(w))
-      .localCheckpoint(true)
-    val maxS = {
-      val r = test0.agg(max("_s")).first()
-      if (r.isNullAt(0)) 0 else r.getInt(0)
-    }
-    // dependency level of test position s (1-based): 1 + max level over
-    // uncut AR dependencies. Positions are aligned across series (the test
-    // slice is the last testLength rows of each), so ONE integer array
-    // covers every series — no per-series state.
+  /** Dependency level of slice positions 1..maxS (index 0 unused): 1 + the
+    * max level over the AR dependencies s − l inside the slice that no peek
+    * cuts. A peek position in `nullPeeks` (null actual in some series) cuts
+    * nothing — its prediction is read. */
+  private[graft] def levels(maxS: Int, arLags: Seq[Int], k: Int, nullPeeks: Set[Int]): Array[Int] = {
     val level = Array.ofDim[Int](maxS + 1)
     for (s <- 1 to maxS) {
-      val deps = arLags.filter(l => s - l >= 1 && (s - l) % k != 0).map(l => level(s - l))
-      level(s) = if (deps.isEmpty) 1 else deps.max + 1
+      val deps = arLags.filter(l => s - l >= 1 && ((s - l) % k != 0 || nullPeeks(s - l)))
+      level(s) = if (deps.isEmpty) 1 else deps.map(l => level(s - l)).max + 1
     }
-    val maxLevel = if (maxS == 0) 0 else (1 to maxS).map(level).max
-    val test =
-      if (maxS == 0) test0.withColumn("_lvl", lit(1))
-      else test0.withColumn("_lvl",
-        element_at(array((1 to maxS).map(s => lit(level(s))): _*), col("_s")))
-    // non-test rows score vectorized (train rows see actual AR cells)
-    val fittedRest = model.transform(withT.filter(!isTestRow))
-    // the ledger's actual values: everything before the test slice + the
-    // peek positions. Predictions everywhere else — actuals win at peeks.
-    val peekT = test0.filter(col("_s") % k === 0)
-      .select(col(SeriesId), col("_t"), col(Y).as("_v"))
-    val knownMap = withT.filter(!col(IsFuture) && !col("is_test"))
-      .select(col(SeriesId), col("_t"), col(Y).as("_v"))
-      .unionByName(peekT)
+    level
+  }
+
+  /** The wavefront: one `model.transform` per dependency level. */
+  private def wavefront(withT: DataFrame, model: Transformer, slice: Column, k: Int,
+                        arLags: Seq[Int]): DataFrame = {
+    val peek = col("_s") % k === 0
+    val sliced = withT.filter(slice).withColumn("_s", row_number().over(w)).localCheckpoint(true)
+    val level = {
+      val r = sliced.agg(max("_s"), collect_set(when(peek && col(Y).isNull, col("_s")))).first()
+      levels(if (r.isNullAt(0)) 0 else r.getInt(0), arLags, k, r.getSeq[Int](1).toSet)
+    }
+    val leveled = sliced.withColumn("_lvl",
+      element_at(array(level.toSeq.map(lit(_)): _*), col("_s") + 1))
+    // ledger actuals: the maxLag rows before the slice + the non-null peeks;
+    // they win over predictions
+    val known = seeds(withT, slice, arLags.max)
+      .unionByName(sliced.filter(peek && col(Y).isNotNull)
+        .select(col(SeriesId), col("_t"), col(Y).as("_v")))
       .groupBy(SeriesId)
       .agg(map_from_entries(collect_list(struct(col("_t"), col("_v")))).as("_am"))
       .localCheckpoint(true)
     var predParts = List.empty[DataFrame]
-    var preds = List.empty[DataFrame]
-    for (v <- 1 to maxLevel) {
-      var rows = test.filter(col("_lvl") === v).join(knownMap, Seq(SeriesId), "left")
-      if (predParts.nonEmpty) {
-        val predMap = predParts.reduce(_ unionByName _)
-          .groupBy(SeriesId)
-          .agg(map_from_entries(collect_list(struct(col("_t"), col("_vp")))).as("_pm"))
-        rows = rows.join(predMap, Seq(SeriesId), "left")
-      } else rows = rows.withColumn("_pm", lit(null).cast("map<int,double>"))
+    var scored = List.empty[DataFrame]
+    for (v <- 1 to level.max) {
+      var rows = leveled.filter(col("_lvl") === v).join(known, Seq(SeriesId), "left")
+      rows =
+        if (predParts.isEmpty) rows.withColumn("_pm", lit(null).cast("map<int,double>"))
+        else rows.join(predParts.reduce(_ unionByName _).groupBy(SeriesId)
+          .agg(map_from_entries(collect_list(struct(col("_t"), col("_vp")))).as("_pm")),
+          Seq(SeriesId), "left")
       for (l <- arLags) {
         val ar = s"${FeatureOps.ArPrefix}$l"
         rows = rows.drop(ar).withColumn(ar,
-          coalesce(element_at(col("_am"), col("_t") - l),
-            element_at(col("_pm"), col("_t") - l)))
+          coalesce(element_at(col("_am"), col("_t") - l), element_at(col("_pm"), col("_t") - l)))
       }
-      val scored = model.transform(rows.drop("_am", "_pm")).localCheckpoint(true)
-      predParts ::= scored.select(col(SeriesId), col("_t"), col("yhat").as("_vp"))
-      preds ::= scored
+      val out = model.transform(rows.drop("_am", "_pm")).localCheckpoint(true)
+      predParts ::= out.select(col(SeriesId), col("_t"), col("yhat").as("_vp"))
+      scored ::= out
     }
-    val out = preds.foldLeft(fittedRest)((acc, p) =>
-      acc.unionByName(p.select(fittedRest.columns.map(col).toSeq: _*)))
-    out.drop("_t", "_s", "_lvl", "_fraw", "_f")
+    scored.foldLeft(model.transform(withT.filter(!slice)).select(outCols(withT): _*))(
+      (acc, p) => acc.unionByName(p.select(outCols(withT): _*)))
   }
 }

@@ -15,12 +15,13 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
   *    predictor's public `predict(Vector)` — the SAME code `transform` runs
   *    per row, so results are identical.
   *
-  * This is what lets [[Recursive]] collapse the h-step dynamic recursion into
-  * ONE `mapGroups` pass per series (state bounded at lags + h rows) instead
-  * of h whole-frame jobs: the sequential dependence lives inside a partition,
-  * not across job barriers. Pipelines with scaler stages (or non-pipeline
-  * models like [[KnnRegressor]]) return None and take the generic
-  * whole-frame ledger path, which needs nothing but `transform`.
+  * This is what lets [[Recursive]] run the dynamic recursion as its walk:
+  * ONE `flatMapGroups` pass per series (state bounded at lags + h values)
+  * instead of one whole-frame job per dependency level: the sequential
+  * dependence lives inside a partition, not across job barriers. Pipelines
+  * with scaler stages, non-pipeline models like [[KnnRegressor]] and custom
+  * stages return None and take the wavefront, which needs nothing but
+  * `transform`.
   */
 final class RowScorer private (
     val featureCols: Seq[String],
@@ -34,15 +35,7 @@ final class RowScorer private (
 
 object RowScorer {
   def unwrap(model: Transformer): Option[RowScorer] = model match {
-    case om: OlsModel =>
-      val f = om.fitted
-      val ic = f.intercept
-      val b = f.beta
-      Some(new RowScorer(f.feats, xs => {
-        var s = ic; var i = 0
-        while (i < b.length) { s += b(i) * xs(i); i += 1 } // NaN feats propagate
-        s
-      }))
+    case om: OlsModel => Some(ols(om.fitted))
     case pm: PipelineModel => pm.stages match {
       case Array(va: VectorAssembler, p: PredictionModel[Vector @unchecked, _])
           if p.getFeaturesCol == va.getOutputCol =>
@@ -50,5 +43,16 @@ object RowScorer {
       case _ => None
     }
     case _ => None
+  }
+
+  /** intercept + Σ βᵢ·xᵢ in feature order; NaN features propagate. */
+  private[models] def ols(f: Ols.Fit): RowScorer = {
+    val ic = f.intercept
+    val b = f.beta
+    new RowScorer(f.feats, xs => {
+      var s = ic; var i = 0
+      while (i < b.length) { s += b(i) * xs(i); i += 1 }
+      s
+    })
   }
 }

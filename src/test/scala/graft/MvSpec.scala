@@ -37,6 +37,15 @@ class MvSpec extends SparkSpec {
     assert(mv.exportForecasts().count() > 0)
   }
 
+  test("optimizeOn names an unknown mode instead of failing on a null row value") {
+    val perSeries = spark.createDataFrame(Seq(("a", 1.0), ("b", 3.0))).toDF("series_id", "rmse")
+    assert(graft.eval.Evaluation.optimizeOn(perSeries, "rmse", "b") === 3.0)
+    val e = intercept[IllegalArgumentException](
+      graft.eval.Evaluation.optimizeOn(perSeries, "rmse", "meen"))
+    assert(e.getMessage.contains("'meen'") && e.getMessage.contains("mean, min, max, weighted"),
+      e.getMessage)
+  }
+
   test("MvForecaster.backtest refits per origin; iter 0 equals the single-origin holdout") {
     val mv = MvForecaster(mvFrame, Seq("a", "b")).setLags(1)
     val bt = mv.backtest(nIter = 2, h = 6, jumpBack = 3)
@@ -256,8 +265,8 @@ class MvSpec extends SparkSpec {
   test("MV dynamic forecast: b's model learns b_t = 0.7*a_(t-1) + 1 exactly") {
     val base = SeriesFrame.withMonthlyHorizon(mvFrame, 4)
     val withLags = MvForecast.addCrossSeriesLags(base, Seq("a", "b"), 1)
-    val models = MvForecast.fitPerSeries(withLags, Seq("a", "b"), 1)
-    val out = MvForecast.dynamicForecast(withLags, models, Seq("a", "b"), 1)
+    val fits = MvForecast.fitPerSeriesOls(withLags, Seq("a", "b"), 1)
+    val out = MvForecast.dynamicForecastOls(withLags, fits, Seq("a", "b"), 1)
     val bFc = col1(out.filter(col("series_id") === "b" && col("is_future")), "yhat")
     val aFc = col1(out.filter(col("series_id") === "a" && col("is_future")), "yhat")
     assert(bFc.length === 4 && aFc.length === 4)

@@ -3,12 +3,13 @@ package graft
 import graft.core.SeriesFrame
 import graft.core.SeriesFrame._
 import graft.functions.FeatureOps
-import graft.models.{MllibTsEstimator, MvForecast, Recursive, RowScorer}
+import graft.models.{MllibTsEstimator, Recursive, RowScorer}
+import org.apache.spark.ml.Transformer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The recursive forecaster has two physical strategies — the row-scorer
-  * mapGroups walk and the generic whole-frame ledger — that must be
+  * walk and the generic whole-frame wavefront — that must be
   * value-identical (they're the same recursion batched differently). */
 class RecursivePathsSpec extends SparkSpec {
 
@@ -23,6 +24,12 @@ class RecursivePathsSpec extends SparkSpec {
     va.foreach { case (k, x) => assert(math.abs(x - vb(k)) < 1e-9, s"$k: $x vs ${vb(k)}") }
   }
 
+  private def horizonBy(f: DataFrame, m: Transformer, sc: Option[RowScorer]): DataFrame =
+    Recursive.forecast(f, m, Recursive.horizon, Int.MaxValue, sc)
+
+  private def testBy(f: DataFrame, m: Transformer, k: Int, sc: Option[RowScorer]): DataFrame =
+    Recursive.forecast(f, m, Recursive.testSlice, k, sc)
+
   private def twoSeries(h: Int): DataFrame = {
     val a = obsSeries((1 to 30).map(t => 10.0 + 0.5 * t + 3 * math.sin(t / 2.0)), "a")
     val b = obsSeries((1 to 30).map(t => 50.0 - 0.3 * t + 2 * math.cos(t / 3.0)), "b")
@@ -35,8 +42,7 @@ class RecursivePathsSpec extends SparkSpec {
     val sc = RowScorer.unwrap(model)
     assert(sc.isDefined, "mlr pipeline must be row-scorable")
     assertSame(
-      Recursive.dynamicForecastScorer(withAr, model, sc.get),
-      Recursive.dynamicForecastLedger(withAr, model))
+      horizonBy(withAr, model, sc), horizonBy(withAr, model, None))
   }
 
   test("dynamicForecast: scorer path == ledger path (gbt tree model)") {
@@ -46,8 +52,7 @@ class RecursivePathsSpec extends SparkSpec {
     val sc = RowScorer.unwrap(model)
     assert(sc.isDefined, "gbt pipeline must be row-scorable")
     assertSame(
-      Recursive.dynamicForecastScorer(withAr, model, sc.get),
-      Recursive.dynamicForecastLedger(withAr, model))
+      horizonBy(withAr, model, sc), horizonBy(withAr, model, None))
   }
 
   test("dynamicTestForecast: scorer path == wavefront ledger path (AR(2), k=3)") {
@@ -57,8 +62,7 @@ class RecursivePathsSpec extends SparkSpec {
     val sc = RowScorer.unwrap(model)
     assert(sc.isDefined)
     assertSame(
-      Recursive.dynamicTestForecastScorer(flagged, model, 3, sc.get),
-      Recursive.dynamicTestForecastLedger(flagged, model, 3))
+      testBy(flagged, model, 3, sc), testBy(flagged, model, 3, None))
   }
 
   test("scaler pipelines are not row-scorable and fall back to the ledger") {
@@ -70,15 +74,50 @@ class RecursivePathsSpec extends SparkSpec {
     assert(out.filter(col(IsFuture) && col("yhat").isNotNull).count() === 8)
   }
 
-  test("MV dynamicForecast: coupled-set scorer path == step-wise ledger path") {
-    val sids = Seq("a", "b")
-    val frame0 = twoSeries(6)
-    val withXl = MvForecast.addCrossSeriesLags(frame0, sids, 2)
-    val models = MvForecast.fitPerSeries(withXl, sids, 2)
-    val scorers = sids.flatMap(s => RowScorer.unwrap(models(s)).map(s -> _)).toMap
-    assert(scorers.size === 2)
-    assertSame(
-      MvForecast.dynamicForecastScorer(withXl, models, sids, 2, scorers),
-      MvForecast.dynamicForecastLedger(withXl, models, sids, 2))
+  test("horizon walk == wavefront: AR lags {2, 3}, unequal horizons, levels < steps") {
+    val a = obsSeries((1 to 30).map(t => 10.0 + 0.5 * t + 3 * math.sin(t / 2.0)), "a")
+    val b = obsSeries((1 to 30).map(t => 50.0 - 0.3 * t + 2 * math.cos(t / 3.0)), "b")
+    val frame = SeriesFrame.withMonthlyHorizon(a, 5)
+      .unionByName(SeriesFrame.withMonthlyHorizon(b, 8))
+    val withAr = FeatureOps.addArTerms(frame, 3).drop("ar_1")
+    val model = MllibTsEstimator("mlr", Seq("ar_2", "ar_3")).fit(withAr)
+    val sc = RowScorer.unwrap(model)
+    assert(sc.isDefined)
+    // no lag 1: positions s and s + 1 never depend on each other, so 8
+    // steps take 4 levels
+    val level = Recursive.levels(8, Seq(2, 3), Int.MaxValue, Set.empty)
+    assert(level.toSeq === Seq(0, 1, 1, 2, 2, 3, 3, 4, 4))
+    val walked = horizonBy(withAr, model, sc)
+    assertSame(walked, horizonBy(withAr, model, None))
+    val fut = walked.filter(col(IsFuture) && col("yhat").isNotNull && !isnan(col("yhat")))
+    assert(fut.filter(col(SeriesId) === "a").count() === 5)
+    assert(fut.filter(col(SeriesId) === "b").count() === 8)
+  }
+
+  test("test walk == wavefront at k = 3 with a null actual at a peek: both read the prediction") {
+    val base = SeriesFrame.withTestFlag(FeatureOps.addArTerms(twoSeries(0), 2), 9)
+    val model = MllibTsEstimator("mlr", Seq("ar_1", "ar_2")).fit(base)
+    val sc = RowScorer.unwrap(model)
+    assert(sc.isDefined)
+    // series a's test slice is t = 22..30; position 3 (t = 24) is a peek
+    // whose actual is missing
+    val peekDs = base.filter(col(SeriesId) === "a").orderBy(Ds).collect()(23).getDate(1)
+    val flagged = base.withColumn(Y,
+      when(col(SeriesId) === "a" && col(Ds) === lit(peekDs), lit(null).cast("double"))
+        .otherwise(col(Y)))
+    val walked = testBy(flagged, model, 3, sc)
+    val waved = testBy(flagged, model, 3, None)
+    assertSame(walked, waved)
+    // every test row scores: position 4 reads position 3's prediction
+    for (out <- Seq(walked, waved))
+      assert(out.filter(col("is_test") && col("yhat").isNotNull && !isnan(col("yhat")))
+        .count() === 18)
+    val testA = walked.filter(col(SeriesId) === "a" && col("is_test")).orderBy(Ds)
+      .collect().map(_.getAs[Double]("yhat"))
+    val f = model.asInstanceOf[graft.models.OlsModel].fitted
+    val beta = f.feats.zip(f.beta).toMap
+    // position 4 reads position 3's prediction (lag 1) and position 2's (lag 2)
+    assert(math.abs(testA(3) -
+      (f.intercept + beta("ar_1") * testA(2) + beta("ar_2") * testA(1))) < 1e-9)
   }
 }

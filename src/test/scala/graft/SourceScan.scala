@@ -22,11 +22,14 @@ object SourceScan {
     line
   }
 
-  /** Source text with block comments (scaladoc included) and line
-    * comments removed. */
-  def code(p: Path): String =
-    "(?s)/\\*.*?\\*/".r.replaceAllIn(Files.readString(p), "")
+  /** `text` with block comments (scaladoc included) and line comments
+    * removed. */
+  def stripComments(text: String): String =
+    "(?s)/\\*.*?\\*/".r.replaceAllIn(text, "")
       .linesIterator.map(stripLineComment).mkString("\n")
+
+  /** Source text of `p` with its comments removed. */
+  def code(p: Path): String = stripComments(Files.readString(p))
 
   /** The `.scala` files under `dir` (relative to the repository root). */
   def sources(dir: String): Seq[Path] = {

@@ -65,7 +65,7 @@ OPS = [
      ["sbt"], ["svr_by_series", "mlp_by_series"]),
     ("2.5 estimators", "rnn / lstm (BPTT vs finite differences)", "models/RnnNet.scala",
      ["sbt"], ["rnn_by_series"]),
-    ("2.5 estimators", "recursive dynamic predict + dynamic_testing=k + SQL surface",
+    ("2.5 estimators", "recursive dynamic predict (one walk, one wavefront) + dynamic_testing=k + SQL surface",
      "models/Recursive.scala functions/ForecastGenerator.scala",
      ["ts_ar3_dynamic", "ts_mlr_dynk4", "ts_seg_dynamic", "ts_sql_forecast"], []),
     ("2.5 estimators", "arima (HR ARMA/SARMA) + auto_arima",
@@ -80,7 +80,7 @@ OPS = [
     ("2.5 estimators", "tbats_like + ARMA error correction", "models/TbatsLike.scala",
      ["ts_tbats_like", "ts_tbats_arma"], []),
     ("2.5 estimators", "vecm + Johansen", "models/Vecm.scala", ["mv_vecm", "mv_coint_rank"], []),
-    ("2.5 estimators", "SKLearnMV + BlockedVar + ANN screen",
+    ("2.5 estimators", "SKLearnMV: coupled cross-lag OLS, or BlockedVar + ANN screen",
      "models/MvForecast.scala models/BlockedVar.scala",
      ["mv_xlags", "mv_dynamic", "mv_blocked_var", "mv_blocked_dynamic", "mv_screen_approx",
       "mv_star_fit"], ["blockedvar_screen_fit"]),

@@ -2,7 +2,7 @@ package graft.eval
 
 import graft.core.SeriesFrame._
 import graft.functions.FeatureOps
-import graft.models.{Baselines, MllibTsEstimator, Recursive}
+import graft.models.{Baselines, Recursive}
 import graft.operators.{FittedTransform, Transforms, TransformStack}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -160,20 +160,14 @@ object AutoSelect {
   /** `auto_arima`-style order search (/root/reference/src/scalecast/
     * auxmodels.py:6-45) restricted to the AR(p) family: pick p in
     * 1..maxP minimizing AIC = n·ln(SSE/n) + 2(p+1) of the OLS fit on lag
-    * features. Each candidate is one distributed fit. */
+    * features ([[graft.models.Ols.aic]]). Each candidate is one
+    * distributed fit over the one cached lag frame, released on return. */
   def autoAr(frame: DataFrame, maxP: Int = 8): (Int, Double) = {
     val withAr = FeatureOps.addArTerms(frame.filter(!col(IsFuture)), maxP).cache()
-    val scored = (1 to maxP).map { p =>
-      val feats = (1 to p).map(i => s"ar_$i")
-      val model = MllibTsEstimator("mlr", feats).fit(withAr)
-      val scoredDf = model.transform(withAr)
-        .filter(!isnan(col("yhat")) && col("yhat").isNotNull)
-      val row = scoredDf.agg(
-        sum(pow(col(Y) - col("yhat"), 2)).as("sse"), count(lit(1)).as("n")).first()
-      val sse = row.getDouble(0); val n = row.getLong(1).toDouble
-      (p, n * math.log(sse / n) + 2.0 * (p + 1))
-    }
-    scored.minBy(s => nanSafe(s._2))
+    try {
+      val scored = (1 to maxP).map(p => (p, graft.models.Ols.aic(withAr, (1 to p).map(i => s"ar_$i"))))
+      scored.minBy(s => nanSafe(s._2))
+    } finally withAr.unpersist()
   }
 
   /** Full `auto_arima` order search (/root/reference/src/scalecast/
@@ -395,20 +389,11 @@ object AutoSelect {
     val grid = for (p <- 1 to maxP; sid <- seriesIds) yield (p, sid)
     val cells = Evaluation.fanOut(grid, parallelism = 4) { case (p, sid) =>
       val feats = for (s <- seriesIds; k <- 1 to p) yield MvForecast.xlagCol(s, k)
-      // y must be non-null too: on a spine with missing dates the sse sum
-      // skips null-y rows, so counting them would inflate the AIC's n
-      val complete = (col(Y).isNotNull +: feats.map(c => col(c).isNotNull)).reduce(_ && _)
       // singular design at this order (e.g. exactly collinear cross-lags)
       // → NaN → the candidate order is skipped, like the reference's
       // failed-combo policy
-      scala.util.Try {
-        val eq = withLagsAll.filter(col(SeriesId) === sid)
-        val fit = graft.models.Ols.fit(eq, feats)
-        val r = eq.filter(complete)
-          .agg(sum(pow(col(Y) - fit.predictExpr, 2)), count(lit(1))).first()
-        val sse = r.getDouble(0); val n = r.getLong(1).toDouble
-        n * math.log(sse / n) + 2.0 * (feats.size + 1)
-      }.getOrElse(Double.NaN)
+      scala.util.Try(graft.models.Ols.aic(withLagsAll.filter(col(SeriesId) === sid), feats))
+        .getOrElse(Double.NaN)
     }
     (1 to maxP).map { p =>
       (p, grid.zip(cells).collect { case ((`p`, _), aic) => aic }.sum)

@@ -206,11 +206,11 @@ object Evaluation {
     val sums = ranked.agg(aggs.head, aggs.tail: _*).first()
     // (fold, cell) → fit; a failed solve leaves the cell out of scoring
     val fits = (0 until k).flatMap { i =>
-      val m = Try(Ols.readMoments(sums, i * width, feats.size))
-      lazy val ols = m.map(_.ols(feats))
+      val m = Ols.Moments.read(sums, i * width, feats.size + 2)
+      lazy val ols = Try(m.ols(feats))
       grid.indices.flatMap { c =>
         val fit = if (algo == "mlr") ols
-                  else m.map(_.ridge(feats, grid(c).getOrElse("alpha", 1.0)))
+                  else Try(m.ridge(feats, grid(c).getOrElse("alpha", 1.0)))
         fit.toOption.map(f => (i, c, f.intercept, f.beta))
       }
     }

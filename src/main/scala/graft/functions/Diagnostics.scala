@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.core.Joins.maybeBroadcast
 import graft.core.SeriesFrame._
+import graft.models.Ols
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,50 +96,24 @@ object Diagnostics {
     val complete = cols.foldLeft(withLags)((f, c) => f.filter(col(c).isNotNull))
     val k = p + 2
     val x = Seq(lit(1.0), col("_ylag")) ++ (1 to p).map(i => col(s"_dy$i"))
-    val aggs =
-      (for (i <- 0 until k; j <- 0 to i) yield sum(x(i) * x(j)).as(s"_sa_${i}_$j")) ++
-      (0 until k).map(i => sum(x(i) * col("_dy")).as(s"_sb_$i")) ++
-      Seq(sum(col("_dy") * col("_dy")).as("_syy"), count(lit(1)).as("_n"))
+    val aggs = count(lit(1)) +: Ols.gram(x :+ col("_dy"))
     val schema = StructType(Seq(
       StructField(SeriesId, StringType), StructField("adf_t", DoubleType)))
     complete.groupBy(SeriesId).agg(aggs.head, aggs.tail: _*)
       .map({ row =>
-        val xtx = Array.tabulate(k, k)((i, j) =>
-          row.getDouble(row.fieldIndex(s"_sa_${math.max(i, j)}_${math.min(i, j)}")))
-        val xty = Array.tabulate(k)(i => row.getDouble(row.fieldIndex(s"_sb_$i")))
-        val syy = row.getDouble(row.fieldIndex("_syy"))
-        val n = row.getLong(row.fieldIndex("_n"))
-        org.apache.spark.sql.Row(row.getString(row.fieldIndex(SeriesId)),
-          tStatFromMoments(xtx, xty, syy, n))
+        org.apache.spark.sql.Row(row.getString(0),
+          tStat(Ols.Moments.read(row, 2, k + 1), row.getLong(1)))
       })(Encoders.row(schema)).toDF()
   }
 
-  /** OLS t-stat of coefficient index 1 (the y_(t−1) term) from the
-    * normal-equation moments: solve X'X·β = X'y by Gaussian elimination
-    * (k ≤ p+2, also building the inverse for the standard error) and use the
-    * OLS identity RSS = y'y − β'X'y for the residual variance. */
-  private def tStatFromMoments(xtx: Array[Array[Double]], xty: Array[Double],
-                               syy: Double, n: Long): Double = {
-    val k = xty.length
-    val a = xtx.map(_.clone); val b = xty.clone
-    // gaussian elimination with partial pivoting, also building the inverse
-    val inv = Array.tabulate(k, k)((i, j) => if (i == j) 1.0 else 0.0)
-    for (c <- 0 until k) {
-      val piv = (c until k).maxBy(r => math.abs(a(r)(c)))
-      val t = a(c); a(c) = a(piv); a(piv) = t
-      val ti = inv(c); inv(c) = inv(piv); inv(piv) = ti
-      val tb = b(c); b(c) = b(piv); b(piv) = tb
-      val d = a(c)(c)
-      for (j <- 0 until k) { a(c)(j) /= d; inv(c)(j) /= d }
-      b(c) /= d
-      for (r <- 0 until k if r != c) {
-        val f = a(r)(c)
-        for (j <- 0 until k) { a(r)(j) -= f * a(c)(j); inv(r)(j) -= f * inv(c)(j) }
-        b(r) -= f * b(c)
-      }
-    }
-    val beta = b
-    val rss = syy - beta.zip(xty).map(p => p._1 * p._2).sum
+  /** OLS t-stat of coefficient index 1 (the y_(t−1) term) from the moments:
+    * β and (X'X)⁻¹₁₁ (the solve with e₁ on the right) from the kernel, and
+    * the OLS identity RSS = y'y − β'X'y for the residual variance. */
+  private def tStat(m: Ols.Moments, n: Long): Double = {
+    val k = m.d - 1
+    val beta = m.beta(0 until k)
+    val inv11 = m.solve(0 until k, Array.tabulate(k)(i => if (i == 1) 1.0 else 0.0))(1)
+    val rss = m(k, k) - beta.indices.map(i => beta(i) * m(k, i)).sum
     // a numerically perfect fit (e.g. a deterministic series the lags span
     // exactly) cancels rss to ~0 or slightly NEGATIVE in the moments form;
     // sqrt would yield NaN, which Spark orders GREATER than every number and
@@ -146,7 +121,7 @@ object Diagnostics {
     // with beta's sign — return that explicitly.
     if (rss <= 0) return if (beta(1) < 0) Double.NegativeInfinity else Double.PositiveInfinity
     val sigma2 = rss / (n - k)
-    val se = math.sqrt(sigma2 * inv(1)(1))
+    val se = math.sqrt(sigma2 * inv11)
     beta(1) / se
   }
 

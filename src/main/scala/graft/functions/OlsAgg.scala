@@ -13,20 +13,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Exact OLS fit as a native Catalyst aggregate — the SQL surface of the
   * engine's closed-form solver ([[graft.models.Ols]] /
   * [[graft.models.GroupedOls]]): `graft_ols_fit(y, array(x1, ..., xk))`
-  * accumulates the normal-equation moments (X'X upper triangle + X'y,
-  * intercept column implicit) and solves at eval time, returning the beta
-  * array with the intercept at index 1 (SQL 1-based via `element_at`).
-  * Pair with `graft_ols_predict(beta, array(x...))` for the scalar side.
+  * accumulates the normal-equation moments in [[graft.models.Ols]]'s
+  * format (intercept column implicit) and solves at eval time with its
+  * solver, returning the beta array with the intercept at index 1 (SQL
+  * 1-based via `element_at`). Pair with `graft_ols_predict(beta, array(x...))`
+  * for the scalar side.
   *
-  * Same scale shape as every moments fit here: the buffer is
+  * Same scale shape as every moments fit here: the serialized buffer is
   * (k+1)(k+2)/2 + (k+1) doubles regardless of group size, partial
   * aggregation applies, merge is elementwise addition — so
   * `GROUP BY series_id` fits a million series in one shuffle, the
   * [[graft.models.GroupedOls.fitBySeries]] plan from plain SQL. Rows with a
-  * null/NaN y, a null array, or any null element are skipped (the train
-  * slice semantics of [[graft.models.Ols.fit]]). A group with no usable
-  * rows (or a singular system) yields non-finite betas, surfacing as NaN
-  * predictions — the per-series skip policy.
+  * null y, a null array or any null element are skipped, as
+  * [[graft.models.Ols.trainSlice]] drops them; unlike that slice, a NaN y
+  * or a NaN element is skipped too (the slice keeps a NaN and the fit
+  * turns non-finite). A group with no usable rows (or a singular system)
+  * yields non-finite betas, surfacing as NaN predictions — the per-series
+  * skip policy.
   */
 case class OlsFit(
     y: Expression,
@@ -61,17 +64,18 @@ case class OlsFit(
         val d = arr.numElements()
         var i = 0
         var ok = true
-        val x = new Array[Double](d + 1)
-        x(0) = 1.0
+        val z = new Array[Double](d + 2)
+        z(0) = 1.0
+        z(d + 1) = yd
         while (ok && i < d) {
           if (arr.isNullAt(i)) ok = false
           else {
             val v = arr.getDouble(i)
-            if (v.isNaN) ok = false else x(i + 1) = v
+            if (v.isNaN) ok = false else z(i + 1) = v
           }
           i += 1
         }
-        if (ok) buf.add(x, yd)
+        if (ok) buf.add(z)
       }
     }
     buf
@@ -87,9 +91,10 @@ case class OlsFit(
 
   override def serialize(buf: OlsFit.Moments): Array[Byte] = {
     val k = buf.k
-    val bb = ByteBuffer.allocate(4 + (if (k < 0) 0 else (buf.a.length + buf.b.length) * 8))
+    val cells = if (k < 0) 0 else buf.tri.length - 1
+    val bb = ByteBuffer.allocate(4 + cells * 8)
     bb.putInt(k)
-    if (k >= 0) { buf.a.foreach(bb.putDouble); buf.b.foreach(bb.putDouble) }
+    (0 until cells).foreach(i => bb.putDouble(buf.tri(i)))
     bb.array()
   }
 
@@ -99,10 +104,7 @@ case class OlsFit(
     val k = bb.getInt
     if (k >= 0) {
       m.init(k)
-      var i = 0
-      while (i < m.a.length) { m.a(i) = bb.getDouble; i += 1 }
-      i = 0
-      while (i < m.b.length) { m.b(i) = bb.getDouble; i += 1 }
+      (0 until m.tri.length - 1).foreach(i => m.tri(i) = bb.getDouble)
     }
     m
   }
@@ -118,34 +120,25 @@ case class OlsFit(
 
 object OlsFit {
 
-  /** Normal-equation moments over (1, x₁..xₖ): upper triangle of X'X
-    * row-major in `a`, X'y in `b`. `k` = feature count excluding the
-    * intercept; −1 until the first row fixes the width. */
+  /** The moments triangle over (1, x₁..xₖ, y), [[graft.models.Ols]]'s
+    * format, in `tri`. `k` = feature count excluding the intercept; −1
+    * until the first row fixes the width. y'y, the last cell, is not part
+    * of the serialized state: the solve never reads it. */
   final class Moments extends Serializable {
     var k: Int = -1
-    var a: Array[Double] = null
-    var b: Array[Double] = null
+    var tri: Array[Double] = null
 
     def init(kk: Int): Unit = {
       k = kk
-      val n = k + 1
-      a = new Array[Double](n * (n + 1) / 2)
-      b = new Array[Double](n)
+      tri = new Array[Double](graft.models.Ols.gramWidth(k + 2))
     }
 
-    /** x includes the leading 1. */
-    def add(x: Array[Double], y: Double): Unit = {
-      if (k < 0) init(x.length - 1)
-      require(x.length - 1 == k,
-        s"graft_ols_fit: inconsistent feature array length ${x.length - 1} vs $k")
-      var idx = 0
-      var i = 0
-      while (i < x.length) {
-        var j = 0
-        while (j <= i) { a(idx) += x(i) * x(j); idx += 1; j += 1 }
-        b(i) += x(i) * y
-        i += 1
-      }
+    /** z = (1, x₁..xₖ, y). */
+    def add(z: Array[Double]): Unit = {
+      if (k < 0) init(z.length - 2)
+      require(z.length - 2 == k,
+        s"graft_ols_fit: inconsistent feature array length ${z.length - 2} vs $k")
+      graft.models.Ols.accumulate(tri, z)
     }
 
     def mergeFrom(o: Moments): Unit = {
@@ -153,22 +146,13 @@ object OlsFit {
         if (k < 0) init(o.k)
         require(k == o.k, s"graft_ols_fit: merging widths $k vs ${o.k}")
         var i = 0
-        while (i < a.length) { a(i) += o.a(i); i += 1 }
-        i = 0
-        while (i < b.length) { b(i) += o.b(i); i += 1 }
+        while (i < tri.length) { tri(i) += o.tri(i); i += 1 }
       }
     }
 
-    /** Solve Aβ = b (Gaussian elimination with partial pivoting — the
-      * [[graft.models.GroupedOls.solve]] kernel). Empty group → NaNs. */
-    def solve(): Array[Double] = {
-      if (k < 0) return Array(Double.NaN)
-      val n = k + 1
-      val full = Array.tabulate(n, n) { (i, j) =>
-        val (hi, lo) = (math.max(i, j), math.min(i, j))
-        a(hi * (hi + 1) / 2 + lo)
-      }
-      graft.models.GroupedOls.sqlSolve(full, b.clone)
-    }
+    /** β over (1, x₁..xₖ); non-finite for a singular or empty group. */
+    def solve(): Array[Double] =
+      if (k < 0) Array(Double.NaN)
+      else new graft.models.Ols.Moments(tri, k + 2).beta(0 to k)
   }
 }

@@ -45,16 +45,12 @@ object Arima {
     * materializing the MLlib stage-2 model — the closed-form scoring path
     * [[graft.eval.AutoSelect.autoArma]]'s grid fans out over: two moments
     * aggregations (stage-1 long AR via [[Ols]] inside [[prepareArma]],
-    * stage 2 here) + one sse aggregation, all identical normal-equation
-    * math to the full fit and to the oracle's Cholesky replay. */
+    * stage 2 in [[Ols.aic]]) + one sse aggregation, all identical
+    * normal-equation math to the full fit and to the oracle's Cholesky
+    * replay. */
   def armaAic(frame: DataFrame, p: Int, q: Int, longAr: Int = 0): Double = {
     val (prepared, feats) = prepareArma(frame, 1 to p, 1 to q, longAr)
-    val fit = Ols.fit(prepared, feats)
-    val complete = feats.map(c => col(c).isNotNull).reduce(_ && _)
-    val r = prepared.filter(!col(IsFuture) && complete)
-      .agg(sum(pow(col(Y) - fit.predictExpr, 2)), count(lit(1))).first()
-    val sse = r.getDouble(0); val n = r.getLong(1).toDouble
-    n * math.log(sse / n) + 2.0 * (p + q + 1)
+    Ols.aic(prepared, feats)
   }
 
   /** Hannan–Rissanen with explicit lag sets. */

@@ -44,20 +44,14 @@ object BlockedVar {
       .withColumn("lag", col("_p") + 1).drop("_p")
       .filter(col("xval").isNotNull)
 
-  /** Observed rows eligible for TRAINING decisions (screen + fit): horizon
-    * rows never, holdout rows only when the frame carries no `is_test` flag
-    * — the same leak bound [[MvForecast.fitPerSeriesOls]] applies. */
-  private def trainObs(frame: DataFrame): DataFrame = {
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    if (frame.columns.contains("is_test")) obs.filter(!col("is_test")) else obs
-  }
-
   /** Step 1+2: the per-target source block — (target, src, src_rank) with
     * rank 0 = the target itself, ranks 1..maxSources−1 the strongest
     * foreign sources by |lag-1 correlation| (ties broken by src id). */
   def screen(frame: DataFrame, maxLag: Int, maxSources: Int,
              minAbsCorr: Double = 0.0): DataFrame = {
-    val obs = trainObs(frame)
+    // screen and fit read the train slice only: holdout and horizon rows
+    // never decide an edge or a β
+    val obs = Ols.trainSlice(frame, Nil)
     val targets = obs.select(col(SeriesId).as("target"), col(Ds), col(Y))
     val pairs = targets.join(lagsLong(obs, 1), Seq(Ds.toString))
       .filter(col("target") =!= col("src"))
@@ -141,7 +135,7 @@ object BlockedVar {
     // point its MEMORY_AND_DISK blocks raced the profile window sorts for
     // the unified pool and OOM'd the screen; the frame is re-read four
     // times sequentially, a disk-friendly access pattern
-    val obs = trainObs(frame).localCheckpoint(false,
+    val obs = Ols.trainSlice(frame, Nil).localCheckpoint(false,
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val withT = obs.select(col(SeriesId), col(Y),
       row_number().over(w).as("_t"))
@@ -200,7 +194,7 @@ object BlockedVar {
     * touch an nSeries² pass). */
   def fitWithBlock(frame: DataFrame, block: DataFrame, maxLag: Int,
                    maxSources: Int): (DataFrame, DataFrame) = {
-    val obs = trainObs(frame)
+    val obs = Ols.trainSlice(frame, Nil)
     val k = maxSources * maxLag + 1
     val design = designRows(obs, block, maxLag, k)
     val nsrc = block.groupBy("target").agg(count(lit(1)).cast("int").as("_nsrc"))
@@ -223,12 +217,8 @@ object BlockedVar {
         Seq("target", Ds.toString))
     // unscreened slots are null on every row, so their sums are null — the
     // solve below never reads them (it indexes the screened sub-block only)
-    val aggs =
-      (for (i <- 0 until k; j <- 0 to i) yield
-        sum(col(s"x_$i") * col(s"x_$j")).as(s"sa_${i}_$j")) ++
-      (0 until k).map(i =>
-        sum(col(s"x_$i") * col("_yt")).as(s"sb_$i")) :+
-      max(col("_nsrc")).as("_nsrc")
+    val aggs = max(col("_nsrc")).as("_nsrc") +:
+      Ols.gram((0 until k).map(i => col(s"x_$i")) :+ col("_yt"))
     val stats = rows.groupBy("target").agg(aggs.head, aggs.tail: _*)
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
@@ -239,15 +229,11 @@ object BlockedVar {
       // contiguous by rank construction, intercept at k−1); scatter back
       // into a full-width β with zeros at the unscreened slots so every
       // consumer indexes by the SAME featIdx scheme
-      val kt = r.getInt(r.fieldIndex("_nsrc")) * maxLag + 1
-      val idxs = (0 until (kt - 1)) :+ (k - 1)
-      val a = Array.tabulate(kt, kt)((i, j) =>
-        r.getDouble(r.fieldIndex(s"sa_${math.max(idxs(i), idxs(j))}_${math.min(idxs(i), idxs(j))}")))
-      val b = Array.tabulate(kt)(i => r.getDouble(r.fieldIndex(s"sb_${idxs(i)}")))
-      val sub = GroupedOls.solve(a, b)
+      val idxs = (0 until r.getInt(1) * maxLag) :+ (k - 1)
+      val sub = Ols.Moments.read(r, 2, k + 1).beta(idxs)
       val full = Array.fill(k)(0.0)
       idxs.indices.foreach(i => full(idxs(i)) = sub(i))
-      Row(r.getString(r.fieldIndex("target")), full.toSeq)
+      Row(r.getString(0), full.toSeq)
     })(Encoders.row(outSchema)).toDF()
     (fits, block)
   }

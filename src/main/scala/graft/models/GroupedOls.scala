@@ -24,23 +24,12 @@ object GroupedOls {
   def fitBySeries(frame: DataFrame, feats: Seq[String]): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = feats.foldLeft(train0)((f, c) => f.filter(col(c).isNotNull))
-    val xs: Seq[Column] = lit(1.0) +: feats.map(c => col(c).cast("double"))
-    val k = xs.size
-    val aggs = (for (i <- 0 until k; j <- 0 to i) yield
-      sum(xs(i) * xs(j)).as(s"sa_${i}_$j")) ++
-      (0 until k).map(i => sum(xs(i) * col(Y).cast("double")).as(s"sb_$i"))
+    val aggs = Ols.momentCols(feats)
     val outSchema = StructType(Seq(StructField(SeriesId, StringType),
       StructField("beta", ArrayType(DoubleType, containsNull = false))))
-    train.groupBy(SeriesId).agg(aggs.head, aggs.tail: _*)
+    Ols.trainSlice(frame, feats).groupBy(SeriesId).agg(aggs.head, aggs.tail: _*)
       .map({ r =>
-        val a = Array.tabulate(k, k)((i, j) =>
-          r.getDouble(r.fieldIndex(s"sa_${math.max(i, j)}_${math.min(i, j)}")))
-        val b = Array.tabulate(k)(i => r.getDouble(r.fieldIndex(s"sb_$i")))
-        Row(r.getString(r.fieldIndex(SeriesId)), solve(a, b).toSeq)
+        Row(r.getString(0), Ols.Moments.read(r, 1, feats.size + 2).beta(0 to feats.size).toSeq)
       })(Encoders.row(outSchema)).toDF()
   }
 
@@ -74,10 +63,6 @@ object GroupedOls {
     graft.eval.Evaluation.metricsOverTest(scored, Seq("rmse"))
   }
 
-  /** [[solve]] for callers outside the models package — the SQL aggregate
-    * [[graft.functions.OlsFit]] shares the exact executor-side kernel. */
-  def sqlSolve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = solve(a, b)
-
   /** Score MANY candidate feature subsets per series in ONE full-frame
     * pass — the batched [[scoreFeaturesBySeries]] for searches whose
     * candidates all draw from one shared feature pool (auto_Xvar_select's
@@ -104,10 +89,11 @@ object GroupedOls {
     * step), so `sum(when(step=s, v))` IS that row's value). Everything is
     * a fixed-width `sum(when(...))` — whole-stage-codegen HashAggregate,
     * no collect_list object buffers, no second pass, no beta join, no
-    * mapGroups re-sort. The per-candidate sub-matrix [[solve]]s and the
-    * holdout RMSE (reproducing [[graft.eval.Evaluation.metricsOverTest]]'s
-    * filter: is_test ∧ yhat non-null ∧ non-NaN, summed in ds order) run in
-    * a plain `.map` over the one aggregated row per series. When the
+    * mapGroups re-sort. The per-candidate sub-matrix solves
+    * ([[Ols.Moments.beta]]) and the holdout RMSE (reproducing
+    * [[graft.eval.Evaluation.metricsOverTest]]'s filter: is_test ∧ yhat
+    * non-null ∧ non-NaN, summed in ds order) run in a plain `.map` over the
+    * one aggregated row per series. When the
     * caller's frame already carries a per-series window lineage (the
     * auto_Xvar feature build), the whole score is ONE shuffle: the window
     * exchange's hash(series) partitioning satisfies the aggregation, so no
@@ -159,11 +145,7 @@ object GroupedOls {
     // train moments per depth tier ℓ, truncated to the columns a depth-ℓ
     // candidate can reach
     val momAggs = lagCounts.flatMap { l =>
-      val kL = kOf(l)
-      val cond = !col("is_test") && depth >= l
-      (for (i <- 0 until kL; j <- 0 to i) yield
-        sum(when(cond, xs(i) * xs(j))).as(s"sa_${l}_${i}_$j")) ++
-        (0 until kL).map(i => sum(when(cond, xs(i) * yD)).as(s"sb_${l}_$i"))
+      Ols.gram(xs.take(kOf(l)) :+ yD, Some(!col("is_test") && depth >= l))
     }
     // holdout pivot: per step, the row's y, lag depth, and pool values
     val stepAggs = (1 to h).flatMap { s =>
@@ -175,41 +157,23 @@ object GroupedOls {
     val aggs = momAggs ++ stepAggs
     val agged = obs.groupBy(SeriesId).agg(aggs.head, aggs.tail: _*)
     // field offsets in the aggregated row (0 = series_id)
-    val momOff: Map[Int, Int] = {
-      var off = 1
-      lagCounts.map { l =>
-        val o = l -> off; off += kOf(l) * (kOf(l) + 1) / 2 + kOf(l); o
-      }.toMap
-    }
-    val stepBase = 1 + lagCounts.map(l => kOf(l) * (kOf(l) + 1) / 2 + kOf(l)).sum
+    val momW = lagCounts.map(l => Ols.gramWidth(kOf(l) + 1))
+    val momOff: Map[Int, Int] = lagCounts.zip(momW.scanLeft(1)(_ + _)).toMap
+    val stepBase = 1 + momW.sum
     val stepW = 2 + pool.size
     val outSchema = StructType(StructField(SeriesId, StringType) +:
       candidates.map { case (key, _) => StructField(s"r_$key", DoubleType) })
     agged.map { r =>
       val cells: Seq[Any] = candIdx.map { case (_, idx, lagCount) =>
-        val o = momOff(lagCount)
-        val kL = kOf(lagCount)
-        val beta = if (r.isNullAt(o)) Array(Double.NaN)
-        else {
-          val kk = idx.length
-          val a = Array.ofDim[Double](kk, kk)
-          val b = new Array[Double](kk)
-          for (i <- 0 until kk; j <- 0 until kk) {
-            val (hi, lo) = (math.max(idx(i), idx(j)), math.min(idx(i), idx(j)))
-            a(i)(j) = r.getDouble(o + hi * (hi + 1) / 2 + lo)
-            if (j == 0) b(i) = r.getDouble(o + kL * (kL + 1) / 2 + idx(i))
-          }
-          solve(a, b)
-        }
+        // a tier with no train rows decodes to NaN moments, so its β and
+        // every yhat are NaN and the score stays null, matching the
+        // per-candidate scorer
+        val beta = Ols.Moments.read(r, momOff(lagCount), kOf(lagCount) + 1).beta(idx.toSeq)
         var sse = 0.0; var n = 0L
         var s = 0
         while (s < h) {
           val base = stepBase + s * stepW
-          // beta is the length-1 NaN sentinel when the series has no train
-          // rows at this tier (every row holdout) — skip the step entirely;
-          // the score stays null, matching the per-candidate scorer
-          if (beta.length == idx.length &&
-              !r.isNullAt(base) && r.getDouble(base + 1).toInt >= lagCount) {
+          if (!r.isNullAt(base) && r.getDouble(base + 1).toInt >= lagCount) {
             var yhat = beta(0)
             var i = 1
             while (i < idx.length) {
@@ -223,26 +187,5 @@ object GroupedOls {
       }
       Row.fromSeq(r.getString(0) +: cells)
     }(Encoders.row(outSchema)).toDF()
-  }
-
-  /** Gaussian elimination with partial pivoting — the executor-side solver
-    * shared by every grouped closed-form fit (here and [[BlockedVar]]). */
-  private[models] def solve(a0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {
-    val k = b0.length
-    val a = a0.map(_.clone); val b = b0.clone
-    for (c <- 0 until k) {
-      val piv = (c until k).maxBy(r => math.abs(a(r)(c)))
-      val t = a(c); a(c) = a(piv); a(piv) = t
-      val tb = b(c); b(c) = b(piv); b(piv) = tb
-      val d = a(c)(c)
-      for (j <- 0 until k) a(c)(j) /= d
-      b(c) /= d
-      for (r <- 0 until k if r != c) {
-        val f = a(r)(c)
-        for (j <- 0 until k) a(r)(j) -= f * a(c)(j)
-        b(r) -= f * b(c)
-      }
-    }
-    b
   }
 }

@@ -60,10 +60,7 @@ object KnnRegressor {
   /** Fit = snapshot the observed, non-test, feature-complete rows (lazy
     * memorization — kNN has no parameters). */
   def fit(frame: DataFrame, features: Seq[String], k: Int = 5): KnnRegressor = {
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = features.foldLeft(train0)((f, c) => f.filter(col(c).isNotNull))
+    val train = Ols.trainSlice(frame, features)
     new KnnRegressor(train.select((features :+ Y).map(col): _*).localCheckpoint(true),
       features, k)
   }

@@ -69,7 +69,6 @@ object MvForecast {
     * driver solves. Same normal-equation math as the MLlib normal solver and
     * the per-equation Cholesky the oracle replays. */
   def fitPerSeriesOls(frame: DataFrame, seriesIds: Seq[String], maxLag: Int): Map[String, Ols.Fit] = {
-    import breeze.linalg.{DenseMatrix, DenseVector}
     // loud boundary, not a silent mis-scale: the shared design has
     // k = nSeries·maxLag + 1 columns, so the per-series moments row is k²
     // doubles and the coupled recursion is one sequential task — both stop
@@ -84,23 +83,10 @@ object MvForecast {
         "graft.models.BlockedVar (correlation-screened bounded per-equation " +
         "designs, fully distributed) for larger coupled sets.")
     val feats = for (sid <- seriesIds; k <- 1 to maxLag) yield xlagCol(sid, k)
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = feats.foldLeft(train0)((f, c) => f.filter(col(c).isNotNull))
-    val xs: Seq[org.apache.spark.sql.Column] = lit(1.0) +: feats.map(c => col(c).cast("double"))
-    val k = xs.size
-    val aggs = (for (i <- 0 until k; j <- 0 to i) yield sum(xs(i) * xs(j)).as(s"a_${i}_$j")) ++
-      (0 until k).map(i => sum(xs(i) * col(Y).cast("double")).as(s"b_$i"))
-    val rows = train.groupBy(SeriesId).agg(aggs.head, aggs.tail: _*).collect()
+    val aggs = Ols.momentCols(feats)
+    val rows = Ols.trainSlice(frame, feats).groupBy(SeriesId).agg(aggs.head, aggs.tail: _*).collect()
     rows.filter(r => seriesIds.contains(r.getString(0))).map { r =>
-      val a = DenseMatrix.zeros[Double](k, k)
-      val b = DenseVector.zeros[Double](k)
-      var idx = 1
-      for (i <- 0 until k; j <- 0 to i) { a(i, j) = r.getDouble(idx); a(j, i) = a(i, j); idx += 1 }
-      for (i <- 0 until k) { b(i) = r.getDouble(idx); idx += 1 }
-      val beta = a \ b
-      r.getString(0) -> Ols.Fit(beta(0), (1 until k).map(beta(_)).toArray, feats)
+      r.getString(0) -> Ols.Moments.read(r, 1, feats.size + 2).ols(feats)
     }.toMap
   }
 

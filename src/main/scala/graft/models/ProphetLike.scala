@@ -69,10 +69,7 @@ object ProphetLike {
   /** Training length for knot placement: the same observed, non-test slice
     * [[Ols.fit]] trains on. One cheap count job, only when changepoints are
     * requested. */
-  private def trainLength(frame: DataFrame): Long = {
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    (if (frame.columns.contains("is_test")) obs.filter(!col("is_test")) else obs).count()
-  }
+  private def trainLength(frame: DataFrame): Long = Ols.trainSlice(frame, Nil).count()
 
   /** Fit on observed (non-test) rows, score everywhere incl. the horizon.
     * The fit is [[Ols]]'s one-aggregation closed form (identical normal-

@@ -446,11 +446,8 @@ object RnnNet {
           maxIter: Int = 200, seed: Long = 42L): LocalRnn = {
     require(cell == "rnn" || cell == "lstm", s"unknown cell '$cell'")
     require(width >= 1, "rnn: width must be >= 1")
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = features.foldLeft(train0)((f, c0) =>
-      f.filter(col(c0).isNotNull && !isnan(col(c0))))
+    val train = features.foldLeft(Ols.trainSlice(frame, features))((f, c0) =>
+      f.filter(!isnan(col(c0))))
     val rows = train.orderBy(col(SeriesId), col(Ds))
       .select((Seq(col(SeriesId).cast("string")) ++ features.map(col) :+ col(Y)): _*)
       .collect()

@@ -219,11 +219,8 @@ object Svr {
   // ---------------------------------------------------------------- shared
 
   private[models] def trainRows(frame: DataFrame, features: Seq[String]): Array[Row] = {
-    val hasTest = frame.columns.contains("is_test")
-    val obs = frame.filter(!col(IsFuture) && col(Y).isNotNull)
-    val train0 = if (hasTest) obs.filter(!col("is_test")) else obs
-    val train = features.foldLeft(train0)((f, c0) =>
-      f.filter(col(c0).isNotNull && !isnan(col(c0))))
+    val train = features.foldLeft(Ols.trainSlice(frame, features))((f, c0) =>
+      f.filter(!isnan(col(c0))))
     // deterministic row order: solver sweep order must not depend on
     // partitioning
     train.orderBy(col(SeriesId), col(Ds))

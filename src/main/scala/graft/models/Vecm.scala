@@ -54,8 +54,10 @@ object Vecm {
     * Distribution contract: the multivariate cross-product moments over
     * [Δy_t | y_(t−1) | 1, Δy_(t−1..p)] come from ONE groupBy(ds) pivot-style
     * aggregate + ONE global aggregate — only the m×m moment matrix (m =
-    * 2k + kp + 1) reaches the driver; the partial-regression reduction
-    * (S00/S11/S01) and the k×k eigen step are Breeze driver math.
+    * 2k + kp + 1) reaches the driver. The partial-regression reduction
+    * (S00/S11/S01) solves sub-matrices of that one moments triangle with
+    * [[Ols]]; only the k×k eigen step (Cholesky whitening, `eigSym`) is
+    * Breeze driver math.
     *
     * @param detOrder −1 = no deterministic term, 0 = unrestricted constant
     *                 (statsmodels `det_order` convention; the reference's
@@ -67,7 +69,7 @@ object Vecm {
   def johansenTrace(frame: DataFrame, seriesIds: Seq[String],
                     diffLags: Int = 1,
                     detOrder: Int = -1): (Array[Double], Array[Double], Int) = {
-    import breeze.linalg.{DenseMatrix, DenseVector, inv}
+    import breeze.linalg.DenseMatrix
     val k = seriesIds.length
     val withD = frame.filter(!col(IsFuture))
       .withColumn("_dy", col(Y) - lag(col(Y), 1).over(w))
@@ -89,36 +91,39 @@ object Vecm {
     val complete = varCols.filterNot(_ == "one")
       .foldLeft(wide.withColumn("one", lit(1.0)))((f, c) => f.filter(col(c).isNotNull))
     val m = varCols.length
-    val momentAggs = (for (i <- 0 until m; j <- 0 to i)
-      yield sum(col(varCols(i)) * col(varCols(j))).as(s"_m_${i}_$j")) :+
-      count(lit(1)).as("_n")
-    val row = complete.agg(momentAggs.head, momentAggs.tail: _*).first()
-    val bigT = row.getLong(row.fieldIndex("_n")).toDouble
-    val mm = DenseMatrix.tabulate(m, m)((i, j) =>
-      row.getDouble(row.fieldIndex(s"_m_${math.max(i, j)}_${math.min(i, j)}")))
+    val aggs = count(lit(1)) +: Ols.gram(varCols.map(col))
+    val row = complete.agg(aggs.head, aggs.tail: _*).first()
+    val bigT = row.getLong(0).toDouble
+    val g = Ols.Moments.read(row, 1, m)
     val (di, li, zi) = (0 until k, k until 2 * k, 2 * k until m)
-    def sub(r: Range, c: Range) = mm(r, c).toDenseMatrix
-    val (s00, s11, s01) =
-      if (zCols.isEmpty) (sub(di, di), sub(li, li), sub(di, li))
-      else {
-        val zzInv = inv(sub(zi, zi))
-        (sub(di, di) - sub(di, zi) * zzInv * sub(zi, di),
-         sub(li, li) - sub(li, zi) * zzInv * sub(zi, li),
-         sub(di, li) - sub(di, zi) * zzInv * sub(zi, li))
-      }
+    // S_ab = M_ab − M_aZ·M_ZZ⁻¹·M_Zb: the partial regression on Z is the
+    // kernel's sub-matrix solve, one right-hand side per column of b
+    def partial(a: Range, b: Range): DenseMatrix[Double] = {
+      val coef = b.map(j => g.solve(zi, zi.map(g(_, j)).toArray))
+      DenseMatrix.tabulate(a.size, b.size)((r, c) =>
+        g(a(r), b(c)) - zi.indices.map(t => g(a(r), zi(t)) * coef(c)(t)).sum)
+    }
+    val (s00, s11, s01) = (partial(di, di), partial(li, li), partial(di, li))
+    // x with a·x = b, column by column through the kernel's solver
+    def solveCols(a: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = {
+      val rows = Array.tabulate(a.rows, a.cols)((i, j) => a(i, j))
+      val xs = (0 until b.cols).map(j => Ols.solve(rows, Array.tabulate(b.rows)(b(_, j))))
+      DenseMatrix.tabulate(b.rows, b.cols)((i, j) => xs(j)(i))
+    }
     // Generalized eigenproblem λ·S11·v = S10·S00⁻¹·S01·v, solved SYMMETRICALLY:
     // whiten with the Cholesky factor S11 = L·Lᵀ and take eigSym of
     // L⁻¹·M·L⁻ᵀ where M = S01ᵀ·S00⁻¹·S01 (symmetric PSD) — same spectrum as
-    // inv(S11)·M but guaranteed real eigenvalues (breeze `eig` on the
+    // S11⁻¹·M but guaranteed real eigenvalues (breeze `eig` on the
     // non-symmetric product can emit complex pairs on near-degenerate data
     // and silently distort the trace statistics).
     val mSym = {
-      val m0 = s01.t * inv(s00) * s01
+      val m0 = s01.t * solveCols(s00, s01)
       (m0 + m0.t) * 0.5 // symmetrize away 1e-16 asymmetry before eigSym
     }
     val lChol = breeze.linalg.cholesky((s11 + s11.t) * 0.5)
-    val lInv = inv(lChol)
-    val lambda = breeze.linalg.eigSym(lInv * mSym * lInv.t).eigenvalues.toArray
+    // L⁻¹·M·L⁻ᵀ = L⁻¹·(L⁻¹·M)ᵀ, M symmetric
+    val whitened = solveCols(lChol, solveCols(lChol, mSym).t)
+    val lambda = breeze.linalg.eigSym(whitened).eigenvalues.toArray
       .map(v => math.min(math.max(v, 0.0), 1.0 - 1e-12)).sorted.reverse
     val trace = Array.tabulate(k)(r =>
       -bigT * (r until k).map(i => math.log(1.0 - lambda(i))).sum)

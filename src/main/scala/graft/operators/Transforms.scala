@@ -199,11 +199,6 @@ object Transforms {
   def detrendLnT(df: DataFrame, trainEnd: Option[String] = None): DetrendBasis =
     detrendBasisT(df, basisOf("ln"), trainEnd, "ln")
 
-  /** Shared basis-function detrend: per-series OLS of y on basis(t). The
-    * normal-equation moments (k ≤ ~4) are ONE distributed aggregate, and the
-    * tiny k×k solve runs as a distributed `map` over the per-series stats
-    * rows (Breeze on the executors) — the params frame stays partitioned, so
-    * nothing per-series ever reaches the driver at any series count. */
   /** Named basis families, rebuildable from a spec string (persistence). */
   private[graft] def basisOf(spec: String): Seq[Column => Column] = spec match {
     case s if s.startsWith("poly:") =>
@@ -212,27 +207,24 @@ object Transforms {
     case other => throw new IllegalArgumentException(s"unknown basis spec $other")
   }
 
+  /** Shared basis-function detrend: per-series OLS of y on basis(t). The
+    * normal-equation moments (k ≤ ~4) are ONE distributed aggregate, and the
+    * tiny k×k solve ([[graft.models.Ols]]) runs as a distributed `map` over
+    * the per-series stats rows — the params frame stays partitioned, so
+    * nothing per-series ever reaches the driver at any series count. */
   private def detrendBasisT(df: DataFrame, basis: Seq[Column => Column],
                             trainEnd: Option[String], spec: String = ""): DetrendBasis = {
-    import breeze.linalg.{DenseMatrix, DenseVector}
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
     val k = basis.length
     val withT = df.withColumn("_t", row_number().over(w).cast("double"))
-    val b = basis.map(f => f(col("_t")))
-    val aggs = (for (i <- 0 until k; j <- 0 to i)
-      yield sum(b(i) * b(j)).as(s"_sa_${i}_$j")) ++
-      (0 until k).map(i => sum(b(i) * col(Y)).as(s"_sb_$i"))
+    val aggs = graft.models.Ols.gram(basis.map(f => f(col("_t"))) :+ col(Y))
     val stats = trainSlice(withT, trainEnd).groupBy(SeriesId)
       .agg(aggs.head, aggs.tail: _*)
     val schema = StructType(StructField(SeriesId, StringType) +:
       (0 until k).map(i => StructField(s"c_$i", DoubleType)))
     val params = stats.map({ r =>
-      val xtx = DenseMatrix.tabulate(k, k)((i, j) =>
-        r.getDouble(r.fieldIndex(s"_sa_${math.max(i, j)}_${math.min(i, j)}")))
-      val xty = DenseVector.tabulate(k)(i => r.getDouble(r.fieldIndex(s"_sb_$i")))
-      val beta = xtx \ xty
-      Row.fromSeq(r.getString(r.fieldIndex(SeriesId)) +: (0 until k).map(beta(_)))
+      Row.fromSeq(r.getString(0) +: graft.models.Ols.Moments.read(r, 1, k + 1).beta(0 until k).toSeq)
     })(Encoders.row(schema))
     DetrendBasis(basis, params.toDF(), k, spec)
   }

@@ -102,4 +102,27 @@ class OlsSpec extends SparkSpec {
       assert(fit.beta(2) == 0.0)
     }
   }
+
+  test("graft_ols_fit's serialized buffer layout is pinned") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val agg = graft.functions.OlsFit(BoundReference(0, DoubleType, nullable = true),
+      BoundReference(1, ArrayType(DoubleType), nullable = true))
+    val rows = Seq((5.0, Array(1.0, 2.0)), (7.0, Array(2.0, 1.0)), (4.0, Array(3.0, 5.0)))
+    val buf = rows.foldLeft(agg.createAggregationBuffer()) { case (b, (y, xs)) =>
+      agg.update(b, InternalRow(y, new GenericArrayData(xs.map(x => x: Any))))
+    }
+    // streaming state: int k, then X'X over (1, x1, x2) as a row-major
+    // lower triangle, then X'y — no y'y
+    val bb = java.nio.ByteBuffer.allocate(4 + 9 * 8)
+    bb.putInt(2)
+    Seq(3.0, 6.0, 14.0, 8.0, 19.0, 30.0, 16.0, 31.0, 37.0).foreach(bb.putDouble)
+    val bytes = agg.serialize(buf)
+    assert(bytes.toSeq === bb.array().toSeq)
+    // the round trip solves the same system
+    assert(agg.eval(agg.deserialize(bytes)).asInstanceOf[GenericArrayData].toDoubleArray().toSeq ===
+      agg.eval(buf).asInstanceOf[GenericArrayData].toDoubleArray().toSeq)
+  }
 }
